@@ -80,15 +80,16 @@ object Bench {
     // lower core count stops clobbering the 32-core record (VERDICT
     // r17 "Next round" #2). Best-effort — a read-only CWD must not
     // fail the bench itself.
+    val dir = java.nio.file.Paths.get("bench")
+    var target = dir // the path the failure message names
     try {
-      val dir = java.nio.file.Paths.get("bench")
       java.nio.file.Files.createDirectories(dir)
-      val out = if (full) "last_full.json" else "last.json"
-      java.nio.file.Files.writeString(dir.resolve(out), line + "\n")
-      val perCore = if (full) s"last_full_c$cpus.json" else s"last_c$cpus.json"
-      java.nio.file.Files.writeString(dir.resolve(perCore), line + "\n")
+      target = dir.resolve(if (full) "last_full.json" else "last.json")
+      java.nio.file.Files.writeString(target, line + "\n")
+      target = dir.resolve(if (full) s"last_full_c$cpus.json" else s"last_c$cpus.json")
+      java.nio.file.Files.writeString(target, line + "\n")
     } catch { case e: Throwable =>
-      System.err.println(s"[bench] could not write bench/last.json: ${e.getMessage}")
+      System.err.println(s"[bench] could not write $target: ${e.getMessage}")
     }
     println(line)
     spark.stop()

@@ -3,8 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 import graft.grid.Grid
-import graft.pipeline.{ChangeDetection, Classification}
-import graft.sources.Sink
+import graft.pipeline.{ChangeDetection, Classification, Landed}
 import graft.types.{ArdRow, AuxRow}
 
 /** The user-facing CLI — the reference's entire entry surface is these
@@ -122,10 +121,11 @@ object Cli {
               tile.uly.toInt, s"rf-$msday-$meday",
               java.time.Instant.now().toString, out)
             val preds = Classification.classifyTile(model, auxDs, segs, x, y)
-            Sink.write(preds, s"$out/prediction",
+            // This run's landed rows, as changedetection reports: the
+            // prediction table may also hold other tiles' chips.
+            Map("predictions" -> Landed.write(preds, s"$out/prediction",
               Seq("chipx", "chipy", "pixelx", "pixely", "sday", "eday"),
-              Seq("chipx", "chipy"))
-            Map("predictions" -> spark.read.parquet(s"$out/prediction").count())
+              Seq("chipx", "chipy")))
         }
     }
   }

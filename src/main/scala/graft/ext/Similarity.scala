@@ -2664,8 +2664,9 @@ object Similarity {
     val rev = knnTopK(
       nbr.select(col("w").as("v"), col("v").as("w"), col("d")), k)
     // Deliberately a MULTISET union (no distinct): a (u, p) present
-    // both forward and reversed duplicates a pair the scoring stage's
-    // own distinct removes anyway, the per-node bound is ≤ 2k
+    // both forward and reversed duplicates a pair that the set-semantics
+    // [[knnTopK]] heap absorbs downstream (knnScore has no distinct of
+    // its own), the per-node bound is ≤ 2k
     // adjacency rows and ≤ (2k)² candidate pairs EITHER way, and the
     // dedup shuffle it saves is one of the five stages on the
     // restricted fold's per-round floor.

@@ -6,6 +6,7 @@ import org.apache.spark.ml.feature.{StringIndexer, VectorIndexer}
 import org.apache.spark.ml.functions.vector_to_array
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Random-forest training & classification (reference
   * ccdc/randomforest.py — identical spark.ml stages).
@@ -29,9 +30,18 @@ object Rf {
   }
 
   /** Train over a features dataframe; None when no training rows
-    * (reference guard, ccdc/randomforest.py:73-75). */
-  def train(fdf: DataFrame, numTrees: Int = 500): Option[PipelineModel] =
-    if (fdf.isEmpty) None else Some(pipeline(numTrees).fit(fdf))
+    * (reference guard, ccdc/randomforest.py:73-75).
+    *
+    * The fit is eager and scoped, so `fdf` is cached for exactly its
+    * duration: the emptiness guard, both indexer fits and RF's
+    * metadata, split and bagging passes each run an action over it,
+    * and uncached each would re-execute aux ⋈ segments from Parquet.
+    * The cache is released before returning on every path. */
+  def train(fdf: DataFrame, numTrees: Int = 500): Option[PipelineModel] = {
+    val cached = fdf.persist(StorageLevel.MEMORY_AND_DISK)
+    try if (cached.isEmpty) None else Some(pipeline(numTrees).fit(cached))
+    finally cached.unpersist()
+  }
 
   /** model.transform → keyed raw predictions (reference
     * ccdc/randomforest.py:90-103). */

@@ -6,7 +6,6 @@ import org.apache.spark.storage.StorageLevel
 
 import graft.ccd.CcdOps
 import graft.grid.Grid
-import graft.sources.Sink
 import graft.types.{ArdRow, Segment}
 
 /** The `changedetection` product pipeline (reference entry
@@ -68,16 +67,17 @@ object ChangeDetection {
       // the reference's chip-keyed Cassandra upsert (schema.cql:142).
       // A tile batch always contains whole chips, so partition-level
       // replacement == chip-level last-write-wins.
-      Sink.write(chips.toDF(), s"$outDir/chip", Seq("cx", "cy"),
-        Seq("cx", "cy"))
-      Sink.write(pixels.toDF(), s"$outDir/pixel", Seq("cx", "cy", "px", "py"),
-        Seq("cx", "cy"))
-      Sink.write(segs, s"$outDir/segment",
-        Seq("cx", "cy", "px", "py", "sday", "eday"), Seq("cx", "cy"))
       // Count the frames this batch landed, not the whole output table:
       // the sink is a per-chip upsert, so the table may also hold other
-      // tiles' earlier partitions that this run did not touch.
-      (chips.count(), pixels.count(), segs.count())
+      // tiles' earlier partitions that this run did not touch. The
+      // counts are taken by the writes themselves (Landed.write).
+      val nChips = Landed.write(chips.toDF(), s"$outDir/chip",
+        Seq("cx", "cy"), Seq("cx", "cy"))
+      val nPixels = Landed.write(pixels.toDF(), s"$outDir/pixel",
+        Seq("cx", "cy", "px", "py"), Seq("cx", "cy"))
+      val nSegs = Landed.write(segs, s"$outDir/segment",
+        Seq("cx", "cy", "px", "py", "sday", "eday"), Seq("cx", "cy"))
+      (nChips, nPixels, nSegs)
     } finally segments.unpersist()
   }
 

@@ -93,8 +93,10 @@ object SessionStore {
       .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(16)
 
   /** The landed path of an already-built parquet store — None if this
-    * JVM has not built it (or has retired it). Diagnostics/spec
-    * accessor: answers never read through this. */
+    * JVM has not built it (or has retired it). A liveness probe: specs
+    * use it, and so does s45's answer path, which checks that its new
+    * generation is live before deciding whether to rebuild the
+    * superseded store. No caller reads rows through the returned path. */
   def livePath(name: String, dir: String): Option[String] =
     Option(built.get(keyOf(name, dir)))
 

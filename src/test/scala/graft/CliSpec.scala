@@ -73,6 +73,41 @@ class CliSpec extends AnyFunSuite {
     assert(cl("predictions") > 0, s"classification landed nothing: $cl")
   }
 
+  test("classification reports only its own run's predictions on a shared --out") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_cli_two").toString
+    // tile A: the synthetic chip; tile B: two tiles east, 4 pixels
+    val (ax, ay, bx) = (-2565585, 3314805, -2565585 + 2 * 150000)
+    val ardA = CcdDemo.syntheticArd(spark, 8)
+    val ardB = CcdDemo.syntheticArd(spark, 4)
+      .map(r => r.copy(cx = bx, px = r.px - ax + bx))
+    ardA.unionAll(ardB).write.parquet(s"$dir/ard")
+    ardA.unionAll(ardB).map { r =>
+      val p = (r.px - r.cx) / 30 // pixel index within the chip
+      AuxRow(r.cx, r.cy, r.px, r.py, dates = Seq(730000),
+        dem = Some(Seq(100.0f + p)), trends = Seq(1 + p % 3),
+        aspect = Some(Seq(10 * p)), posidex = Some(Seq(0.5f)),
+        slope = Some(Seq(2.0f)), mpw = Some(Seq(1)))
+    }.write.parquet(s"$dir/aux")
+    def verb(args: String*): Map[String, Long] =
+      Cli.run(parse(args).toOption.get, spark)
+    Seq(ax, bx).foreach { x =>
+      verb("changedetection", "-x", x.toString, "-y", ay.toString,
+        "--ard", s"$dir/ard", "--out", s"$dir/products")
+    }
+    def classify(x: Int) = verb("classification", "-x", x.toString,
+      "-y", ay.toString, "-s", "1", "-e", "800000", "--aux", s"$dir/aux",
+      "--segments", s"$dir/products/segment", "--out", s"$dir/products",
+      "--trees", "3")("predictions")
+    val a = classify(ax)
+    val b = classify(bx)
+    val table = spark.read.parquet(s"$dir/products/prediction")
+    assert(a == table.filter($"chipx" === ax).count() && a > 0)
+    assert(b == table.filter($"chipx" === bx).count() && b > 0,
+      s"second run must report only its own tile's rows: $b")
+    assert(table.count() == a + b)
+  }
+
   test("acquiredWindow clips observations and drops emptied pixels") {
     // synthetic dates run 730000 + i*16 for 80 obs (1999-09-03 on);
     // clip to the first ~20 observations' span.

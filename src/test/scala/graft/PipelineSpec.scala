@@ -55,6 +55,27 @@ class PipelineSpec extends AnyFunSuite {
     assert(pix.columns.sorted.toSeq == Seq("cx", "cy", "mask", "px", "py"))
   }
 
+  test("change detection counts only this batch's rows on a shared --out") {
+    import spark.implicits._
+    val out = Files.createTempDirectory("graft_cd_shared").toString
+    ChangeDetection.run(syntheticArd, out)
+    // a second tile two tiles east, two of its pixels only
+    val east = -2565585 + 2 * 150000
+    val other = syntheticArd
+      .map(r => r.copy(cx = r.cx + 2 * 150000, px = r.px + 2 * 150000))
+      .filter(r => r.px < east + 60)
+    val (chips, pixels, segs) = ChangeDetection.run(other, out)
+    def landed(table: String) = spark.read.parquet(s"$out/$table")
+    def ours(table: String) = landed(table).filter(col("cx") === east).count()
+    assert((chips, pixels) == ((1L, 2L)))
+    assert(chips == ours("chip") && pixels == ours("pixel") &&
+      segs == ours("segment"), "counts must equal this batch's landed rows")
+    assert(landed("chip").count() == 2 && landed("pixel").count() == 6,
+      "the first tile's rows stay in the shared tables")
+    assert(ChangeDetection.run(syntheticArd.filter(_ => false), out) ==
+      ((0L, 0L, 0L)), "an empty batch lands and counts nothing")
+  }
+
   test("tileScope prunes to the requested tile's chips") {
     import spark.implicits._
     val inTile = syntheticArd

@@ -1,5 +1,6 @@
 #!/usr/bin/env bash
-# Full pre-commit gauntlet: compile, specs, oracle parity, bench.
+# Full pre-commit gauntlet: compile, specs, oracle parity, the two CLI
+# verbs' answer checks, bench.
 # Usage: tools/gauntlet.sh  (from the repo root)
 set -euo pipefail
 cd "$(dirname "$0")/.."
@@ -11,6 +12,11 @@ echo "== verify + DuckDB oracle (sf0.01) =="
 out=$(mktemp -d)
 sbt -batch "runMain graft.Verify /root/testdata/sf0.01 $out" >/dev/null 2>&1
 python3 tools/check.py /root/testdata/sf0.01 "$out" | tail -1
+
+echo "== verbs (perfbench ccdc_tile: planted breaks, prediction counts) =="
+verbs=$(python3 perfbench/run.py --workload ccdc_tile --seed 1 --seconds 5 --trace 0 | tail -1)
+echo "$verbs" | cut -c1-200
+echo "$verbs" | grep -q '"correct": true' || { echo "verbs: answer check failed" >&2; exit 1; }
 
 echo "== bench (sf0.1) =="
 SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 sbt -batch "runMain graft.Bench" 2>/dev/null \
