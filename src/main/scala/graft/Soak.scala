@@ -465,11 +465,13 @@ object Soak {
       val (exN, exBest) = (1 to 3)
         .map(_ => timed(ext.Hybrid.bm25Over(idx, dl, qterms).count()))
         .minBy(_._2)
-      val (prN, prBest) = (1 to 3)
-        .map(_ => timed(ext.Hybrid.bmwOver(idx, dl, imp, qterms)._3.count()))
-        .minBy(_._2)
+      val pruned = (1 to 3).map(_ => timedv {
+        val out = ext.Hybrid.bmwOver(idx, dl, imp, qterms)
+        (out, out._3.count())
+      })
+      val prBest = pruned.map(_._2).min
+      val ((cand, admitted, _), prN) = pruned.last._1
       require(exN == prN, s"pruned answer count $prN != exhaustive $exN")
-      val (cand, admitted, _) = ext.Hybrid.bmwOver(idx, dl, imp, qterms)
       println(s"""{"dir":"$sfDir","mode":"wand","queries":10,""" +
         s""""terms_per_query":3,"rows":$exN,""" +
         s""""exhaustive_sec":$exBest,"pruned_sec":$prBest,""" +
@@ -528,12 +530,14 @@ object Soak {
       val (exR, exBest) = (1 to 3)
         .map(_ => timedv(rows(ext.Hybrid.bm25Over(idx, dl, qterms))))
         .minBy(_._2)
-      val (prR, prBest) = (1 to 3)
-        .map(_ => timedv(rows(ext.Hybrid.bmwOver(idx, dl, imp, qterms)._3)))
-        .minBy(_._2)
+      val pruned = (1 to 3).map(_ => timedv {
+        val out = ext.Hybrid.bmwOver(idx, dl, imp, qterms)
+        (out, rows(out._3))
+      })
+      val prBest = pruned.map(_._2).min
+      val ((cand, admitted, _), prR) = pruned.last._1
       require(exR == prR, s"pruned != exhaustive: " +
         s"missing=${(exR -- prR).take(3)} extra=${(prR -- exR).take(3)}")
-      val (cand, admitted, _) = ext.Hybrid.bmwOver(idx, dl, imp, qterms)
       println(s"""{"dir":"$sfDir","mode":"wand_web","queries":10,""" +
         s""""hot_term":"$hotTerm","rows":${exR.size},""" +
         s""""exhaustive_sec":$exBest,"pruned_sec":$prBest,""" +
@@ -593,11 +597,11 @@ object Soak {
       val ex = rows(ext.Hybrid.bm25Over(idx, dl, qterms))
       val exSec = (System.nanoTime() - t0) / 1e9
       val t1 = System.nanoTime()
-      val pr = rows(ext.Hybrid.bmwOver(idx, dl, imp, qterms)._3)
+      val (cand, admitted, scored) = ext.Hybrid.bmwOver(idx, dl, imp, qterms)
+      val pr = rows(scored)
       val prSec = (System.nanoTime() - t1) / 1e9
       require(ex == pr, s"pruned != exhaustive: " +
         s"missing=${(ex -- pr).take(3)} extra=${(pr -- ex).take(3)}")
-      val (cand, admitted, _) = ext.Hybrid.bmwOver(idx, dl, imp, qterms)
       println(s"""{"mode":"wand_syn","docs":$nDocs,"blocks":${nDocs / 128},""" +
         s""""queries":10,"rows":${ex.size},"exhaustive_sec":$exSec,""" +
         s""""pruned_sec":$prSec,"cand_blocks":${cand.count()},""" +

@@ -17,6 +17,14 @@ package graft.ccd
   * processing mask aligned 1:1 with the input dates, ordinal-day
   * input / model fields per band.
   *
+  * Each segment's growing window keeps its normal equations and its
+  * sorted successive differences as running state ([[Window]]), so a
+  * refit adds only the new observations instead of rebuilding the sums
+  * from the segment start. The output is bit-identical to refitting
+  * from scratch: rows enter every sum in index order, exactly as a
+  * rebuild adds them, and smaller harmonic models read a prefix of the
+  * full-width sums.
+  *
   * Everything here is per-pixel independent — the distributed form is a
   * `Dataset.flatMap` (graft.ccd.CcdOps), which keeps this the single
   * non-codegen stage of the pipeline (SURVEY.md §7.4.5).
@@ -81,34 +89,32 @@ object Ccd {
     row
   }
 
-  /** Ordinary least squares via normal equations + tiny ridge for
-    * numerical stability; deterministic Gaussian elimination. */
-  private[graft] def olsFit(ts: Array[Double], ys: Array[Double],
-      nHarm: Int = Harmonics): Array[Double] =
-    olsFitRows(ts.map(designRow(_, Harmonics)), ys, 0, ts.length, 2 + 2 * nHarm)
+  /** Columns of the full harmonic design row. */
+  private val FullP = 2 + 2 * Harmonics
+  /** Ridge added to AᵀA's diagonal (a copy of it) before each solve. */
+  private val Ridge = 1e-8
 
-  /** OLS over precomputed full-width design rows, using the first `p`
-    * columns (smaller harmonic models are prefixes of the full row).
-    * Accumulation order matches the from-scratch form exactly. */
-  private def olsFitRows(rows: Array[Array[Double]], ys: Array[Double],
-      from: Int, until: Int, p: Int): Array[Double] = {
+  /** Ordinary least squares via normal equations + tiny ridge for
+    * numerical stability; deterministic Gaussian elimination. The
+    * from-scratch reference for [[Window]]'s running sums: `detect`
+    * never calls it. */
+  private[graft] def olsFit(ts: Array[Double], ys: Array[Double],
+      nHarm: Int = Harmonics): Array[Double] = {
+    val p = 2 + 2 * nHarm
     val ata = Array.ofDim[Double](p, p)
     val aty = new Array[Double](p)
-    var i = from
-    while (i < until) {
-      val row = rows(i)
-      val y = ys(i)
+    ts.indices.foreach { i =>
+      val row = designRow(ts(i), Harmonics)
       var a = 0
       while (a < p) {
-        aty(a) += row(a) * y
+        aty(a) += row(a) * ys(i)
         var b = 0
         while (b < p) { ata(a)(b) += row(a) * row(b); b += 1 }
         a += 1
       }
-      i += 1
     }
     var d = 0
-    while (d < p) { ata(d)(d) += 1e-8; d += 1 } // ridge
+    while (d < p) { ata(d)(d) += Ridge; d += 1 }
     solve(ata, aty)
   }
 
@@ -154,30 +160,111 @@ object Ccd {
     s
   }
 
-  /** Robust per-band noise floor: median absolute successive
-    * difference — a temporal variogram like pyccd's adjusted rmse, so
-    * an overfit small-window rmse can't trigger spurious breaks. */
-  private def variogram(ys: Array[Double], from: Int, until: Int): Double = {
-    val diffs = ((from + 1) until until).map(i => math.abs(ys(i) - ys(i - 1))).sorted
-    if (diffs.isEmpty) 0.0 else diffs(diffs.length / 2)
-  }
+  /** Regression state of one segment's growing window [from, until),
+    * kept up to date one observation at a time so a refit costs one
+    * small solve per band instead of a pass that rebuilds the sums:
+    *   - the full-width AᵀA (upper triangle; the band-independent
+    *     part, built once for all bands),
+    *   - Aᵀy per band,
+    *   - per band, the successive differences |y(i) − y(i−1)| kept
+    *     sorted by insertion — the variogram's median is an index.
+    *
+    * A refit here is bit-identical to a fit from scratch over the same
+    * window. Each sum entry receives the same products in the same
+    * order: rows are added in index order, never removed, and
+    * row(a)·row(b) = row(b)·row(a) exactly, so the mirrored lower
+    * triangle holds the values a full build would. A smaller harmonic
+    * model reads the top-left p×p prefix, whose entries are exactly
+    * the sums a p-wide build makes. The ridge goes onto a copy before
+    * `solve`, never into the running sums. The sorted differences are
+    * the same multiset a fresh sort yields, so the median is the same
+    * element. */
+  private[graft] final class Window(rows: Array[Array[Double]],
+      bands: Array[Array[Double]], from: Int) {
+    private val ata = Array.ofDim[Double](FullP, FullP)
+    private val aty = Array.ofDim[Double](bands.length, FullP)
+    private val diffs = Array.fill(bands.length)(new Array[Double](2 * MinObs))
+    private var until = from
 
-  /** Fit all bands over observation index range [from, until), using
-    * precomputed design rows (trig evaluated once per series). */
-  private def fitBands(rows: Array[Array[Double]], bands: Array[Array[Double]],
-      from: Int, until: Int): Array[(Array[Double], Double)] = {
-    val p = 2 + 2 * harmonicsFor(until - from)
-    bands.map { ys =>
-      val coefs = olsFitRows(rows, ys, from, until, p)
-      var sse = 0.0
-      var i = from
-      while (i < until) {
-        val r = ys(i) - predictRow(coefs, rows(i))
-        sse += r * r
-        i += 1
+    /** Add observations [until, end) in index order. */
+    def extendTo(end: Int): Unit =
+      while (until < end) {
+        val row = rows(until)
+        var a = 0
+        while (a < FullP) {
+          val ra = row(a)
+          val ataA = ata(a)
+          var b = a
+          while (b < FullP) { ataA(b) += ra * row(b); b += 1 }
+          a += 1
+        }
+        var k = 0
+        while (k < bands.length) {
+          val ys = bands(k)
+          val atyK = aty(k)
+          a = 0
+          while (a < FullP) { atyK(a) += row(a) * ys(until); a += 1 }
+          if (until > from) insertDiff(k, math.abs(ys(until) - ys(until - 1)))
+          k += 1
+        }
+        until += 1
       }
-      val olsRmse = math.sqrt(sse / math.max(1, (until - from) - coefs.length))
-      (coefs, math.max(math.max(olsRmse, variogram(ys, from, until)), MinRmse))
+
+    /** Insert into band k's sorted differences (there are until−from−1). */
+    private def insertDiff(k: Int, d: Double): Unit = {
+      val count = until - from - 1
+      if (count == diffs(k).length) diffs(k) = java.util.Arrays.copyOf(diffs(k), 2 * count)
+      val sorted = diffs(k)
+      var lo = 0
+      var hi = count
+      while (lo < hi) {
+        val mid = (lo + hi) >>> 1
+        if (sorted(mid) <= d) lo = mid + 1 else hi = mid
+      }
+      System.arraycopy(sorted, lo, sorted, lo + 1, count - lo)
+      sorted(lo) = d
+    }
+
+    /** Band k's OLS coefficients for the first `p` design columns. */
+    def coefs(k: Int, p: Int): Array[Double] = {
+      val m = Array.ofDim[Double](p, p)
+      var a = 0
+      while (a < p) {
+        var b = 0
+        while (b < p) { m(a)(b) = if (a <= b) ata(a)(b) else ata(b)(a); b += 1 }
+        m(a)(a) += Ridge
+        a += 1
+      }
+      solve(m, java.util.Arrays.copyOf(aty(k), p))
+    }
+
+    /** Robust per-band noise floor: median absolute successive
+      * difference — a temporal variogram like pyccd's adjusted rmse,
+      * so an overfit small-window rmse can't trigger spurious breaks. */
+    def variogram(k: Int): Double = {
+      val count = until - from - 1
+      if (count <= 0) 0.0 else diffs(k)(count / 2)
+    }
+
+    /** Extend to `end` (windows only grow) and fit every band over
+      * [from, end): the coefficients and the rmse floored by the
+      * variogram and MinRmse. */
+    def fit(end: Int): Array[(Array[Double], Double)] = {
+      extendTo(end)
+      val p = 2 + 2 * harmonicsFor(end - from)
+      Array.tabulate(bands.length) { k =>
+        val ys = bands(k)
+        val c = coefs(k, p)
+        var sse = 0.0
+        var i = from
+        while (i < end) {
+          val r = ys(i) - predictRow(c, rows(i))
+          sse += r * r
+          i += 1
+        }
+        val olsRmse = math.sqrt(sse / math.max(1, (end - from) - c.length))
+        (c, math.max(math.max(olsRmse, variogram(k)), MinRmse))
+      }
     }
   }
 
@@ -251,7 +338,8 @@ object Ccd {
         segStart = n
       } else {
         val fitEnd = segStart + MinObs // exclusive
-        var fits = fitBands(rows, obs, segStart, fitEnd)
+        val window = new Window(rows, obs, segStart)
+        var fits = window.fit(fitEnd)
         var broke = false
         var i = fitEnd
         var anomalyRun = 0
@@ -281,13 +369,13 @@ object Ccd {
             // Grow the stable window; refit on a deterministic cadence.
             i += 1
             if ((i - fitEnd) % 4 == 0) {
-              fits = fitBands(rows, obs, segStart, i)
+              fits = window.fit(i)
             }
           }
         }
         if (!broke) {
           // Open final segment to the last observation.
-          fits = fitBands(rows, obs, segStart, n)
+          fits = window.fit(n)
           val mags = Array.fill(NumBands)(0.0)
           models += toModel(fits, mags, ts, segStart, n - 1,
             ts(n - 1).toInt, 0.0, n - segStart)

@@ -61,8 +61,7 @@ object CcdOps {
           rmse(0), rmse(1), rmse(2), rmse(3), rmse(4), rmse(5), rmse(6),
           coef(0), coef(1), coef(2), coef(3), coef(4), coef(5), coef(6),
           intr(0), intr(1), intr(2), intr(3), intr(4), intr(5), intr(6),
-          dates = isoDates, mask = Some(result.processingMask.toSeq),
-          rfrawp = None)
+          dates = isoDates, mask = mask, rfrawp = None)
       }
     }
   }

@@ -92,6 +92,77 @@ class CcdSpec extends AnyFunSuite {
     assert(resid.map(math.abs).max < 1.0, "clean signal should fit near-exactly")
   }
 
+  /** One seeded ARD-shaped pixel: ~16-day cadence with jitter, a
+    * seasonal signal, Gaussian noise, a +1500 step at each index in
+    * `breaks`, and a `cloudy` share of non-clear QA values. */
+  private def seeded(seed: Long, n: Int, breaks: Seq[Int] = Nil,
+      cloudy: Double = 0.0): (Array[Int], Array[Array[Int]], Array[Int]) = {
+    val rnd = new scala.util.Random(seed)
+    val dates = Array.tabulate(n)(i => 730000 + i * 16 + rnd.nextInt(8))
+    val bands = Array.tabulate(Ccd.NumBands) { b =>
+      Array.tabulate(n) { i =>
+        val seasonal = 800.0 + 150 * b +
+          (200.0 + 20 * b) * math.cos(2 * math.Pi * dates(i) / Ccd.YearDays)
+        val step = 1500.0 * breaks.count(i >= _)
+        (seasonal + step + 25.0 * rnd.nextGaussian()).round.toInt
+      }
+    }
+    val qas = Array.tabulate(n)(_ =>
+      if (rnd.nextDouble() < cloudy) Array(2, 4, 255)(rnd.nextInt(3)) else 0)
+    (dates, bands, qas)
+  }
+
+  /** MD5 over every field of `detect`'s output, doubles as raw bits. */
+  private def fingerprint(results: Seq[Ccd.CcdResult]): String = {
+    val md = java.security.MessageDigest.getInstance("MD5")
+    val out = new java.io.DataOutputStream(
+      new java.security.DigestOutputStream(java.io.OutputStream.nullOutputStream(), md))
+    def bits(d: Double): Unit = out.writeLong(java.lang.Double.doubleToRawLongBits(d))
+    results.foreach { r =>
+      out.writeInt(r.changeModels.size)
+      r.changeModels.foreach { m =>
+        out.writeInt(m.startDay); out.writeInt(m.endDay); out.writeInt(m.breakDay)
+        bits(m.changeProbability); out.writeInt(m.curveQa)
+        m.bands.foreach { bm =>
+          bits(bm.magnitude); bits(bm.rmse); bits(bm.intercept)
+          out.writeInt(bm.coefficients.length); bm.coefficients.foreach(bits)
+        }
+      }
+      out.writeInt(r.processingMask.length); out.write(r.processingMask)
+    }
+    out.flush()
+    md.digest().map("%02x".format(_)).mkString
+  }
+
+  test("detect output is bit-exact over a seeded series family (kernel pin)") {
+    // Pins EVERY field of the kernel's output — the c01 golden hash
+    // covers only days, curqa and n_obs. A change to the fitting
+    // arithmetic that moves any rmse, coefficient or magnitude by one
+    // ulp fails here. Regenerate the constant only for an intentional
+    // change to the kernel's numbers.
+    val family: Seq[(Array[Int], Array[Array[Int]], Array[Int])] =
+      (1 to 8).map(s => seeded(s, 120)) ++                          // stable
+      (1 to 8).map(s => seeded(100 + s, 120, Seq(30 + 7 * s))) ++   // one break
+      (1 to 3).map(s => seeded(200 + s, 600,                        // several breaks
+        Seq(90 + 10 * s, 230, 380 - 5 * s, 500))) ++
+      Seq(seeded(250, 600)) ++                                      // paper-scale stable
+      (1 to 6).map(s => seeded(300 + s, 120, Seq(70), cloudy = 0.1)) ++ // ~10% non-clear
+      (1 to 4).map { s =>                                           // duplicate dates
+        val (d, b, q) = seeded(400 + s, 120, Seq(60))
+        (Array.tabulate(d.length)(i => if (i % 9 == 4) d(i - 1) else d(i)), b, q)
+      } ++
+      (1 to 4).map { s =>                                           // descending input
+        val (d, b, q) = seeded(500 + s, 120, Seq(50), cloudy = 0.1)
+        (d.reverse, b.map(_.reverse), q.reverse)
+      } ++
+      Seq(seeded(600, 11), seeded(601, 40, cloudy = 0.8))           // < MinObs clear
+    val results = family.map { case (d, b, q) => Ccd.detect(d, b, q) }
+    assert(results.map(_.changeModels.size).sum > family.size,
+      "family should exercise breaks, not only open segments")
+    val fp = fingerprint(results)
+    assert(fp == "38b44c8b46fb547e9dc17852c54e453f", s"kernel fingerprint drifted: $fp")
+  }
+
   test("c01 sf0.001 output matches the pinned golden hash (kernel regression guard)") {
     // The flagship query has no SQL oracle (rows-only at the driver
     // gate) and c02 checks only invariants — this pins the FULL c01

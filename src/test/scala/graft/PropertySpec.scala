@@ -5,6 +5,7 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.ccd.Ccd
 import graft.streaming.DocStreams
 
 /** Property-based checks over the pure JVM kernels — the fixture
@@ -114,6 +115,45 @@ class PropertySpec extends AnyFunSuite {
       assert(BigInt(ext.Dedup.minhashA(i)) * maxX + ext.Dedup.minhashB(i)
           < BigInt(Long.MaxValue),
         s"minhash $i: a*x+b exceeds signed-64 at x = 2^36-1")
+    }
+  }
+
+  test("CCD window: running sums solve bit-for-bit like olsFit, variogram is the fresh median") {
+    // The equivalence `Ccd.detect`'s bit-exact output rests on: a
+    // window grown through arbitrary `until` steps must solve exactly
+    // as a from-scratch fit over the same rows, at every harmonic
+    // width, and its sorted differences must give a fresh sort's median.
+    val window = for {
+      n <- Gen.chooseNum(Ccd.MinObs, 160)
+      start <- Gen.chooseNum(720000, 740000)
+      gaps <- Gen.listOfN(n, Gen.chooseNum(1, 40))
+      // ties (repeated values) exercise the sorted insert's equal keys
+      ys <- Gen.listOfN(n, Gen.frequency(3 -> Gen.chooseNum(0, 5000), 1 -> Gen.const(1200)))
+      from <- Gen.chooseNum(0, 5)
+      steps <- Gen.nonEmptyListOf(Gen.chooseNum(1, 12))
+    } yield (gaps.scanLeft(start)(_ + _).tail.map(_.toDouble).toArray,
+      ys.map(_.toDouble).toArray, from, steps)
+    def bits(xs: Array[Double]) = xs.map(java.lang.Double.doubleToRawLongBits).toSeq
+    forAll(window) { case (ts, ys, from, steps) =>
+      val bands = Array(ys, ys.reverse)
+      val w = new Ccd.Window(ts.map(Ccd.designRow(_)), bands, from)
+      var until = from
+      steps.foreach { s =>
+        until = math.min(ts.length, until + s)
+        w.extendTo(until)
+        bands.indices.foreach { k =>
+          val band = bands(k).slice(from, until)
+          for (nHarm <- 1 to Ccd.Harmonics) {
+            val want = Ccd.olsFit(ts.slice(from, until), band, nHarm)
+            assert(bits(w.coefs(k, 2 + 2 * nHarm)) == bits(want),
+              s"band $k, [$from, $until), p = ${2 + 2 * nHarm}")
+          }
+          val diffs = band.sliding(2).collect { case Array(a, b) => math.abs(b - a) }
+            .toArray.sorted
+          val median = if (diffs.isEmpty) 0.0 else diffs(diffs.length / 2)
+          assert(w.variogram(k) == median, s"band $k variogram, [$from, $until)")
+        }
+      }
     }
   }
 
