@@ -135,16 +135,7 @@ object Cli {
       System.err.println(err)
       sys.exit(2)
     case Right(cmd) =>
-      val spark = SparkSession.builder()
-        .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-        .appName("graft-cli")
-        .config("spark.sql.shuffle.partitions",
-          sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
+      val spark = Session()
       try {
         val counts = run(cmd, spark)
         println(counts.toSeq.sortBy(_._1)

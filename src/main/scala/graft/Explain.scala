@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit utility: print the formatted physical plan of one (or
   * every) registered query. Usage:
   *
@@ -9,21 +7,15 @@ import org.apache.spark.sql.SparkSession
   *
   * This is how PLANS.md entries are produced; keeping it a main means
   * the audit loop ("is this still the plan I'd want at 100 TB?") is one
-  * command, not a test-failure printout.
+  * command, not a test-failure printout. The plans come from the
+  * bench's session config ([[Session]]: `local[cpus]`, shuffle
+  * partitions = cpus, AQE on), so they are the plans `Bench` runs at
+  * the same `SPARK_GRAFT_CPUS`.
   */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-explain")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session()
     val names = args.drop(1) match {
       case Array() => SparkEntry.queries.keys.toSeq.sorted
       case more    => more.toSeq

@@ -24,8 +24,9 @@ object Tables {
     // for that fixture: TIMESTAMP(NANOS) — which Spark 4 only reads as
     // a long (spark.sql.legacy.parquet.nanosAsLong) — or naive
     // TIMESTAMP(MICROS), which Spark infers as TIMESTAMP_NTZ. Both
-    // normalize to ONE engine-facing type, session-tz TIMESTAMP (every
-    // main and the test session pin the session tz to UTC), so every
+    // normalize to ONE engine-facing type, session-tz TIMESTAMP
+    // ([[Session]] sets nanosAsLong and pins the session tz to UTC
+    // for every main and the specs), so every
     // downstream unix_micros/window/watermark sees identical values:
     // the nanos path truncates with exact integer `div` like DuckDB's
     // own ns→µs read; the NTZ cast reinterprets the wall-clock in UTC

@@ -358,7 +358,7 @@ object Similarity {
     // (s03 is the exact all-pairs baseline; its Scaladoc points here).
     // Semantics: each vector's nearest neighbor AMONG ITS SIGN-BAND
     // COLLISIONS — the deterministic axis-aligned blocking d05 proved
-    // hash-identical in DuckDB, so unlike the ext.demo.MlAnn variants (JVM-internal
+    // hash-identical in DuckDB, so unlike spark.ml's LSH (JVM-internal
     // floats) this approximate NN-1 is fully oracle-checkable. Exercised
     // on the planted-twin corpus so every vector has at least one
     // collision (its sign-identical twin); natural collisions compete.
@@ -472,8 +472,8 @@ object Similarity {
     // correctly-rounded IEEE ops, so cell ids — and therefore the
     // CANDIDATE SET — hash-match DuckDB exactly with no training at
     // all (s13 is the TRAINED quantizer, made just as deterministic
-    // by exact-integer Lloyd iterations; the float spark.ml variant
-    // stays in ext.demo.MlAnn with no correctness row). Probe = the
+    // by exact-integer Lloyd iterations; spark.ml's float KMeans has
+    // no cross-engine oracle). Probe = the
     // 3×3 neighbor cells: each query explodes to 9 (c1, c2) keys and
     // equi-joins the postings — at 100 TB the corpus shuffles ONCE on
     // cell id at build time, probes replicate 9× (tiny side), and
@@ -1147,10 +1147,9 @@ object Similarity {
   // only indexes well when coordinates are individually informative
   // (~N(0, 1/64) axes). A LEARNED quantizer adapts its cells to the
   // data, and the standard objection (float centroid means make the
-  // fit nondeterministic across engines — the reason the earlier
-  // rounds kept the trained variant in ext.demo.MlAnn with no
-  // correctness row) dissolves once Lloyd's iteration is stated in
-  // exact integer arithmetic:
+  // fit nondeterministic across engines, so spark.ml's float KMeans
+  // can carry no correctness row) dissolves once Lloyd's iteration is
+  // stated in exact integer arithmetic:
   //
   //   * coordinates are fixed-point longs: x = ⌊v·2²⁰⌋ — multiplying
   //     a double by a power of two is exact (exponent shift) and floor

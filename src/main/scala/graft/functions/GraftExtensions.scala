@@ -4,11 +4,9 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.expressions.Expression
 
 /** SparkSessionExtensions hook exposing graft's native expressions to
-  * SQL. Attach with:
-  * {{{
-  * SparkSession.builder().withExtensions(new GraftExtensions) ...
-  * }}}
-  * or `spark.sql.extensions=graft.functions.GraftExtensions`, after
+  * SQL. Attach with the session builder's
+  * `withExtensions(new GraftExtensions)` or with
+  * `spark.sql.extensions=graft.functions.GraftExtensions`, after
   * which `SELECT cosine_sim(a, b)` parses anywhere SQL does.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {

@@ -61,8 +61,7 @@ object SessionStore {
   private def tableOrBuild(spark: SparkSession, name: String, dir: String,
       buckets: Int, bucketCols: Seq[String])
       (build: => DataFrame): String = {
-    val key = s"${name}_" + java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(16)
+    val key = keyOf(name, dir)
     built.computeIfAbsent(s"tbl:$key", _ => {
       Sink.writeBucketed(build, key, buckets, bucketCols)
       key

@@ -67,7 +67,7 @@ class BucketSpec extends AnyFunSuite {
     // co-location the reference's Cassandra partition keys provided,
     // visible to Catalyst: neither side shuffles, at any scale.
     import spark.implicits._
-    val segments = ccd.CcdOps.detect(CcdDemo.syntheticArd(spark, 8))
+    val segments = ccd.CcdOps.detect(SyntheticArd(spark, 8))
     val segs = ccd.CcdOps.segmentRecords(segments)
     val pix = ccd.CcdOps.pixelRecords(segments).toDF()
       .selectExpr("cx", "cy", "px", "py", "size(mask) as n_mask")
@@ -107,18 +107,5 @@ class BucketSpec extends AnyFunSuite {
         .orderBy(col("c").desc, col("vec_id").asc).head().getLong(0)
     }
     assert(nn1(e) == nn1(deq), "top-1 neighbor should survive int8 quantization")
-  }
-
-  test("BRP-LSH ANN returns plausible neighbors vs brute force") {
-    val brute = SparkEntry.queries("s01_ann_bruteforce")(spark, sf)
-      .filter(col("qid") === 0).collect().map(_.getAs[Long]("nn_id")).toSet
-    val lsh = ext.demo.MlAnn.annLsh(spark, sf, queryVecId = 0L, k = 5,
-        bucketLength = 5.0, numTables = 8)
-      .collect().map(_.getAs[Long]("nn_id")).toSet
-    assert(lsh.size == 5)
-    // On unit-ish random embeddings euclidean and cosine rank nearly
-    // identically; require overlap rather than equality (LSH is approx).
-    assert(brute.intersect(lsh).nonEmpty,
-      s"no overlap between LSH $lsh and brute-force $brute")
   }
 }

@@ -47,7 +47,7 @@ class CliSpec extends AnyFunSuite {
 
   test("both verbs run end-to-end over synthetic ARD") {
     val dir = Files.createTempDirectory("graft_cli").toString
-    CcdDemo.syntheticArd(spark, 8).write.parquet(s"$dir/ard")
+    SyntheticArd(spark, 8).write.parquet(s"$dir/ard")
 
     val cd = Cli.run(parse(Seq("changedetection",
       "-x", "-2565585", "-y", "3314805",
@@ -78,8 +78,8 @@ class CliSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("graft_cli_two").toString
     // tile A: the synthetic chip; tile B: two tiles east, 4 pixels
     val (ax, ay, bx) = (-2565585, 3314805, -2565585 + 2 * 150000)
-    val ardA = CcdDemo.syntheticArd(spark, 8)
-    val ardB = CcdDemo.syntheticArd(spark, 4)
+    val ardA = SyntheticArd(spark, 8)
+    val ardB = SyntheticArd(spark, 4)
       .map(r => r.copy(cx = bx, px = r.px - ax + bx))
     ardA.unionAll(ardB).write.parquet(s"$dir/ard")
     ardA.unionAll(ardB).map { r =>
@@ -111,7 +111,7 @@ class CliSpec extends AnyFunSuite {
   test("acquiredWindow clips observations and drops emptied pixels") {
     // synthetic dates run 730000 + i*16 for 80 obs (1999-09-03 on);
     // clip to the first ~20 observations' span.
-    val ard = CcdDemo.syntheticArd(spark, 2)
+    val ard = SyntheticArd(spark, 2)
     val lo = graft.ccd.CcdOps.ordinalToIso(730000)
     val hi = graft.ccd.CcdOps.ordinalToIso(730000 + 19 * 16)
     val clipped = pipeline.ChangeDetection.acquiredWindow(ard, s"$lo/$hi")

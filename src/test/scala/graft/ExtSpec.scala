@@ -313,45 +313,6 @@ class ExtSpec extends AnyFunSuite {
     assert(got.values.exists(_ == 0), "zero-match errors must survive the left join")
   }
 
-  test("ivfKmeans probes only its nProbe cells and ranks candidates exactly") {
-    val got = ext.demo.MlAnn.ivfKmeans(spark, sf, k = 5, nCells = 4, nProbe = 2)
-      .collect()
-    assert(got.nonEmpty)
-    got.groupBy(_.getAs[Long]("qid")).values.foreach { g =>
-      val rks = g.map(_.getAs[Int]("rk")).sorted
-      assert(rks.sameElements(1 to g.length), s"dense ranks, got ${rks.toSeq}")
-      val cs = g.sortBy(_.getAs[Int]("rk")).map(_.getAs[Double]("cos_sim"))
-      assert(cs.zip(cs.tail).forall { case (a, b) => a >= b }, "ranked by cosine desc")
-      assert(cs.forall(c => math.abs(c) <= 1.0 + 1e-9))
-    }
-    // the returned neighbors are exactly the per-query top-k of the
-    // probed cells' postings: reuse the SAME index build (model and
-    // assignments are deterministic for a fixed corpus plan + seed)
-    val raw = Tables(spark, sf, "embeddings")
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      .collect().map(r => r.getAs[Long]("vec_id") ->
-        r.getAs[scala.collection.Seq[Double]]("v").toArray).toMap
-    val (model, posted) = ext.demo.MlAnn.ivfIndex(spark, sf, 4)
-    val cellOf = posted.select("vec_id", "cell").collect()
-      .map(r => r.getAs[Long]("vec_id") -> r.getAs[Int]("cell")).toMap
-    def cos(a: Array[Double], b: Array[Double]): Double = {
-      var d = 0.0; var na = 0.0; var nb = 0.0
-      (a.indices).foreach { i => d += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i) }
-      d / (math.sqrt(na) * math.sqrt(nb))
-    }
-    got.groupBy(_.getAs[Long]("qid")).foreach { case (qid, g) =>
-      val qv = raw(qid)
-      val probed = model.clusterCenters.zipWithIndex
-        .map { case (c, i) => (i, c.toArray.zip(qv).map { case (x, y) => (y - x) * (y - x) }.sum) }
-        .sortBy { case (i, d2) => (d2, i) }.take(2).map(_._1).toSet
-      val want = cellOf.collect {
-        case (id, cell) if id != qid && probed(cell) => (id, cos(raw(id), qv))
-      }.toSeq.sortBy { case (id, c) => (-c, id) }.take(5).map(_._1)
-      val gotIds = g.sortBy(_.getAs[Int]("rk")).map(_.getAs[Long]("nn_id")).toSeq
-      assert(gotIds == want, s"qid=$qid: $gotIds != $want")
-    }
-  }
-
   test("t14 sequence packing matches a driver-side running-sum recompute") {
     val rows = SparkEntry.queries("t14_sequence_pack")(spark, sf).collect()
     val docsArr = Tables(spark, sf, "documents").select("doc_id", "source", "text")

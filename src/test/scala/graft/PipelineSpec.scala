@@ -2,13 +2,12 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.ccd.{Ccd, CcdOps}
+import graft.ccd.CcdOps
 import graft.pipeline.{ChangeDetection, Classification}
-import graft.types.{ArdRow, AuxRow}
+import graft.types.AuxRow
 
 /** End-to-end slice (SURVEY.md §7.2): synthetic ARD for a few pixels →
   * detect → three parquet products; then train + classify. Mirrors the
@@ -16,35 +15,9 @@ import graft.types.{ArdRow, AuxRow}
 class PipelineSpec extends AnyFunSuite {
   import SparkTestSession._
 
-  private def noise(i: Int, b: Int): Double = {
-    val x = math.sin(i * 12.9898 + b * 78.233) * 43758.5453
-    (x - math.floor(x) - 0.5) * 40.0
-  }
-
-  /** Synthetic ARD rows on the real chip grid: chip (-2565585, 3314805), chip grid-pt (0, 0),
-    * pixels at 30 m offsets, step change for odd pixels. */
-  private def syntheticArd: Dataset[ArdRow] = {
-    import spark.implicits._
-    val cx = -2565585; val cy = 3314805
-    val rows = for (p <- 0 until 4) yield {
-      val dates = Array.tabulate(80)(i => 730000 + i * 16)
-      val step = if (p % 2 == 1) Some(730000 + 40 * 16) else None
-      def band(b: Int): Seq[Int] = dates.zipWithIndex.map { case (d, i) =>
-        val base = 1000.0 + 100 * b +
-          300.0 * math.cos(2 * math.Pi * d / Ccd.YearDays)
-        (base + step.filter(d >= _).map(_ => 1500.0).getOrElse(0.0) +
-          noise(i, b)).round.toInt
-      }.toSeq
-      ArdRow(cx, cy, cx + p * 30, cy - p * 30, dates.toSeq,
-        band(0), band(1), band(2), band(3), band(4), band(5), band(6),
-        Seq.fill(80)(0))
-    }
-    spark.createDataset(rows)
-  }
-
   test("change detection pipeline lands chip/pixel/segment products") {
     val out = Files.createTempDirectory("graft_cd").toString
-    val (chips, pixels, segs) = ChangeDetection.run(syntheticArd, out)
+    val (chips, pixels, segs) = ChangeDetection.run(SyntheticArd(spark, 4), out)
     assert(chips == 1, "one chip")
     assert(pixels == 4, "four pixels")
     assert(segs >= 6, s"stable pixels 1 segment + stepped pixels 2: got $segs")
@@ -58,10 +31,10 @@ class PipelineSpec extends AnyFunSuite {
   test("change detection counts only this batch's rows on a shared --out") {
     import spark.implicits._
     val out = Files.createTempDirectory("graft_cd_shared").toString
-    ChangeDetection.run(syntheticArd, out)
+    ChangeDetection.run(SyntheticArd(spark, 4), out)
     // a second tile two tiles east, two of its pixels only
     val east = -2565585 + 2 * 150000
-    val other = syntheticArd
+    val other = SyntheticArd(spark, 4)
       .map(r => r.copy(cx = r.cx + 2 * 150000, px = r.px + 2 * 150000))
       .filter(r => r.px < east + 60)
     val (chips, pixels, segs) = ChangeDetection.run(other, out)
@@ -72,14 +45,14 @@ class PipelineSpec extends AnyFunSuite {
       segs == ours("segment"), "counts must equal this batch's landed rows")
     assert(landed("chip").count() == 2 && landed("pixel").count() == 6,
       "the first tile's rows stay in the shared tables")
-    assert(ChangeDetection.run(syntheticArd.filter(_ => false), out) ==
+    assert(ChangeDetection.run(SyntheticArd(spark, 4).filter(_ => false), out) ==
       ((0L, 0L, 0L)), "an empty batch lands and counts nothing")
   }
 
   test("tileScope prunes to the requested tile's chips") {
     import spark.implicits._
-    val inTile = syntheticArd
-    val other = syntheticArd.map(r => r.copy(cx = r.cx + 150000 * 2))
+    val inTile = SyntheticArd(spark, 4)
+    val other = SyntheticArd(spark, 4).map(r => r.copy(cx = r.cx + 150000 * 2))
     val all = inTile.unionAll(other)
     val scoped = ChangeDetection.tileScope(all, -2565585.0 + 1.0, 3314805.0 - 1.0)
     assert(scoped.count() == 4)
@@ -87,7 +60,7 @@ class PipelineSpec extends AnyFunSuite {
 
   test("tile-level train/classify scope to the grid neighborhood") {
     import spark.implicits._
-    val segments = CcdOps.segmentRecords(CcdOps.detect(syntheticArd))
+    val segments = CcdOps.segmentRecords(CcdOps.detect(SyntheticArd(spark, 4)))
     val auxRows = (0 until 4).map { p =>
       AuxRow(-2565585, 3314805, -2565585 + p * 30, 3314805 - p * 30,
         Seq(730000), Some(Seq(100.0f + p)), Seq(1 + p % 2),
@@ -109,7 +82,7 @@ class PipelineSpec extends AnyFunSuite {
 
   test("train + classify round-trip produces raw prediction arrays") {
     import spark.implicits._
-    val segments = CcdOps.segmentRecords(CcdOps.detect(syntheticArd))
+    val segments = CcdOps.segmentRecords(CcdOps.detect(SyntheticArd(spark, 4)))
     val auxRows = (0 until 4).map { p =>
       AuxRow(-2565585, 3314805, -2565585 + p * 30, 3314805 - p * 30,
         dates = Seq(730000),

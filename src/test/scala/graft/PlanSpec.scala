@@ -846,6 +846,17 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("partial_min"), s"keep-id per fp must combine map-side:\n$p")
   }
 
+  test("e05: the nondeterministic barrier keeps one from_json per row") {
+    import org.apache.spark.sql.catalyst.expressions.JsonToStructs
+    val opt = SparkEntry.queries("e05_props_struct")(spark, sf)
+      .queryExecution.optimizedPlan
+    val parses = opt.collect { case node =>
+      node.expressions.map(_.collect { case j: JsonToStructs => j }.size).sum
+    }.sum
+    assert(parses == 1, "a null-k filter pushed below the parsing projection " +
+      s"parses each row twice (Filter + Project):\n$opt")
+  }
+
   test("e06: as-of join is a single-shuffle window plan, not a range join") {
     val p = plan("e06_asof_join")
     assert(!p.contains("Join"), // no BroadcastNestedLoop/SortMerge range join

@@ -12,7 +12,7 @@ class SourcesSpec extends AnyFunSuite {
 
   test("timeseries assemble/explode round-trip, arrays date-descending") {
     import spark.implicits._
-    val ard = CcdDemo.syntheticArd(spark, 4)
+    val ard = SyntheticArd(spark, 4)
     val long = Timeseries.explodeRows(ard)
     assert(long.count() == 4 * 80)
     val back = Timeseries.assemble(long.toDF())
@@ -103,7 +103,7 @@ class SourcesSpec extends AnyFunSuite {
     import spark.implicits._
     import graft.grid.Grid
     val dir = java.nio.file.Files.createTempDirectory("graft_dpp").toString
-    val base = CcdOps.segmentRecords(CcdOps.detect(CcdDemo.syntheticArd(spark, 4)))
+    val base = CcdOps.segmentRecords(CcdOps.detect(SyntheticArd(spark, 4)))
     val tiles = Seq((13, 6), (14, 6), (13, 7), (14, 7)).map { case (h, v) =>
       val (ulx, uly) = Grid.cellUl(h, v, Grid.tile)
       (h, v, ulx.toInt, uly.toInt)
@@ -156,7 +156,7 @@ class SourcesSpec extends AnyFunSuite {
   test("keyed read restricts the scan to requested ids") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_sink").toString
-    val segs = CcdOps.segmentRecords(CcdOps.detect(CcdDemo.syntheticArd(spark, 4)))
+    val segs = CcdOps.segmentRecords(CcdOps.detect(SyntheticArd(spark, 4)))
     Sink.write(segs, s"$dir/segment", Seq("cx", "cy", "px", "py", "sday", "eday"))
     val ids = Seq((-2565585, 3314805, -2565585, 3314805)).toDF("cx", "cy", "px", "py")
     val got = Sink.readKeyed(spark, s"$dir/segment", ids, Seq("cx", "cy", "px", "py"))
@@ -166,7 +166,7 @@ class SourcesSpec extends AnyFunSuite {
 
   test("segment schema parity: field names and types match the reference") {
     import spark.implicits._
-    val seg = CcdOps.detect(CcdDemo.syntheticArd(spark, 1)).toDF()
+    val seg = CcdOps.detect(SyntheticArd(spark, 1)).toDF()
     // reference ccdc/pyccd.py:39-81 field order
     val expected = Seq(
       "cx" -> "int", "cy" -> "int", "px" -> "int", "py" -> "int",

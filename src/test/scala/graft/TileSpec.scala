@@ -17,7 +17,7 @@ class TileSpec extends AnyFunSuite {
   test("tile model save/load round-trip") {
     import spark.implicits._
     val out = Files.createTempDirectory("graft_tile").toString
-    val segments = CcdOps.segmentRecords(CcdOps.detect(CcdDemo.syntheticArd(spark, 4)))
+    val segments = CcdOps.segmentRecords(CcdOps.detect(SyntheticArd(spark, 4)))
     val aux = spark.createDataset((0 until 4).map { p =>
       AuxRow(-2565585, 3314805, -2565585 + p * 30, 3314805 - p * 30,
         Seq(730000), Some(Seq(100.0f + p)), Seq(1 + p % 2),
@@ -40,7 +40,7 @@ class TileSpec extends AnyFunSuite {
 
   test("acquired range parses and filters observations") {
     assert(CcdOps.acquiredRange("0001-01-01/1970-01-01") == ((1, 719163)))
-    val obs = Timeseries.explodeRows(CcdDemo.syntheticArd(spark, 2)).toDF()
+    val obs = Timeseries.explodeRows(SyntheticArd(spark, 2)).toDF()
     val lo = CcdOps.ordinalToIso(730000 + 10 * 16)
     val hi = CcdOps.ordinalToIso(730000 + 20 * 16)
     val filtered = Timeseries.filterAcquired(obs, s"$lo/$hi")

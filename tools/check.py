@@ -47,15 +47,23 @@ def frame_key(df):
     return sorted(rows)
 
 
-def main():
-    sf_dir, out_dir = sys.argv[1], sys.argv[2]
+def connect(sf_dir):
+    """A fresh in-memory DuckDB with the sf tables registered as views."""
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    return con
+
+
+def main():
+    sf_dir, out_dir = sys.argv[1], sys.argv[2]
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_pass = n_fail = 0
     for name, sql in sorted(oracle.items()):
+        # One connection per query: DuckDB 1.0.0 segfaulted when all
+        # ~160 oracle queries ran through one connection.
+        con = connect(sf_dir)
         try:
             got = con.sql(
                 f"SELECT * FROM '{out_dir}/{name}/*.parquet'").df()
@@ -81,6 +89,8 @@ def main():
         except Exception as e:  # noqa: BLE001
             n_fail += 1
             print(f"ERROR {name}: {e}")
+        finally:
+            con.close()
     print(f"== {n_pass} pass, {n_fail} fail ==")
     sys.exit(1 if n_fail else 0)
 
