@@ -12,12 +12,12 @@ object Bench {
     }
     try SparkEntry.queries("q12_case_when")(spark, sfDir).count()
     catch { case _: Throwable => }
-    // Deterministic sorted order (not map-hash order) and best-of-n per
+    // Deterministic sorted order (not map-hash order) and best-of-2 per
     // query, so a one-off GC/compaction burst can't brand a single query
     // 10× slow. A failed query reports -1 (never a partial elapsed time)
     // so a breakage can't masquerade as a timing improvement; total sums
     // successful queries only.
-    val n = sys.env.getOrElse("SPARK_GRAFT_BENCH_N", "2").toInt.max(1)
+    val n = 2
     // Honest-window mode (SPARK_GRAFT_BENCH_FULL=1): the default
     // times fn(...).count(), and ColumnPruning drops TRAILING window/
     // projection operators whose outputs count() never reads (t14/
@@ -46,6 +46,14 @@ object Bench {
         df.select(xxhash64(df.columns.toIndexedSeq.map(col): _*).as("h"))
           .agg(expr("bit_xor(h)"), expr("count(*)")).collect()
       } else df.count()
+    // Jobs the timed passes launch (the warmup's are not counted).
+    val jobs = new java.util.concurrent.atomic.AtomicLong
+    spark.sparkContext.addSparkListener(
+      new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobs.incrementAndGet()
+      })
     val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       val times = (1 to n).map { _ =>
         val t0 = System.nanoTime()
@@ -61,11 +69,10 @@ object Bench {
     val mode = if (full) ",\"mode\":\"full\"" else ""
     val line =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"n":$n$mode,"sf":"$sfDir"}"""
-    // Land the JSON line as files FIRST, then print it as the last
-    // stdout line: the one-line JSON is ~7 KB at 162 queries, so a
-    // truncated stdout tail can never recover it (VERDICT r17 #1b) —
-    // the machine-readable record must never depend on tail capture
-    // (VERDICT r4 #3). Two files per run: the historical mode file
+    // Land the JSON line as files FIRST, then print it: the one-line
+    // JSON is ~7 KB at 162 queries, so a truncated stdout tail can
+    // never recover it (VERDICT r17 #1b) — the machine-readable record
+    // must never depend on tail capture (VERDICT r4 #3). Two files per run: the historical mode file
     // (last.json / last_full.json) AND a per-core-count file
     // (last_c<cpus>.json), so the driver's second invocation at a
     // lower core count stops clobbering the 32-core record (VERDICT
@@ -83,6 +90,16 @@ object Bench {
       System.err.println(s"[bench] could not write $target: ${e.getMessage}")
     }
     println(line)
+    // stop() drains the listener bus, so the job count below is whole.
     spark.stop()
+    // The last stdout line: a summary short enough for any tail capture
+    // (the full line above is ~7 KB) — total, failures, per-family
+    // subtotals by query-name prefix, and the timed passes' job count.
+    val families = results.filter(_._2 >= 0).groupBy(_._1.take(1)).toSeq
+      .sortBy(_._1).map { case (f, rs) => s""""$f":${rs.map(_._2).sum}""" }
+      .mkString("{", ",", "}")
+    println(s"""{"metric":"total","value":$total,"unit":"sec",""" +
+      s""""failed":${results.count(_._2 < 0)},"families":$families,""" +
+      s""""jobs":${jobs.get},"n":$n$mode,"sf":"$sfDir"}""")
   }
 }

@@ -193,8 +193,8 @@ object Dedup {
   /** The d12 containment fixture: every doc unions with its
     * 12-token-prefix twin at doc_id + 10⁹ — C(twin→doc) = 1.0 at
     * J ≈ 0.15, the pair class only containment finds. ONE definition
-    * for the registered query, the skew soak (graft.Soak), and the
-    * streaming replay spec, so the three can never drift (the
+    * for the registered query and the streaming replay spec, so the
+    * two can never drift (the
     * Similarity.withPlantedTwins discipline). */
   private[graft] def withPrefixTwins(d: DataFrame): DataFrame = {
     val tk = split(trim(col("text")), "\\s+")
@@ -319,8 +319,8 @@ object Dedup {
   }
 
   /** d02's candidate subplan — the prefix self-join + PPJoin positional
-    * filter, exposed separately so the skew soak (graft.Soak) can count
-    * candidates without duplicating the join logic. */
+    * filter, exposed separately so the zipf skew gate (SkewSpec) can
+    * count candidates without duplicating the join logic. */
   private[graft] def jaccardCandidates(sets: DataFrame, t: Double): DataFrame = {
     val pref = prefixBlocks(sets, t)
     ppjoinFilter(
@@ -422,8 +422,8 @@ object Dedup {
   }
 
   /** d12's candidate subplan — the one-sided prefix × full-set join
-    * with the size filter, exposed separately so the skew soak
-    * (graft.Soak) can count candidates without duplicating the join
+    * with the size filter, exposed separately so the zipf skew gate
+    * (SkewSpec) can count candidates without duplicating the join
     * logic. Emits distinct ordered (doc_a contained-in doc_b) pairs. */
   private[graft] def containmentCandidates(sets: DataFrame, t: Double): DataFrame = {
     val pref = prefixBlocks(sets, t)
@@ -1071,7 +1071,7 @@ object Dedup {
       .distinct()
 
   /** ONE contraction-round statement (the d07/d08/delta-fold loop body
-    * and [[graft.ExplainRound]]'s plan artifact):
+    * and the `cc_round` row of PlanSpec's plan-shape ledger):
     * LARGE-STAR — for each node u, link every LARGER neighbor v to
     * m(u) = min(N(u) ∪ {u}); m ≤ u < v keeps the output canonical and
     * self-loop-free by construction (canon() dedups). Then

@@ -355,7 +355,8 @@ object Hybrid {
     // surfaces fewer than TopK real candidates and θ collapses to the
     // hot-term noise floor (quantized idf of a ubiquitous term is ~1,
     // never exactly 0), admitting everything — measured in the
-    // `Soak --wand-syn` regime probe. Deeper seeds only RAISE θ (the
+    // synthetic-regime WAND probe (PLANS.md, "t42 seed depth").
+    // Deeper seeds only RAISE θ (the
     // 5th best over a superset of true partial scores), so the
     // admission bound stays valid and skipping only improves.
     val seedBlocks = qimp.groupBy(col("qid"), col("term"))

@@ -618,7 +618,7 @@ object Similarity {
     // probe/rank over centroids whose Lloyd rounds saw only the 1/8
     // md5 draw. At 100 TB the training term drops from
     // rounds × corpus to rounds × sample; recall moves within noise
-    // (the Soak --ann-trained s19 row measures it).
+    // (PLANS.md's s19/s20 sampled-training row records it).
     "s19_ivf_kmeans_sampled" -> ((s, dir) => kmeansSampledQuery(s, dir)),
 
     // Sampled IVFADC — BOTH quantizers (coarse cells and residual
@@ -852,7 +852,7 @@ object Similarity {
 
     // RECALL ESTIMATION for the graph family — the SAME draw, truth
     // in the walk's own exact-int64 metric over the twin lattice
-    // (exactNn1SqBetween — the Soak --knn discipline), probe = the
+    // (exactNn1SqBetween — the walk's own metric), probe = the
     // s36 ef-search body over the landed graph.
     "s43_recall_graph_probe" -> ((s, dir) => recallProbeKnnQuery(s, dir)),
 
@@ -923,8 +923,7 @@ object Similarity {
 
   /** s03's exact block-grid NN-1 over a (vec_id, v) frame — see the
     * s03 entry for the plan rationale. ONE definition for the
-    * registered query and the recall soak's ground truth
-    * (graft.Soak). */
+    * registered query and the recall specs' ground truth (ExtSpec). */
   private[graft] def exactNn1(e: DataFrame): DataFrame =
     exactNn1Between(e, e)
 
@@ -951,10 +950,11 @@ object Similarity {
     * int64 squared distance on (vec_id, x) fixed-point frames, NN by
     * (d asc, id asc). ONE statement for s43's sampled ground truth
     * (probes = the recall draw over the twin lattice) and the
-    * `Soak --knn` natural-corpus truth (probes = corpus), so the
-    * graph monitors' truth side is one definition — the
-    * [[exactNn1Between]] discipline with the cosine family's metric
-    * swapped for the walk's own exact-integer one. */
+    * natural-corpus truth (probes = corpus; PLANS.md's round-13
+    * graph-family recall table), so the graph monitors' truth side
+    * is one definition — the [[exactNn1Between]] discipline with the
+    * cosine family's metric swapped for the walk's own exact-integer
+    * one. */
   private[graft] def exactNnKSqBetween(probes: DataFrame,
       corpus: DataFrame, k: Int): DataFrame = {
     val c = corpus.select(col("vec_id").as("nn_id"), col("x").as("cx"),
@@ -1062,9 +1062,9 @@ object Similarity {
     * ∏(2rᵢ+1) integer offset tuples (fields d1..dn) a probe explodes
     * to — the cartesian product of per-axis windows −rᵢ..rᵢ.
     * Recall@k is non-decreasing in every rᵢ because a wider probe's
-    * candidate set is a superset — ExtSpec pins the monotonicity,
-    * Soak --ann measures the (axes, radii) curve, PLANS.md records
-    * it. */
+    * candidate set is a superset — ExtSpec pins the monotonicity;
+    * PLANS.md's round-11 table records the measured (axes, radii)
+    * curve. */
   private[graft] def probeOffsets(radii: Seq[Int]): Column = {
     val combos = radii.map(r => (-r to r).toSeq)
       .foldLeft(Seq(Seq.empty[Int]))((acc, rs) => acc.flatMap(c => rs.map(c :+ _)))
@@ -1105,25 +1105,18 @@ object Similarity {
 
   /** The IVF topology generalized to per-vector NN-1: EVERY vector
     * probes its cell neighborhood (the registered queries probe 10
-    * vectors at top-5). The recall-soak twin of s08/s10/s11 — shares
-    * the cell quantizer, so the measured recall is the registered
-    * index's. The Int form is the legacy 2-axis symmetric radius. */
+    * vectors at top-5). The every-vector recall twin of s08/s10/s11
+    * — shares the cell quantizer, so the measured recall is the
+    * registered index's, over 2 axes at a symmetric radius. */
   private[graft] def gridNn1(all: DataFrame, probeRadius: Int = 1): DataFrame =
-    gridNn1R(all, Seq(probeRadius, probeRadius))
-
-  private[graft] def gridNn1R(all: DataFrame, radii: Seq[Int]): DataFrame =
-    best1(gridScored(all, radii))
+    best1(gridScored(all, Seq(probeRadius, probeRadius)))
 
   /** Per-vector top-k over the same grid candidates (bounded-heap
     * partial agg, the s07/e10 discipline) — the recall@k side of the
     * probe-radius curve: recall@k = P(exact NN-1 ∈ grid top-k). */
   private[graft] def gridTopKNn(all: DataFrame, probeRadius: Int,
       k: Int): DataFrame =
-    gridTopKNnR(all, Seq(probeRadius, probeRadius), k)
-
-  private[graft] def gridTopKNnR(all: DataFrame, radii: Seq[Int],
-      k: Int): DataFrame =
-    topK(gridScored(all, radii)
+    topK(gridScored(all, Seq(probeRadius, probeRadius))
         .select(col("vec_id").as("qid"), col("nn_id"),
           col("cos_sim").as("cos_sim")),
       col("qid"), k)
@@ -1787,9 +1780,9 @@ object Similarity {
     * the landed [[knnGraphStore]], visited set ranked by
     * [[knnEfRank]]); truth = [[exactNn1SqBetween]] over the SAME
     * twin-extended lattice the graph indexes, in the WALK'S OWN
-    * metric (exact int64 squared distance — the `Soak --knn`
-    * discipline: a perfect walk scores 1.0; a cosine truth would cap
-    * the monitor below 1 by metric mismatch, making drift unreadable).
+    * metric (exact int64 squared distance: a perfect walk scores
+    * 1.0; a cosine truth would cap the monitor below 1 by metric
+    * mismatch, making drift unreadable).
     * On the planted corpus the exact NN of every natural vector is
     * its twin, so hit1 is the operational twin_rank1 number. */
   private def recallProbeKnnQuery(s: SparkSession, dir: String): DataFrame = {
@@ -2436,8 +2429,8 @@ object Similarity {
     * corpora) — R deep enough that the true neighbor, which ADC
     * ranks NEAR the top but not AT it, survives into the exact
     * stage. 200 restores the sf0.1 natural-corpus recall@1 to the
-    * probed-cells exact bound itself (0.502 vs 0.509; the r-sweep in
-    * `Soak --ann-trained` has the shallower points: 20 → 0.32,
+    * probed-cells exact bound itself (0.502 vs 0.509; PLANS.md's
+    * round-12 rerank soak has the shallower points: 20 → 0.32,
     * 60 → 0.44) while the exact-arithmetic work stays R·|Q|,
     * corpus-independent. */
   private[graft] val RerankR = 200
@@ -2686,9 +2679,9 @@ object Similarity {
 
   /** ONE descent-round statement — the loop body of the full build
     * (s29), the restricted insert fold (s34, via `restrict`), and the
-    * warm-start refine (s37), plus [[graft.ExplainRound]]'s plan
-    * artifact: current lists ∪ exactly-scored neighbor-of-neighbor
-    * candidates, k-best per owner. */
+    * warm-start refine (s37), plus the `knn_round` row of PlanSpec's
+    * plan-shape ledger: current lists ∪ exactly-scored
+    * neighbor-of-neighbor candidates, k-best per owner. */
   private[graft] def knnRound(nbr: DataFrame, fx: DataFrame, k: Int,
       restrict: Option[DataFrame] = None): DataFrame =
     knnTopK(nbr.unionAll(knnScore(knnRoundCand(nbr, k, restrict), fx)), k)
@@ -2792,8 +2785,8 @@ object Similarity {
   /** s33's beam width — HNSW's ef knob: the frontier keeps the B
     * best visited vertices instead of one, trading B× hop work
     * (still corpus-independent) for escape from single-path local
-    * minima. 4 is chosen BY the `Soak --knn` beam/entry sweep (the
-    * RerankR r-sweep discipline; PLANS.md round-14 curve): on the
+    * minima. 4 is chosen BY the beam/entry sweep (the RerankR
+    * r-sweep discipline; PLANS.md round-14 curve): on the
     * uniform natural corpus recall scales ~LINEARLY with B (each
     * beam slot explores a near-independent descent path — no knee
     * exists on structureless geometry) while entry count buys almost
@@ -2805,8 +2798,9 @@ object Similarity {
   /** THE walk loop over a graph `g` for a (qid, qx, cur) query frame
     * (one or more frontier rows per query) — beam search with greedy
     * as its B = 1 case, so s31 (greedy), s33 (beam), and the
-    * `Soak --knn` recall sweep all ride ONE loop and the measured
-    * recall is the recall of the registered operators. Per hop:
+    * graph-family recall sweeps (PLANS.md rounds 13-14) all ride ONE
+    * loop and the measured recall is the recall of the registered
+    * operators. Per hop:
     * candidates = frontier ∪ its graph neighbors (the frontier is
     * included, so the kept set improves monotonically under the
     * (d, id) order and post-fixpoint hops are idempotent), scored
@@ -2826,14 +2820,14 @@ object Similarity {
     * distances, so every consumer dedups in its bounded set-semantics
     * heap — [[knnEfRank]]). s36 (ef-search) ranks the visited union;
     * s31/s33 keep the frontier-only form. ONE loop for all three (and
-    * the `Soak --knn` sweeps), so measured recall is the registered
+    * the recall sweeps), so measured recall is the registered
     * operators'. */
   /** One hop's SCORED candidate frame: frontier ∪ its graph
     * neighbors (≤ B(k+1) rows per query counting duplicates — the
     * frontier row itself plus ≤ k neighbors per beam slot), scored
     * exactly against the lattice. ONE statement for the
-    * [[knnBeamWalkFull]] loop body and [[graft.ExplainRound]]'s hop
-    * plan artifact.
+    * [[knnBeamWalkFull]] loop body and the `walk_hop` row of
+    * PlanSpec's plan-shape ledger.
     *
     * Deliberately a MULTISET (round-18 cut, the knnRoundCand rule):
     * the `.distinct()` that stood here was a full exchange of the
@@ -2963,8 +2957,8 @@ object Similarity {
   }
 
   /** The ef ranking tail over a visited (qid, cand, d) frame — ONE
-    * definition for the registered s36 and the `Soak --knn`
-    * beam/entry sweep, so the measured ef recall is the registered
+    * definition for the registered s36 and the beam/entry sweep
+    * (PLANS.md round 14), so the measured ef recall is the registered
     * operator's. */
   private[graft] def knnEfRank(visited: DataFrame,
       k: Int = KnnEfTopK): DataFrame =
@@ -3628,7 +3622,7 @@ object Similarity {
   /** Per-(query, probed-cell) residual ADC tables — the query's
     * residual w.r.t. THAT cell's centroid against the residual
     * codebook. ONE builder for the registered s16 probe (10 queries)
-    * and the recall soak (every vector probes). */
+    * and the every-vector recall twin [[ivfadcRerankNn1]]. */
   private def ivfadcTables(pcells: DataFrame, fx: DataFrame,
       cents: DataFrame, pqc: DataFrame): DataFrame =
     pcells
@@ -3642,20 +3636,17 @@ object Similarity {
           transform(cl, c => kmDist(xs, c.getField("m")))).as("qt"))
 
   /** Every vector's scored candidate set under the s13 probe topology
-    * (2 nearest learned cells) — the recall-soak twin of the
+    * (2 nearest learned cells) — the every-vector twin of the
     * registered query, riding the SAME kmeansCentroids / kmAssign /
     * kmProbeCells, so the measured recall is the recall of the
     * registered index. The probe side is N rows here, so the cell
     * join is a SHUFFLE_HASH on cid, not a broadcast. */
-  private[graft] def kmScoredAll(all: DataFrame,
-      k: Int = KmK, nprobe: Int = KmNProbe,
-      trainFilter: Option[Column] = None): DataFrame = {
+  private[graft] def kmScoredAll(all: DataFrame): DataFrame = {
     val fx = graft.ops.Subplan.once(
       all.select(col("vec_id"), col("v"), fixedPoint(col("v")).as("x")))
-    val cents = kmeansCentroids(
-      trainFilter.map(fx.filter).getOrElse(fx), k)
+    val cents = kmeansCentroids(fx)
     val post = kmAssign(fx, cents).select(col("vec_id"), col("v"), col("cid"))
-    val probes = kmProbeCells(fx, cents, nprobe)
+    val probes = kmProbeCells(fx, cents)
     // K is single digits, so a bare cid join has ≤ K non-empty cells
     // and a broadcast conversion would run the whole N²/K-candidate
     // score + partial agg in the checkpoint's ONE partition (a
@@ -3678,52 +3669,17 @@ object Similarity {
         cosine(col("qv"), col("v")).as("cos_sim"))
   }
 
-  private[graft] def kmNn1(all: DataFrame, k: Int = KmK,
-      nprobe: Int = KmNProbe,
-      trainFilter: Option[Column] = None): DataFrame =
-    best1(kmScoredAll(all, k, nprobe, trainFilter)
+  private[graft] def kmNn1(all: DataFrame): DataFrame =
+    best1(kmScoredAll(all)
       .select(col("qid").as("vec_id"), col("nn_id"), col("cos_sim")))
 
-  private[graft] def kmCandidateCount(all: DataFrame, k: Int = KmK,
-      nprobe: Int = KmNProbe): Long =
-    kmScoredAll(all, k, nprobe).count()
-
-  /** Every vector's ADC-nearest neighbor within its 2 probed cells —
-    * the recall twin of s16 (coarse miss + quantization loss in one
-    * number), riding the registered construction end-to-end. */
-  private[graft] def ivfadcNn1(all: DataFrame): DataFrame = {
-    val fx = graft.ops.Subplan.once(
-      all.select(col("vec_id"), col("v"), fixedPoint(col("v")).as("x")))
-    val cents = kmeansCentroids(fx)
-    val rfxs = graft.ops.Subplan.once(residFrame(fx, cents))
-    val pqc = pqCodebooks(rfxs.select(col("vec_id"), col("subs")))
-    val codes = pqEncode(rfxs, pqc).select(col("vec_id"), col("cid"), col("codes"))
-    val qtabs = ivfadcTables(
-      kmProbeCells(fx, cents).select(col("qid"), col("cid")), fx, cents, pqc)
-    // Same cell sub-blocking as kmScoredAll (see there): a bare
-    // K-valued cid join would collapse to ≤ K tasks.
-    val blocks = 32
-    val salted = codes.withColumn("blk",
-      pmod(col("vec_id"), lit(blocks.toLong)).cast("int"))
-    val qtabsAll = qtabs.withColumn("blk",
-      explode(array((0 until blocks).map(lit): _*)))
-    val scored = salted.join(qtabsAll, Seq("cid", "blk"))
-      .filter(col("qid") =!= col("vec_id"))
-      .select(col("qid"), col("vec_id").as("nn_id"), pqAdcCol.as("adc"))
-    // min-by (adc, nn_id) via the negated-struct max — the bounded
-    // partial-agg shape of best1, ascending.
-    scored.groupBy(col("qid"))
-      .agg(max(struct((-col("adc")).as("na"), (-col("nn_id")).as("ni"),
-        col("nn_id"))).as("best"))
-      .select(col("qid").as("vec_id"), col("best.nn_id").as("nn_id"))
-  }
-
   /** Every vector's rerank-restored nearest neighbor — the recall
-    * twin of s17, riding [[ivfadcNn1]]'s construction with the tail
-    * swapped: per-query ADC top-[[RerankR]] (bounded heap), then the
-    * exact-cosine best over only those R candidates. The measured gap
-    * to [[kmNn1]] (the probed-cells exact bound) is exactly what the
-    * shortlist depth loses. */
+    * twin of s17, riding the registered IVFADC construction end to end
+    * (s13's cells, s14's residual codes, s16's ADC tables), then
+    * per-query ADC top-[[RerankR]] (bounded heap) and the exact-cosine
+    * best over only those R candidates. The measured gap to [[kmNn1]]
+    * (the probed-cells exact bound) is exactly what the shortlist depth
+    * loses. */
   private[graft] def ivfadcRerankNn1(all: DataFrame,
       r: Int = RerankR): DataFrame = {
     val fx = graft.ops.Subplan.once(
@@ -3734,6 +3690,8 @@ object Similarity {
     val codes = pqEncode(rfxs, pqc).select(col("vec_id"), col("cid"), col("codes"))
     val qtabs = ivfadcTables(
       kmProbeCells(fx, cents).select(col("qid"), col("cid")), fx, cents, pqc)
+    // Same cell sub-blocking as kmScoredAll (see there): a bare
+    // K-valued cid join would collapse to ≤ K tasks.
     val blocks = 32
     val salted = codes.withColumn("blk",
       pmod(col("vec_id"), lit(blocks.toLong)).cast("int"))

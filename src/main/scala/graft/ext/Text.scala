@@ -783,8 +783,9 @@ object Text {
     // corpus); elsewhere an honest, DOCUMENTED approximation ranked
     // by pre-batch counts — which is why t24 keeps the exact order
     // and t28 registers separately under its own oracle. Scale: the
-    // per-merge driver cost drops ~batch-fold (the Soak --bpe-batch
-    // row measures s/merge); everything else is t24's topology.
+    // per-merge driver cost drops ~batch-fold (PLANS.md's round-12
+    // batched-BPE soak measures s/merge); everything else is t24's
+    // topology.
     "t28_bpe_batch_train" -> ((s, dir) =>
       bpeBatchTrain(docs(s, dir), BpeBatchRounds, BpeBatchSize)),
 
@@ -1639,6 +1640,18 @@ object Text {
   private[graft] def bpeTrain(d: DataFrame, rounds: Int): DataFrame =
     bpeTrainFull(d, rounds)._1
 
+  /** The one corpus-wide shuffle of the BPE family (t24/t25/t28):
+    * whitespace-word frequencies, each word split to its codepoint
+    * symbol sequence. Everything after reads this frontier, never the
+    * corpus. */
+  private[graft] def bpeVocab(d: DataFrame): DataFrame =
+    d.select(explode(toks).as("w"))
+      .filter(col("w") =!= "")
+      .groupBy(col("w")).agg(count(lit(1)).as("cnt"))
+      .select(col("w"),
+        regexp_extract_all(col("w"), lit("."), lit(0)).as("syms"),
+        col("cnt"))
+
   /** [[bpeTrain]] plus the trained SEGMENTER state: returns
     * (merge table, final vocab (w, syms, cnt)) — the vocab after all
     * `rounds` merges IS the word → subword segmentation t25 applies,
@@ -1648,16 +1661,7 @@ object Text {
   private[graft] def bpeTrainFull(d: DataFrame,
       rounds: Int): (DataFrame, DataFrame) = {
     import graft.ops.{ConstKey, Subplan}
-    // The one corpus-wide shuffle: whitespace-word frequencies, each
-    // word split to its codepoint symbol sequence. Everything after
-    // reads this frontier, never the corpus.
-    var vocab = Subplan.once(
-      d.select(explode(toks).as("w"))
-        .filter(col("w") =!= "")
-        .groupBy(col("w")).agg(count(lit(1)).as("cnt"))
-        .select(col("w"),
-          regexp_extract_all(col("w"), lit("."), lit(0)).as("syms"),
-          col("cnt")))
+    var vocab = Subplan.once(bpeVocab(d))
     // The winner is collected, not checkpointed (round-18 cut): ONE
     // bounded row per round — the t28/d21 driver-side-constant
     // discipline — and folding it as literals makes the vocab update
@@ -1688,7 +1692,7 @@ object Text {
     * (binary UTF-8 string order on both engines). Materialized once
     * by the caller; both the merge table and the application join
     * read those rows. ONE statement for [[bpeTrainFull]]'s round and
-    * [[graft.ExplainRound]]'s plan artifact. */
+    * the `bpe_best_pair` row of PlanSpec's plan-shape ledger. */
   private[graft] def bpeBestPair(vocab: DataFrame): DataFrame =
     vocab.filter(size(col("syms")) >= 2)
       .select(col("cnt"), explode(arrays_zip(
@@ -1702,7 +1706,7 @@ object Text {
   /** One merge round's vocab update: fold the collected winner —
     * literal (lhs, rhs) — into every word's symbol sequence, a pure
     * map over the checkpointed frontier. The [[bpeBestPair]] twin
-    * half of the round body / plan artifact; [[bpeMergeFold]] stays
+    * half of the round body / ledger row; [[bpeMergeFold]] stays
     * the one merge definition. */
   private[graft] def bpeApplyWinner(vocab: DataFrame, lhs: String,
       rhs: String): DataFrame =
@@ -1712,7 +1716,8 @@ object Text {
 
   /** t28's knobs: rounds × batch size. The registered fixture keeps
     * the oracle's unrolled chain readable (2 × 5 ≈ t24's 10-merge
-    * table); production depth runs via `Soak --bpe-batch`. ONE
+    * table); PLANS.md's round-12 batched-BPE soak measured production
+    * depth. ONE
     * definition shared by the registration and the oracle
     * generator. */
   private[graft] val BpeBatchRounds = 2
@@ -1760,13 +1765,7 @@ object Text {
       batch: Int): DataFrame = {
     import graft.ops.Subplan
     val spark = d.sparkSession
-    var vocab = Subplan.once(
-      d.select(explode(toks).as("w"))
-        .filter(col("w") =!= "")
-        .groupBy(col("w")).agg(count(lit(1)).as("cnt"))
-        .select(col("w"),
-          regexp_extract_all(col("w"), lit("."), lit(0)).as("syms"),
-          col("cnt")))
+    var vocab = Subplan.once(bpeVocab(d))
     val out = scala.collection.mutable.ArrayBuffer[(Int, String, String, Long)]()
     for (_ <- 1 to rounds) {
       // Candidate WINDOW = 4×batch pairs in the exact t24 winner
@@ -1914,7 +1913,7 @@ object Text {
   private val UniNeg = -(1L << 40)
 
   /** The one corpus-wide shuffle: truncated-word frequencies. */
-  private def uniWordFreqs(d: DataFrame): DataFrame =
+  private[graft] def uniWordFreqs(d: DataFrame): DataFrame =
     d.select(explode(toks).as("w0"))
       .filter(col("w0") =!= "")
       .select(substring(col("w0"), 1, UniMaxWordLen).as("w"))
@@ -1922,7 +1921,7 @@ object Text {
 
   /** The character inventory — every codepoint of every word, with
     * occurrence-weighted counts. Never pruned: the coverage floor. */
-  private def uniChars(wf: DataFrame): DataFrame =
+  private[graft] def uniChars(wf: DataFrame): DataFrame =
     wf.select(col("cnt"),
         explode(regexp_extract_all(col("w"), lit("."), lit(0))).as("p"))
       .groupBy(col("p")).agg(sum(col("cnt")).as("pcnt"))
@@ -2045,7 +2044,8 @@ object Text {
   /** One EM round's E-step + recount: Viterbi-segment the word
     * frontier under the current vocab's model, then piece counts
     * from the segmentations. ONE statement for [[uniTrainFull]]'s
-    * round and [[graft.ExplainRound]]'s plan artifact. */
+    * round and the `uni_seg_counts` row of PlanSpec's plan-shape
+    * ledger. */
   private[graft] def uniSegCounts(wf: DataFrame,
       vocab: DataFrame): DataFrame =
     uniSegmentWords(wf.select(col("w")), uniModel(vocab))
@@ -2056,7 +2056,7 @@ object Text {
   /** One EM round's M-step vocab: every character (count 0 if now
     * unused) plus the top [[UniPruneK]] multi-char pieces by
     * (count, piece) — the [[uniSegCounts]] twin half of the round
-    * body / plan artifact. */
+    * body / ledger row. */
   private[graft] def uniVocabUpdate(chars: DataFrame,
       segCounts: DataFrame): DataFrame =
     chars.select(col("p"))

@@ -588,7 +588,8 @@ class ExtSpec extends AnyFunSuite {
 
   test("ANN recall@1 vs exact on the natural corpus: grid IVF holds a floor, " +
       "banded NN-1 stays a near-dup blocker") {
-    // The recall soak's in-test twin (graft.Soak --ann): ground truth
+    // The in-test recall gate (PLANS.md's approximate-ANN recall
+    // table holds the sf0.1/sf1 curve): ground truth
     // and both approximations are the registered operators' own
     // library forms, natural corpus (planting guarantees collisions,
     // which would inflate recall).

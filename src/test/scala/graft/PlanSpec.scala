@@ -12,10 +12,13 @@ class PlanSpec extends AnyFunSuite {
 
   // Memoized: plan construction is not free — Subplan.once queries run
   // their eager localCheckpoint jobs at build time, and the engine-wide
-  // no-BNLJ loop visits every query the per-query tests also visit.
-  private val planCache = scala.collection.mutable.Map.empty[String, String]
-  private def plan(name: String): String = planCache.getOrElseUpdate(name,
-    SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString)
+  // no-BNLJ loop and the plan-shape ledger visit every query the
+  // per-query tests also visit.
+  private val planCache =
+    scala.collection.mutable.Map.empty[String, org.apache.spark.sql.execution.SparkPlan]
+  private def physical(name: String) = planCache.getOrElseUpdate(name,
+    SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan)
+  private def plan(name: String): String = physical(name).toString
 
   test("q02: predicates push down to the parquet scan") {
     val p = plan("q02_filter_predicates")
@@ -940,4 +943,119 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("TakeOrderedAndProject"), p)
     assert(p.contains("partial_sum"), p)
   }
+
+  test("plan-shape ledger: every registered query and loop-round frame " +
+      "matches plan_ledger.tsv") {
+    // A registered loop's final plan shows only checkpointed leaves, so
+    // each loop family also gets ONE round frame, built from the same
+    // private[graft] pieces the loop body calls.
+    val rows = SparkEntry.queries.keys.toSeq.sorted
+      .map(n => n -> PlanShape.counts(physical(n))) ++
+      roundFrames.map { case (n, df) =>
+        n -> PlanShape.counts(df.queryExecution.executedPlan) }
+    val out = java.nio.file.Paths.get("target", "plan_ledger.tsv")
+    java.nio.file.Files.createDirectories(out.getParent)
+    java.nio.file.Files.writeString(out, PlanShape.render(rows))
+    val src = scala.io.Source.fromResource("plan_ledger.tsv")
+    val ledger = try PlanShape.parse(src.mkString) finally src.close()
+    val live = rows.toMap
+    val diffs = (ledger.keySet ++ live.keySet).toSeq.sorted.flatMap { n =>
+      (ledger.get(n), live.get(n)) match {
+        case (Some(l), Some(v)) => PlanShape.Columns.indices
+          .filter(i => l(i) != v(i))
+          .map(i => s"$n ${PlanShape.Columns(i)}: ledger ${l(i)}, live ${v(i)}")
+        case (None, _) => Seq(s"$n: not in the ledger")
+        case (_, None) => Seq(s"$n: in the ledger, no longer live")
+      }
+    }
+    if (diffs.nonEmpty) fail(s"plan shapes changed; the live ledger is at " +
+      s"$out — commit it as src/test/resources/plan_ledger.tsv with the " +
+      s"change that moved them:\n  " + diffs.mkString("\n  "))
+  }
+
+  /** One unexecuted round frame per loop family, each over the loop's
+    * state checkpointed exactly as the loop holds it between rounds. */
+  private lazy val roundFrames: Seq[(String, org.apache.spark.sql.DataFrame)] = {
+    import org.apache.spark.sql.functions.col
+    import ext.{Dedup, Similarity => S, Text}
+    val once = ops.Subplan.once _
+    // k-NN descent (s29/s34/s37) and the walk hop (s31/s33/s36/s40/s43):
+    // the walk reads the checkpointed lists as its graph frame.
+    val all = once(S.emb(spark, sf).select(col("vec_id"), col("v")))
+    val fx = once(S.knnFx(all))
+    val nbr = once(S.knnTopK(S.knnScore(S.knnInit(all), fx), S.KnnK))
+    val q0 = once(S.knnQ0(fx, col("vec_id") < 10))
+    // Star contraction (d07/d08).
+    val e = once(Dedup.ccCanon(
+      Dedup.jaccardPairsPrefix(Dedup.shingles(spark, sf), 0.5)
+        .select(col("doc_a").as("u"), col("doc_b").as("v"))))
+    // BPE merges (t24/t25): the winner is collected, as the loop does.
+    val docs = Text.docs(spark, sf)
+    val vocab = once(Text.bpeVocab(docs))
+    val best = Text.bpeBestPair(vocab).collect().head
+    // Unigram EM (t35/t36).
+    val wf = once(Text.uniWordFreqs(docs))
+    val chars = once(Text.uniChars(wf))
+    val segCounts = once(Text.uniSegCounts(wf, chars))
+    Seq(
+      "knn_round" -> S.knnRound(nbr, fx, S.KnnK),
+      "walk_hop" -> S.knnHopFrontier(S.knnHopScored(q0, fx, nbr), S.KnnBeamWidth),
+      "cc_round" -> Dedup.ccRound(e),
+      "bpe_best_pair" -> Text.bpeBestPair(vocab),
+      "bpe_apply_winner" -> Text.bpeApplyWinner(vocab, best.getString(0),
+        best.getString(1)),
+      "uni_seg_counts" -> Text.uniSegCounts(wf, chars),
+      "uni_vocab_update" -> Text.uniVocabUpdate(chars, segCounts))
+  }
+}
+
+/** Physical-operator counts of one plan: the columns of
+  * `plan_ledger.tsv`. The walk covers the whole physical tree — AQE's
+  * initial plan (exchanges included, as planned before any stage runs)
+  * and every subquery's plan — and matches operator classes, never
+  * substrings of the plan text. */
+object PlanShape {
+  import org.apache.spark.sql.catalyst.expressions.JsonToStructs
+  import org.apache.spark.sql.execution._
+  import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+  import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+  import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+  import org.apache.spark.sql.execution.joins._
+
+  val Columns: Seq[String] = Seq("exchange", "broadcast_exchange",
+    "sort_merge_join", "broadcast_hash_join", "shuffled_hash_join",
+    "nested_loop_or_cartesian", "parquet_scan", "rdd_scan", "from_json")
+
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = {
+    val inner = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.initialPlan)
+      case _ => Nil
+    }
+    p +: (p.children ++ inner ++ p.subqueries).flatMap(nodes)
+  }
+
+  def counts(p: SparkPlan): Seq[Int] = {
+    val ns = nodes(p)
+    def n(f: PartialFunction[SparkPlan, Unit]): Int = ns.count(f.isDefinedAt)
+    Seq(
+      n { case _: ShuffleExchangeExec => },
+      n { case _: BroadcastExchangeExec => },
+      n { case _: SortMergeJoinExec => },
+      n { case _: BroadcastHashJoinExec => },
+      n { case _: ShuffledHashJoinExec => },
+      n { case _: BroadcastNestedLoopJoinExec | _: CartesianProductExec => },
+      n { case s: FileSourceScanExec if s.relation.fileFormat.isInstanceOf[ParquetFileFormat] => },
+      n { case _: RDDScanExec => },
+      ns.map(_.expressions.map(_.collect { case j: JsonToStructs => j }.size).sum).sum)
+  }
+
+  def render(rows: Seq[(String, Seq[Int])]): String =
+    (("plan" +: Columns) +: rows.map { case (n, c) => n +: c.map(_.toString) })
+      .map(_.mkString("\t")).mkString("", "\n", "\n")
+
+  def parse(tsv: String): Map[String, Seq[Int]] =
+    tsv.linesIterator.drop(1).filter(_.nonEmpty).map { l =>
+      val f = l.split('\t')
+      f.head -> f.tail.toSeq.map(_.toInt)
+    }.toMap
 }

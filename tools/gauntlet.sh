@@ -18,6 +18,6 @@ verbs=$(python3 perfbench/run.py --workload ccdc_tile --seed 1 --seconds 5 --tra
 echo "$verbs" | cut -c1-200
 echo "$verbs" | grep -q '"correct": true' || { echo "verbs: answer check failed" >&2; exit 1; }
 
-echo "== bench (sf0.1) =="
+echo "== bench (sf0.1; the summary line — bench/last.json has the full record) =="
 SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 sbt -batch "runMain graft.Bench" 2>/dev/null \
-  | grep '"metric"'
+  | grep '"metric"' | tail -1

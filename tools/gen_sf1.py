@@ -47,11 +47,12 @@ writes a 131,072-doc corpus with a REALISTIC long-tail vocabulary —
 the regime every stock fixture is blind to (sf0.1's documents carry 31
 distinct words, so every term is ubiquitous, BM25's idf spread is
 degenerate, and block-max pruning can never skip). The shape is the
-`Soak --wand-syn` generator's promoted into a fixture so ORACLES can
-run on it: every doc = a 20-token hot function-word head drawn from 8
-hot words (df = N, the idf noise floor) + 10-40 Zipf(1.1) content
+synthetic-regime WAND probe's (PLANS.md, "t42 seed depth") promoted
+into a fixture so ORACLES can run on it: every doc = a 20-token hot
+function-word head drawn from 8 hot words (df = N, the idf noise
+floor) + 10-40 Zipf(1.1) content
 tokens over a 10,000-word tail (df spectrum ~N down to ~20 — the
-`--wand` probe's mid-tail picks exist at fixture scale). Queries stay
+WAND probe's mid-tail picks exist at fixture scale). Queries stay
 the registered convention (doc_id < 10 texts), so t40 ≡ t42's one-text
 pin and the admission machinery are exercised where pruning actually
 prunes. Other tables symlink from sf0.1.
