@@ -1219,7 +1219,7 @@ object Similarity {
     * that lost every member keeps its previous position (the
     * deterministic empty-cluster rule, stated identically in the
     * oracle's LEFT JOIN + COALESCE). */
-  private def kmUpdate(assigned: DataFrame, prev: DataFrame): DataFrame = {
+  private[graft] def kmUpdate(assigned: DataFrame, prev: DataFrame): DataFrame = {
     // ONE vec_sum aggregate + ONE transform for the truncating mean —
     // the 64 separate sum(element_at) aggregates cost a ~300-node
     // plan re-optimized on every Lloyd action (round-17 cut, the
@@ -1681,10 +1681,13 @@ object Similarity {
   /** The fixture's natural-corpus size — a ONE-row bounded driver
     * count (the d21 constant discipline: a filter modulus must be a
     * literal/scalar, not a join-provided column), memoized per
-    * fixture per JVM. */
+    * fixture per JVM. The count runs outside the map: it is
+    * deterministic, so two racing first calls only count twice. */
   private[graft] def corpusN(s: SparkSession, dir: String): Long =
-    corpusCounts.computeIfAbsent(dir,
-      _ => java.lang.Long.valueOf(emb(s, dir).count())).longValue()
+    Option(corpusCounts.get(dir)).getOrElse {
+      corpusCounts.putIfAbsent(dir, emb(s, dir).count())
+      corpusCounts.get(dir)
+    }.longValue()
 
   /** [[recallDraw]] as SQL over a named id column — ONE text for the
     * s41/s42 probe predicate (`s.vec_id`), s43's walk entry
@@ -2101,19 +2104,31 @@ object Similarity {
     * serving generation; the probe reads only the new generation's
     * probed cells under dynamic partition pruning. */
   private def indexRebuildQuery(s: SparkSession, dir: String): DataFrame = {
-    val (_, postPath) = upsertedPostings(s, dir, "s32")
-    lazy val stored = graft.ops.Subplan.once(
-      s.read.parquet(postPath)
-        .select(col("vec_id"), col("v"), fixedPoint(col("v")).as("x")))
-    val cents = graft.sources.SessionStore.storedOrBuild(
-      s, "s32r_cents", dir, Seq("cid")) { kmeansCentroids(stored) }
-    val post = graft.sources.SessionStore.storedOrBuild(
-      s, "s32r_postings", dir, Seq("vec_id"), Seq("cid")) {
-      kmAssign(stored, cents).select(col("vec_id"), col("v"), col("cid"))
-    }
+    val (cents, post) = rebuiltGeneration(s, dir, "s32")
     val q = emb(s, dir).filter(col("vec_id") < 10)
       .select(col("vec_id"), col("v"), fixedPoint(col("v")).as("x"))
     kmProbedTop5(post, kmProbeCells(q, cents))
+  }
+
+  /** THE generation rebuild shared by s32 and s45 — (new centroids,
+    * new postings) in the `<ns>r_*` stores, retrained on the drifted
+    * `<ns>_*` store. The drifted store is reached only from inside
+    * the two builds, so a repeat call (new generation landed) probes
+    * it and never re-runs the upsert fold. */
+  private def rebuiltGeneration(s: SparkSession, dir: String,
+      ns: String): (DataFrame, DataFrame) = {
+    lazy val stored = {
+      val (_, postPath) = upsertedPostings(s, dir, ns)
+      graft.ops.Subplan.once(s.read.parquet(postPath)
+        .select(col("vec_id"), col("v"), fixedPoint(col("v")).as("x")))
+    }
+    val cents = graft.sources.SessionStore.storedOrBuild(
+      s, s"${ns}r_cents", dir, Seq("cid")) { kmeansCentroids(stored) }
+    val post = graft.sources.SessionStore.storedOrBuild(
+      s, s"${ns}r_postings", dir, Seq("vec_id"), Seq("cid")) {
+      kmAssign(stored, cents).select(col("vec_id"), col("v"), col("cid"))
+    }
+    (cents, post)
   }
 
   /** The s45 body — s32's rebuild with the CUT-OVER completed: after
@@ -2123,45 +2138,14 @@ object Similarity {
     * [[graft.sources.SessionStore.retire]]. Sequencing is ordinary
     * statement order because the store builds are eager (first access
     * lands via Sink.write); the retire never races the answer because
-    * the answer reads only the NEW generation. ExtSpec pins: answer ≡
-    * the registered s32 rebuild row-for-row, the superseded directory
-    * gone from disk, the new generation's directory alive, and a
-    * repeat invocation reaching the same answer. */
+    * the answer reads only the NEW generation. A repeat call finds the
+    * new generation landed, never rebuilds the drifted one, and its
+    * retires are no-ops. ExtSpec pins: answer ≡ the registered s32
+    * rebuild row-for-row, the superseded directory gone from disk,
+    * the new generation's directory alive, and a repeat invocation
+    * reaching the same answer. */
   private def indexRebuildRetireQuery(s: SparkSession, dir: String): DataFrame = {
-    // The drifted generation exists only to TRAIN the new one (and to
-    // be retired). Once the new generation is landed, a repeat
-    // invocation used to REBUILD the superseded store just to delete
-    // it again — a full upsert-store build (~90% of the repeat's
-    // wall, round-18 decomposition in PLANS.md) whose output nothing
-    // reads. Gate the build on the new generation's liveness,
-    // checked DRIVER-SIDE BEFORE the s45r builds (hoisted, never
-    // inside their closures — the s37 nested-computeIfAbsent lock
-    // rule): cold path unchanged (full cycle: build drifted → train
-    // → land → retire), warm path = probe only + no-op retires. This
-    // is the same repeat-measures-the-delta discipline every other
-    // store query follows; answers are identical either way (ExtSpec
-    // pins repeat ≡ first, and the retire pins hold: the superseded
-    // directory stays gone).
-    val warm =
-      graft.sources.SessionStore.livePath("s45r_cents", dir).isDefined &&
-      graft.sources.SessionStore.livePath("s45r_postings", dir).isDefined
-    val stored0 = if (warm) None else Some {
-      val (_, postPath) = upsertedPostings(s, dir, "s45")
-      graft.ops.Subplan.once(
-        s.read.parquet(postPath)
-          .select(col("vec_id"), col("v"), fixedPoint(col("v")).as("x")))
-    }
-    def stored = stored0.get
-    val cents = graft.sources.SessionStore.storedOrBuild(
-      s, "s45r_cents", dir, Seq("cid")) { kmeansCentroids(stored) }
-    val post = graft.sources.SessionStore.storedOrBuild(
-      s, "s45r_postings", dir, Seq("vec_id"), Seq("cid")) {
-      kmAssign(stored, cents).select(col("vec_id"), col("v"), col("cid"))
-    }
-    // Cut over: the new generation is landed (eager builds above), so
-    // the drifted generation is now superseded — drop its directory
-    // and its model row store. Bounded: two paths, driver-side;
-    // no-ops on the warm path (already retired).
+    val (cents, post) = rebuiltGeneration(s, dir, "s45")
     graft.sources.SessionStore.retire(s, "s45_postings", dir)
     graft.sources.SessionStore.retire(s, "s45_cents", dir)
     val q = emb(s, dir).filter(col("vec_id") < 10)
@@ -2249,7 +2233,7 @@ object Similarity {
     * group); empty cells keep their previous centroid. The explode to
     * (sub, cid, xs) rows exists ONLY here, feeding the partial agg
     * directly (generator → hash-agg, no joins on the long form). */
-  private def pqUpdate(assigned: DataFrame, prev: DataFrame): DataFrame = {
+  private[graft] def pqUpdate(assigned: DataFrame, prev: DataFrame): DataFrame = {
     val long = assigned
       .select(col("vec_id"), posexplode(arrays_zip(col("codes"), col("subs"))))
       .select(col("pos").cast("int").as("sub"),
@@ -3246,9 +3230,9 @@ object Similarity {
       s, "s34_bands", dir, Seq("vec_id", "band")) {
       knnBands(all.filter(!annBatchVec))
     }
-    val delta = graft.ops.Subplan.once(knnInsertDelta(
+    val delta = knnInsertDelta(
       base, all, all.filter(annBatchVec).select(col("vec_id")),
-      corpusBands = Some(corpusBands)))
+      corpusBands = Some(corpusBands))
     // The touched partitions as STATIC pruning values — a bounded
     // ≤ [[KnnGraphParts]]-entry driver-side collect (deleteFromStore's
     // metadata-op discipline): the merge read opens ONLY those
@@ -3394,14 +3378,9 @@ object Similarity {
     * build + heal + refine once; repeats read the landed generation.
     * Emits the refined graph ranked. */
   private def knnGraphRefineQuery(s: SparkSession, dir: String): DataFrame = {
-    // Hoisted OUT of the generation-build block — a nested
-    // SessionStore.computeIfAbsent (refined build → base build) can
-    // lock the same map bin. Repeats therefore pay the heal delta +
-    // a generation read (the s32 precedent: its repeats re-run the
-    // upsert fold too).
-    val (_, postDel, fx) = knnPostDelete(s, dir, "s37")
     val refined = graft.sources.SessionStore.storedOrBuild(
       s, "s37r_graph", dir, Seq("v", "w"), Seq("pt")) {
+      val (_, postDel, fx) = knnPostDelete(s, dir, "s37")
       knnRefine(postDel, fx).withColumn("pt", ptCol(col("v")))
     }
     knnRanked(refined.select(col("v"), col("w"), col("d")))

@@ -1797,24 +1797,29 @@ object Text {
       selected.foreach { case (l, rh, c) =>
         out += ((out.size + 1, l, rh, c))
       }
-      // One vocab pass applies the whole batch in rank order — the
-      // bpeApplySegments replay with the batch as a LITERAL column
-      // (it is driver data already; no join at all).
-      if (selected.nonEmpty) {
-        val msLit = typedlit(selected.map { case (l, rh, _) => (l, rh) }.toSeq)
-        vocab = Subplan.once(
-          vocab.select(col("w"),
-            aggregate(msLit, col("syms"),
-              (accSyms, m) => bpeMergeFold(accSyms,
-                m.getField("_1"), m.getField("_2"))).as("syms"),
-            col("cnt")))
-      }
+      if (selected.nonEmpty)
+        vocab = Subplan.once(bpeApplyBatch(vocab,
+          selected.map { case (l, rh, _) => (l, rh) }.toSeq))
     }
     import spark.implicits._
     out.toSeq.toDF("merge_rank", "lhs", "rhs", "pair_count")
       .select(col("merge_rank").cast("int").as("merge_rank"),
         col("lhs"), col("rhs"), col("pair_count"))
   }
+
+  /** One batched round's vocab update: ONE vocab pass applies the
+    * whole selected batch in rank order — the [[bpeApplySegments]]
+    * replay with the batch as a LITERAL column (it is driver data
+    * already; no join at all). The [[bpeApplyWinner]] of t28: ONE
+    * statement for [[bpeBatchTrain]]'s round and the
+    * `bpe_batch_apply` row of PlanSpec's plan-shape ledger. */
+  private[graft] def bpeApplyBatch(vocab: DataFrame,
+      merges: Seq[(String, String)]): DataFrame =
+    vocab.select(col("w"),
+      aggregate(typedlit(merges), col("syms"),
+        (accSyms, m) => bpeMergeFold(accSyms,
+          m.getField("_1"), m.getField("_2"))).as("syms"),
+      col("cnt"))
 
   /** ONE application of a single BPE merge (lhs, rhs) to a symbol
     * array: the greedy left-to-right `aggregate` fold (acc's last

@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Shared-subplan materialization for DAG-shaped queries.
   *
@@ -38,6 +39,11 @@ object Subplan {
 
   /** Evaluate `df` exactly once, now, and return a DataFrame whose
     * plan reads the materialized partitions instead of re-deriving
-    * them. See object doc for lifecycle and failure semantics. */
-  def once(df: DataFrame): DataFrame = df.localCheckpoint()
+    * them. A frame that already IS a checkpoint comes back unchanged —
+    * a second checkpoint would only copy the same rows in one more
+    * eager job. See object doc for lifecycle and failure semantics. */
+  def once(df: DataFrame): DataFrame = df.queryExecution.analyzed match {
+    case r: LogicalRDD if r.rdd.isCheckpointed => df
+    case _ => df.localCheckpoint()
+  }
 }

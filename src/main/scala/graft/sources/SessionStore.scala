@@ -25,14 +25,55 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Staleness-safe by construction: the cache root is a fresh temp
   * directory per JVM, so a regenerated fixture can never meet a stale
   * store — across JVMs every run builds from the live corpus.
+  *
+  * Lifecycle: the key map only ever installs a cheap [[Holder]]; the
+  * build runs when the holder is first forced, OUTSIDE the map's lock.
+  * Callers of the same key wait on that holder and get its one
+  * result, so a key builds once per JVM (until retired). A build that
+  * throws drops its holder before anyone sees the failure: nothing is
+  * served, [[livePath]] is empty, and the next access runs its own
+  * build. Because no lock of the map is held during a build, a build
+  * may read other stores (s37's refine build reaches its base store,
+  * s32/s45's rebuilds reach their drifted stores); only a cycle of
+  * builds that reach each other would deadlock, and store names are
+  * acyclic by construction.
   */
 object SessionStore {
 
   private lazy val root =
     java.nio.file.Files.createTempDirectory("graft_store_").toString
 
-  private val built =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val built = new java.util.concurrent.ConcurrentHashMap[String, Holder]()
+
+  /** One key's build — run at most once, by the first caller that
+    * forces it, while holding only this holder's monitor. A failed
+    * build removes the holder from the map before releasing the
+    * monitor, so waiters rethrow the same failure and every later
+    * access installs a fresh holder. The thunk is dropped once run:
+    * what it captures (checkpointed inputs) must not outlive the build
+    * in a map that lives as long as the JVM. */
+  private final class Holder(key: String, private[this] var build: () => String) {
+    @volatile private[this] var outcome: Either[Throwable, String] = _
+
+    def force(): String = {
+      val o = synchronized {
+        if (outcome == null) {
+          outcome =
+            try Right(build())
+            catch { case e: Throwable => built.remove(key, this); Left(e) }
+          build = null
+        }
+        outcome
+      }
+      o.fold(e => throw e, identity)
+    }
+
+    /** The landed result, without waiting on a build in progress. */
+    def landed: Option[String] = Option(outcome).flatMap(_.toOption)
+  }
+
+  private def forced(key: String)(build: => String): String =
+    built.computeIfAbsent(key, k => new Holder(k, () => build)).force()
 
   /** The stored table for (`name`, `dir`): built + landed on first
     * access in this JVM, read back from parquet afterwards.
@@ -62,10 +103,10 @@ object SessionStore {
       buckets: Int, bucketCols: Seq[String])
       (build: => DataFrame): String = {
     val key = keyOf(name, dir)
-    built.computeIfAbsent(s"tbl:$key", _ => {
+    forced(s"tbl:$key") {
       Sink.writeBucketed(build, key, buckets, bucketCols)
       key
-    })
+    }
   }
 
   /** The stored table's PATH, building + landing it on first access —
@@ -77,11 +118,11 @@ object SessionStore {
       pk: Seq[String], partitionCols: Seq[String] = Nil)
       (build: => DataFrame): String = {
     val key = keyOf(name, dir)
-    built.computeIfAbsent(key, _ => {
+    forced(key) {
       val p = s"$root/$key"
       Sink.write(build, p, pk, partitionCols)
       p
-    })
+    }
   }
 
   // md5 of the full path, not String.hashCode: a 32-bit hash
@@ -92,12 +133,11 @@ object SessionStore {
       .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(16)
 
   /** The landed path of an already-built parquet store — None if this
-    * JVM has not built it (or has retired it). A liveness probe: specs
-    * use it, and so does s45's answer path, which checks that its new
-    * generation is live before deciding whether to rebuild the
-    * superseded store. No caller reads rows through the returned path. */
+    * JVM has not built it, has retired it, or its build failed or is
+    * still running. A liveness probe for specs; no caller reads rows
+    * through the returned path. */
   def livePath(name: String, dir: String): Option[String] =
-    Option(built.get(keyOf(name, dir)))
+    Option(built.get(keyOf(name, dir))).flatMap(_.landed)
 
   /** GENERATION GC — the store-lifecycle verb the rebuild arc was
     * missing: rebuilds land NEW generation directories (s32's
@@ -115,7 +155,7 @@ object SessionStore {
     * catalog tables live under the Spark warehouse and are overwritten
     * in place by their own rebuilds. */
   def retire(spark: SparkSession, name: String, dir: String): Boolean = {
-    val p = Option(built.remove(keyOf(name, dir)))
+    val p = Option(built.remove(keyOf(name, dir))).flatMap(_.landed)
     p.foreach { path =>
       val hp = new org.apache.hadoop.fs.Path(path)
       hp.getFileSystem(spark.sparkContext.hadoopConfiguration)

@@ -20,6 +20,26 @@ class PlanSpec extends AnyFunSuite {
     SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan)
   private def plan(name: String): String = physical(name).toString
 
+  test("Subplan.once of a checkpoint is that checkpoint: once(once(df)) " +
+      "runs one job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val df = spark.range(1000).selectExpr("id", "id * id AS sq")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val counter = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.ListenerDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(counter)
+    val twice = try {
+      val t = ops.Subplan.once(ops.Subplan.once(df))
+      org.apache.spark.ListenerDrain(spark.sparkContext)
+      t
+    } finally spark.sparkContext.removeSparkListener(counter)
+    assert(jobs.get == 1, s"once(once(df)) ran ${jobs.get} jobs")
+    assert(twice.collect().toSet == df.collect().toSet)
+  }
+
   test("q02: predicates push down to the parquet scan") {
     val p = plan("q02_filter_predicates")
     assert(p.contains("PushedFilters: ["), p)
@@ -985,11 +1005,17 @@ class PlanSpec extends AnyFunSuite {
     val fx = once(S.knnFx(all))
     val nbr = once(S.knnTopK(S.knnScore(S.knnInit(all), fx), S.KnnK))
     val q0 = once(S.knnQ0(fx, col("vec_id") < 10))
+    // Lloyd rounds of kmeansCentroids and pqCodebooks: each round
+    // re-assigns the corpus against the checkpointed model.
+    val kx = once(all.select(col("vec_id"), col("v"), S.fixedPoint(col("v")).as("x")))
+    val cents = S.kmeansCentroids(kx)
+    val subs = once(S.residFrame(kx, cents).select(col("vec_id"), col("subs")))
+    val pqc = S.pqCodebooks(subs)
     // Star contraction (d07/d08).
     val e = once(Dedup.ccCanon(
       Dedup.jaccardPairsPrefix(Dedup.shingles(spark, sf), 0.5)
         .select(col("doc_a").as("u"), col("doc_b").as("v"))))
-    // BPE merges (t24/t25): the winner is collected, as the loop does.
+    // BPE merges (t24/t25/t28): winners are collected, as the loops do.
     val docs = Text.docs(spark, sf)
     val vocab = once(Text.bpeVocab(docs))
     val best = Text.bpeBestPair(vocab).collect().head
@@ -1005,7 +1031,11 @@ class PlanSpec extends AnyFunSuite {
       "bpe_apply_winner" -> Text.bpeApplyWinner(vocab, best.getString(0),
         best.getString(1)),
       "uni_seg_counts" -> Text.uniSegCounts(wf, chars),
-      "uni_vocab_update" -> Text.uniVocabUpdate(chars, segCounts))
+      "uni_vocab_update" -> Text.uniVocabUpdate(chars, segCounts),
+      "km_lloyd_round" -> S.kmUpdate(S.kmAssign(kx, cents), cents),
+      "pq_lloyd_round" -> S.pqUpdate(S.pqEncode(subs, pqc), pqc),
+      "bpe_batch_apply" -> Text.bpeApplyBatch(vocab,
+        Seq(best.getString(0) -> best.getString(1))))
   }
 }
 

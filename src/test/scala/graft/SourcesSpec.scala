@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ccd.CcdOps
 import graft.ext.Dedup
-import graft.sources.{Sink, Timeseries}
+import graft.sources.{SessionStore, Sink, Timeseries}
 
 class SourcesSpec extends AnyFunSuite {
   import SparkTestSession._
@@ -189,5 +189,63 @@ class SourcesSpec extends AnyFunSuite {
       "rfrawp" -> "array<float>")
     val actual = seg.schema.fields.map(f => f.name -> f.dataType.simpleString).toSeq
     assert(actual == expected, s"schema drift:\n${actual.mkString("\n")}")
+  }
+
+  // SessionStore's per-key holder: builds run outside the map's lock.
+  private def ids(df: org.apache.spark.sql.DataFrame): Set[Long] =
+    df.collect().map(_.getLong(0)).toSet
+  private def firstIds(n: Int) =
+    graft.ext.Similarity.emb(spark, sf).select(col("vec_id"))
+      .filter(col("vec_id") < n)
+
+  test("SessionStore: a build that reads a second store builds both and " +
+      "serves both") {
+    def inner() = SessionStore.storedOrBuild(spark, "spec_nest_inner", sf,
+      Seq("vec_id")) { firstIds(5) }
+    val outer = SessionStore.storedOrBuild(spark, "spec_nest_outer", sf,
+      Seq("vec_id")) { inner().filter(col("vec_id") < 3) }
+    assert(ids(outer) == ids(firstIds(3)))
+    assert(ids(inner()) == ids(firstIds(5)))
+    assert(SessionStore.livePath("spec_nest_inner", sf).isDefined)
+    assert(SessionStore.livePath("spec_nest_outer", sf).isDefined)
+  }
+
+  test("SessionStore: two threads asking for one key run its build once") {
+    val builds = new java.util.concurrent.atomic.AtomicInteger
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val paths = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val callers = (1 to 2).map(_ => new Thread(() => {
+      start.await()
+      paths.add(SessionStore.pathOrBuild(spark, "spec_race", sf,
+        Seq("vec_id")) {
+        builds.incrementAndGet()
+        Thread.sleep(200) // both callers arrive while the build runs
+        firstIds(5)
+      })
+    }))
+    callers.foreach(_.start())
+    start.countDown()
+    callers.foreach(_.join())
+    assert(builds.get == 1, "one key was built more than once")
+    assert(paths.size == 2 && paths.stream().distinct().count() == 1)
+    assert(ids(spark.read.parquet(paths.peek())) == ids(firstIds(5)))
+  }
+
+  test("SessionStore: a build that throws leaves nothing; the next access " +
+      "builds and serves the right rows") {
+    var builds = 0
+    def stored(fail: Boolean) = SessionStore.storedOrBuild(spark,
+      "spec_fail", sf, Seq("vec_id")) {
+      builds += 1
+      // Fails inside the write job, after some tasks may have landed files.
+      firstIds(5).withColumn("ok", when(lit(fail) && col("vec_id") === 3,
+        raise_error(lit("injected build failure"))).otherwise(lit(0)))
+    }
+    intercept[Exception](stored(fail = true))
+    assert(SessionStore.livePath("spec_fail", sf).isEmpty,
+      "a failed build is still registered")
+    assert(ids(stored(fail = false)) == ids(firstIds(5)))
+    assert(builds == 2, "the access after a failure did not build")
+    assert(SessionStore.livePath("spec_fail", sf).isDefined)
   }
 }

@@ -1,0 +1,8 @@
+package org.apache.spark
+
+/** The listener bus's drain, which Spark keeps package-private: a spec
+  * that counts events with a listener reads its count only after every
+  * posted event has been delivered. */
+object ListenerDrain {
+  def apply(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}

@@ -1,6 +1,6 @@
 #!/usr/bin/env bash
-# Full pre-commit gauntlet: compile, specs, oracle parity, the two CLI
-# verbs' answer checks, bench.
+# Full pre-commit gauntlet: compile, specs, oracle parity, the
+# benchmark's self-checks, the two CLI verbs' answer checks, bench.
 # Usage: tools/gauntlet.sh  (from the repo root)
 set -euo pipefail
 cd "$(dirname "$0")/.."
@@ -12,6 +12,9 @@ echo "== verify + DuckDB oracle (sf0.01) =="
 out=$(mktemp -d)
 sbt -batch "runMain graft.Verify /root/testdata/sf0.01 $out" >/dev/null 2>&1
 python3 tools/check.py /root/testdata/sf0.01 "$out" | tail -1
+
+echo "== perfbench selfcheck (store-build attribution, generators, tail rule) =="
+python3 perfbench/selfcheck.py | tail -1
 
 echo "== verbs (perfbench ccdc_tile: planted breaks, prediction counts) =="
 verbs=$(python3 perfbench/run.py --workload ccdc_tile --seed 1 --seconds 5 --trace 0 | tail -1)
