@@ -27,6 +27,12 @@ object Similarity {
       .select(col("vec_id"), col("label"),
         col("embedding").cast("array<double>").as("v"))
 
+  /** The ten probe queries the ANN store queries search with:
+    * vec_id < 10, with the vector and its fixed-point form. */
+  private def probeQueries(s: SparkSession, dir: String): DataFrame =
+    emb(s, dir).filter(col("vec_id") < 10)
+      .select(col("vec_id"), col("v"), fixedPoint(col("v")).as("x"))
+
   /** Ordered-fold dot product of two array<double> columns — the
     * composable baseline kept for reference/tests. */
   private[graft] def dotFold(a: Column, b: Column): Column =
@@ -1330,8 +1336,7 @@ object Similarity {
       emb(s, dir).select(col("vec_id"), col("label"), col("v"),
         fixedPoint(col("v")).as("x")))
     val (cents, post) = s15Store(s, dir, fxOf)
-    val q = emb(s, dir).filter(col("vec_id") < 10)
-      .select(col("vec_id"), col("v"), fixedPoint(col("v")).as("x"))
+    val q = probeQueries(s, dir)
     // s15 ignores the stored label column — column pruning drops it
     // from the read schema, so the unfiltered probe pays nothing for
     // the metadata s23 filters on (one index serves both).
@@ -1874,8 +1879,7 @@ object Similarity {
     }
     deleteFromStore(s, postPath,
       emb(s, dir).filter(annDelVec).select(col("vec_id")))
-    val q = emb(s, dir).filter(col("vec_id") < 10)
-      .select(col("vec_id"), col("v"), fixedPoint(col("v")).as("x"))
+    val q = probeQueries(s, dir)
     kmProbedTop5(s.read.parquet(postPath), kmProbeCells(q, cents))
   }
 
@@ -1906,8 +1910,7 @@ object Similarity {
     }
     deleteFromStore(s, codesPath,
       emb(s, dir).filter(annDelVec).select(col("vec_id")))
-    val q = emb(s, dir).filter(col("vec_id") < 10)
-      .select(col("vec_id"), col("v"), fixedPoint(col("v")).as("x"))
+    val q = probeQueries(s, dir)
     pqAdcTop5(adcScored(s.read.parquet(codesPath), q, cents, pqc))
   }
 
@@ -2011,8 +2014,7 @@ object Similarity {
 
   private def kmeansUpsertQuery(s: SparkSession, dir: String): DataFrame = {
     val (cents, postPath) = upsertedPostings(s, dir, "s18")
-    val q = emb(s, dir).filter(col("vec_id") < 10)
-      .select(col("vec_id"), col("v"), fixedPoint(col("v")).as("x"))
+    val q = probeQueries(s, dir)
     kmProbedTop5(s.read.parquet(postPath), kmProbeCells(q, cents))
   }
 
@@ -2105,8 +2107,7 @@ object Similarity {
     * probed cells under dynamic partition pruning. */
   private def indexRebuildQuery(s: SparkSession, dir: String): DataFrame = {
     val (cents, post) = rebuiltGeneration(s, dir, "s32")
-    val q = emb(s, dir).filter(col("vec_id") < 10)
-      .select(col("vec_id"), col("v"), fixedPoint(col("v")).as("x"))
+    val q = probeQueries(s, dir)
     kmProbedTop5(post, kmProbeCells(q, cents))
   }
 
@@ -2148,8 +2149,7 @@ object Similarity {
     val (cents, post) = rebuiltGeneration(s, dir, "s45")
     graft.sources.SessionStore.retire(s, "s45_postings", dir)
     graft.sources.SessionStore.retire(s, "s45_cents", dir)
-    val q = emb(s, dir).filter(col("vec_id") < 10)
-      .select(col("vec_id"), col("v"), fixedPoint(col("v")).as("x"))
+    val q = probeQueries(s, dir)
     kmProbedTop5(post, kmProbeCells(q, cents))
   }
 
@@ -2487,8 +2487,7 @@ object Similarity {
     * PlanSpec's to pin, not the oracle's. */
   private def ivfadcStoredRerankQuery(s: SparkSession, dir: String): DataFrame = {
     val (cents, pqc, codes) = s21Store(s, dir)
-    val q = emb(s, dir).filter(col("vec_id") < 10)
-      .select(col("vec_id"), col("v"), fixedPoint(col("v")).as("x"))
+    val q = probeQueries(s, dir)
     exactRerankTail(s, dir, adcScored(codes, q, cents, pqc))
   }
 
@@ -3451,8 +3450,7 @@ object Similarity {
     * oracle-visible). */
   private def ivfadcStoredQuery(s: SparkSession, dir: String): DataFrame = {
     val (cents, pqc, codes) = s21Store(s, dir)
-    val q = emb(s, dir).filter(col("vec_id") < 10)
-      .select(col("vec_id"), col("v"), fixedPoint(col("v")).as("x"))
+    val q = probeQueries(s, dir)
     pqAdcTop5(adcScored(codes, q, cents, pqc))
   }
 
@@ -3555,8 +3553,7 @@ object Similarity {
       stored.join(touched, Seq("cid"), "left_semi").unionByName(batchCodes))
     graft.sources.Sink.write(merged, codesPath, Seq("vec_id"), Seq("cid"))
     val codes = s.read.parquet(codesPath)
-    val q = emb(s, dir).filter(col("vec_id") < 10)
-      .select(col("vec_id"), col("v"), fixedPoint(col("v")).as("x"))
+    val q = probeQueries(s, dir)
     pqAdcTop5(adcScored(codes, q, cents, pqc))
   }
 

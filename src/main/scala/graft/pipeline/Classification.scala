@@ -1,6 +1,17 @@
 package graft.pipeline
 
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
+import java.nio.file.{Files, Path}
+import java.time.LocalDateTime
+import java.util.Base64
+import java.util.zip.{ZipEntry, ZipInputStream, ZipOutputStream}
+
+import scala.jdk.CollectionConverters._
+import scala.util.Using
+import scala.util.control.NonFatal
+
 import org.apache.spark.ml.PipelineModel
+import org.apache.spark.ml.util.GraftMlBridge
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -92,28 +103,28 @@ object Classification {
       segments.join(chipIds, Seq("cx", "cy"), "left_semi"))
   }
 
-  /** Persist per-tile trained-model metadata (reference: tile records,
+  /** Persist a tile's trained model (reference: tile records,
     * ccdc/tile.py:16-43 + the driver-side write at ccdc/core.py:222-230
-    * — S8's single-row literal source + S6 typed sink). The model
-    * itself lands via spark.ml's writer; the tile row carries its
-    * path where the reference carried a serialized blob. */
+    * — S8's single-row literal source + S6 typed sink). The row carries
+    * the model itself, as the reference's did: `model` is the fitted
+    * pipeline in spark.ml's own directory format, written without a
+    * Spark job (see [[modelBlob]]), so the tile lands in one write.
+    * Dynamic partition overwrite on the full (tx, ty, name) identity
+    * gives the per-key last-write-wins upsert the reference's CQL PK
+    * provided — saving tile B must not erase tile A's record. */
   def saveTile(spark: SparkSession, model: PipelineModel, tx: Int, ty: Int,
       name: String, updated: String, outDir: String): Unit = {
     import spark.implicits._
-    // Model directory and tile-record partition are keyed by the full
-    // (tx, ty, name) identity; dynamic partition overwrite gives the
-    // per-key last-write-wins upsert the reference's CQL PK provided —
-    // saving tile B must not erase tile A's record.
-    val modelPath = s"$outDir/model/${tx}_${ty}_$name"
-    model.write.overwrite().save(modelPath)
-    Seq(TileRec(tx, ty, name, modelPath, updated)).toDF()
+    Seq(TileRec(tx, ty, name, modelBlob(model), updated)).toDF()
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("tx", "ty", "name")
       .parquet(s"$outDir/tile")
   }
 
-  /** Load a tile's model back (round-trip of saveTile). */
+  /** Load a tile's model back (round-trip of saveTile): the keyed read
+    * of its row, then the blob decoded. A row whose `model` is not a
+    * blob fails naming the tile and the model. */
   def loadTile(spark: SparkSession, outDir: String, tx: Int, ty: Int,
       name: String): Option[PipelineModel] = {
     import spark.implicits._
@@ -121,12 +132,72 @@ object Classification {
     Sink.readKeyed(spark, s"$outDir/tile", ids, Seq("tx", "ty"))
       .filter(col("name") === name)
       .collect().headOption
-      .map(r => PipelineModel.load(r.getAs[String]("model")))
+      .map { r =>
+        try modelOf(r.getAs[String]("model"))
+        catch { case NonFatal(e) => throw new IllegalStateException(
+          s"tile ($tx, $ty) model '$name': not a model blob", e) }
+      }
+  }
+
+  /** The fitted pipeline as one string: spark.ml's own writer saves it
+    * to a temp directory in local saving mode (plain files, no Spark
+    * job), and the directory is zipped — entries in sorted order with a
+    * fixed entry time, so equal directories give equal blobs — and
+    * base64-encoded (the reference's tile blob is a `StringType`). Java
+    * serialization of a `PipelineModel` does not round-trip. */
+  private def modelBlob(model: PipelineModel): String =
+    withTempDir { root =>
+      GraftMlBridge.localSaving(model.write.save(root.toString))
+      val files = Using.resource(Files.walk(root))(
+        _.iterator.asScala.filter(Files.isRegularFile(_)).toVector)
+        .map(p => root.relativize(p).iterator.asScala.mkString("/") -> p)
+        .sortBy(_._1)
+      val bytes = new ByteArrayOutputStream
+      Using.resource(new ZipOutputStream(bytes)) { zip =>
+        files.foreach { case (entry, p) =>
+          val e = new ZipEntry(entry)
+          e.setTimeLocal(LocalDateTime.of(1980, 1, 1, 0, 0))
+          zip.putNextEntry(e)
+          Files.copy(p, zip)
+          zip.closeEntry()
+        }
+      }
+      Base64.getEncoder.encodeToString(bytes.toByteArray)
+    }
+
+  /** Inverse of [[modelBlob]]: unzip into a temp directory and load it
+    * with spark.ml's reader in local saving mode. */
+  private def modelOf(blob: String): PipelineModel =
+    withTempDir { root =>
+      val zip = new ZipInputStream(
+        new ByteArrayInputStream(Base64.getDecoder.decode(blob)))
+      val entries = Using.resource(zip) { z =>
+        Iterator.continually(z.getNextEntry).takeWhile(_ != null).map { e =>
+          val p = root.resolve(e.getName).normalize()
+          require(p.startsWith(root), s"entry ${e.getName} leaves the model")
+          Files.createDirectories(p.getParent)
+          Files.copy(z, p)
+        }.size
+      }
+      require(entries > 0, "no zip entries")
+      GraftMlBridge.localSaving(PipelineModel.load(root.toString))
+    }
+
+  /** `f` over a fresh directory (not yet created) inside a temp
+    * directory that is deleted afterwards on every path. */
+  private def withTempDir[T](f: Path => T): T = {
+    val tmp = Files.createTempDirectory("graft-model")
+    try f(tmp.resolve("model"))
+    finally Using.resource(Files.walk(tmp))(
+      _.iterator.asScala.toVector.reverse.foreach(Files.delete))
   }
 
   /** Classify: segments (sday/eday ≥ epoch guard, reference
-    * ccdc/core.py:200) + aux → features → predictions joined back onto
-    * their segments (J4, ccdc/segment.py:103-116) and dedensified. */
+    * ccdc/core.py:200) + aux → features → predictions, dedensified.
+    * The reference joined predictions back onto their segments (J4,
+    * ccdc/segment.py:103-116); here every prediction row already
+    * carries its segment row's six keys, so that join could only
+    * repeat rows that the product write's dedup then drops. */
   def classify(model: PipelineModel, aux: Dataset[AuxRow],
       segments: DataFrame): DataFrame = {
     // Strict: excludes the empty-default placeholder segments
@@ -135,11 +206,6 @@ object Classification {
     val eligible = segments.filter(
       col("sday") > CcdOps.ordinalToIso(1) && col("eday") > CcdOps.ordinalToIso(1))
     val fdf = Features.dataframe(aux.toDF(), eligible)
-    val preds = Rf.classify(model, fdf)
-    val joined = segments
-      .join(preds, Seq("cx", "cy", "px", "py", "sday", "eday"), "inner")
-    Rf.dedensify(joined
-      .select(col("cx"), col("cy"), col("px"), col("py"),
-        col("sday"), col("eday"), col("rfrawp")))
+    Rf.dedensify(Rf.classify(model, fdf))
   }
 }

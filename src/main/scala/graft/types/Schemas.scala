@@ -63,6 +63,9 @@ case class ChipRec(cx: Int, cy: Int, dates: Seq[String])
 /** Per-pixel processing-mask record (reference: ccdc/pixel.py:14-21). */
 case class PixelRec(cx: Int, cy: Int, px: Int, py: Int, mask: Seq[Byte])
 
-/** Per-tile trained-model metadata (reference: ccdc/tile.py:16-25). */
+/** Per-tile trained model (reference: ccdc/tile.py:16-25): `model` is
+  * the model itself, a base64 zip of spark.ml's saved directory, where
+  * it once held the path of a `model/` directory; a `StringType`, as
+  * the reference's blob was. */
 case class TileRec(tx: Int, ty: Int, name: String, model: String,
     updated: String)

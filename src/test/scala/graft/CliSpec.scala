@@ -71,6 +71,11 @@ class CliSpec extends AnyFunSuite {
       "--aux", s"$dir/aux", "--segments", s"$dir/products/segment",
       "--out", s"$dir/products", "--trees", "5")).toOption.get, spark)
     assert(cl("predictions") > 0, s"classification landed nothing: $cl")
+    assert(!new java.io.File(s"$dir/products/model").exists(),
+      "the tile row carries the model; no model/ directory is written")
+    val tile = graft.grid.Grid.tileOf(-2565585, 3314805)
+    assert(pipeline.Classification.loadTile(spark, s"$dir/products",
+      tile.ulx.toInt, tile.uly.toInt, "rf-1-800000").nonEmpty)
   }
 
   test("classification reports only its own run's predictions on a shared --out") {
