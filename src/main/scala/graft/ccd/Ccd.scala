@@ -26,7 +26,7 @@ package graft.ccd
   * full-width sums.
   *
   * Everything here is per-pixel independent — the distributed form is a
-  * `Dataset.flatMap` (graft.ccd.CcdOps), which keeps this the single
+  * per-pixel `Dataset.map` (graft.ccd.CcdOps), which keeps this the single
   * non-codegen stage of the pipeline (SURVEY.md §7.4.5).
   */
 object Ccd {

@@ -16,7 +16,7 @@ import graft.types.ArdRow
   * Everything is a pure function of the input tables — rows are stable
   * across runs, which is what the rows-only check (no DuckDB oracle:
   * CCD isn't SQL-expressible) verifies. The real point is that the
-  * flagship operator — assemble → flatMap(ccd) → segments — runs and
+  * flagship operator — assemble → map(ccd) → explode(segments) — runs and
   * is benchmarked at every scale factor.
   */
 object CcdQueries {
@@ -62,6 +62,14 @@ object CcdQueries {
       .as[ArdRow]
   }
 
+  /** c01/c02's one frame: a row per segment, carrying its pixel's
+    * series length and mask length off the pixel row. */
+  private def supplierSegments(s: SparkSession, dir: String): DataFrame =
+    CcdOps.detect(supplierSeries(s, dir))
+      .select(size(col("dates")).as("n_obs"), size(col("mask")).as("n_mask"),
+        explode(col("segments")).as("seg"))
+      .select(col("seg.*"), col("n_obs"), col("n_mask"))
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Flagship CCDC operator over table-derived pixel series. Output:
     // per-segment key columns + fitted-window metadata (deterministic;
@@ -69,10 +77,9 @@ object CcdQueries {
     // below is its hash-checked invariant surface, and CcdSpec pins a
     // golden hash of this full output).
     "c01_ccd_segments" -> ((s, dir) => {
-      CcdOps.detect(supplierSeries(s, dir))
+      supplierSegments(s, dir)
         .select(col("cx"), col("px"), col("sday"), col("eday"),
-          col("bday"), col("curqa"),
-          size(col("dates")).as("n_obs"))
+          col("bday"), col("curqa"), col("n_obs"))
     }),
 
     // DuckDB-checkable invariant projection of c01 (the CCD kernel's
@@ -84,9 +91,7 @@ object CcdQueries {
     // from `lineitem` alone; any kernel regression flips a flag (or
     // shifts n_obs) and breaks the hash match.
     "c02_ccd_invariants" -> ((s, dir) => {
-      val seg = CcdOps.detect(supplierSeries(s, dir))
-        .select(col("cx"), col("sday"), col("eday"),
-          size(col("dates")).as("n_obs"), size(col("mask")).as("n_mask"))
+      val seg = supplierSegments(s, dir)
       val per = seg.groupBy(col("cx"))
         .agg(count(lit(1)).as("n_seg"),
           // Empty-default rows (sday = eday = ordinal 1) are exempt

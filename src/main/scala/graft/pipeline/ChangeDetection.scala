@@ -1,12 +1,12 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 import graft.ccd.CcdOps
 import graft.grid.Grid
-import graft.types.{ArdRow, Segment}
+import graft.types.{ArdRow, CcdPixel}
 
 /** The `changedetection` product pipeline (reference entry
   * ccdc/cli.py:25-48 → ccdc/core.py:78-124), as ONE Spark plan.
@@ -56,12 +56,12 @@ object ChangeDetection {
     * Returns (chips, pixels, segments) row counts landed by THIS batch
     * (the output table may hold other tiles' rows under upsert). */
   def run(ard: Dataset[ArdRow], outDir: String): (Long, Long, Long) = {
-    val segments: Dataset[Segment] = CcdOps.detect(ard)
+    val detected: Dataset[CcdPixel] = CcdOps.detect(ard)
       .persist(StorageLevel.MEMORY_AND_DISK) // reused by 3 sinks (ccdc/core.py:68-72)
     try {
-      val chips = CcdOps.chipRecords(segments)
-      val pixels = CcdOps.pixelRecords(segments)
-      val segs = CcdOps.segmentRecords(segments)
+      val chips = CcdOps.chipRecords(detected)
+      val pixels = CcdOps.pixelRecords(detected)
+      val segs = CcdOps.segmentRecords(detected)
       // Chip-prefix partitioned: a later run of another tile (or a
       // re-run of this one) replaces exactly the chips it carries —
       // the reference's chip-keyed Cassandra upsert (schema.cql:142).
@@ -78,13 +78,6 @@ object ChangeDetection {
       val nSegs = Landed.write(segs, s"$outDir/segment",
         Seq("cx", "cy", "px", "py", "sday", "eday"), Seq("cx", "cy"))
       (nChips, nPixels, nSegs)
-    } finally segments.unpersist()
-  }
-
-  /** Full entry: ARD parquet path + a point selecting the tile. */
-  def forTile(spark: SparkSession, ardPath: String, x: Double, y: Double,
-      outDir: String): (Long, Long, Long) = {
-    import spark.implicits._
-    run(tileScope(spark.read.parquet(ardPath).as[ArdRow], x, y), outDir)
+    } finally detected.unpersist()
   }
 }

@@ -5,10 +5,12 @@ package graft.types
   * ard/aux, ccdc/pyccd.py:39-81 for segments, ccdc/chip.py:15-22,
   * ccdc/pixel.py:14-21, ccdc/tile.py:16-25 for product records).
   *
-  * Dates deliberately stay ISO-8601 *strings* in persisted segment rows
-  * for schema parity with the reference (ccdc/pyccd.py:45-47); all
-  * filtering/compare logic uses ordinal ints internally and formats
-  * late (SURVEY.md §7.4.2).
+  * Dates deliberately stay ISO-8601 *strings* in the persisted segment
+  * and chip rows for schema parity with the reference
+  * (ccdc/pyccd.py:45-47, ccdc/chip.py:15-22); all filtering/compare
+  * logic uses ordinal ints internally and formats late (SURVEY.md
+  * §7.4.2). A pixel's date list and processing mask live once, on its
+  * [[CcdPixel]] row, never on its segments.
   */
 
 /** Per-pixel ARD spectral time series — parallel arrays, element i of
@@ -33,9 +35,11 @@ case class AuxRow(
     slope: Option[Seq[Float]],
     mpw: Option[Seq[Int]])
 
-/** One fitted CCD time segment for one pixel — the wide flat schema the
-  * reference persists (ccdc/pyccd.py:39-81; field-by-field population
-  * at ccdc/pyccd.py:106-148). Band prefixes: bl/gr/re/ni/s1/s2/th. */
+/** One fitted CCD time segment for one pixel — exactly the 37-field row
+  * the segment table persists (the reference's ccdc/pyccd.py:39-81
+  * without the per-pixel dates/mask and the prediction-only rfrawp;
+  * field-by-field population at ccdc/pyccd.py:106-148). Band prefixes:
+  * bl/gr/re/ni/s1/s2/th. */
 case class Segment(
     cx: Int, cy: Int, px: Int, py: Int,
     sday: String, eday: String, bday: String,
@@ -52,10 +56,16 @@ case class Segment(
     thcoef: Option[Seq[Float]],
     blint: Option[Float], grint: Option[Float], reint: Option[Float],
     niint: Option[Float], s1int: Option[Float], s2int: Option[Float],
-    thint: Option[Float],
-    dates: Seq[String],
-    mask: Option[Seq[Byte]],
-    rfrawp: Option[Seq[Float]])
+    thint: Option[Float])
+
+/** One pixel's change-detection result: its ordinal acquisition dates,
+  * its processing mask (aligned to `dates`) and its ≥1 segments. The
+  * chip, pixel and segment products are projections of these rows. */
+case class CcdPixel(
+    cx: Int, cy: Int, px: Int, py: Int,
+    dates: Seq[Int],
+    mask: Seq[Byte],
+    segments: Seq[Segment])
 
 /** Per-chip acquisition-date record (reference: ccdc/chip.py:15-22). */
 case class ChipRec(cx: Int, cy: Int, dates: Seq[String])

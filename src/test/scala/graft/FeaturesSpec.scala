@@ -26,8 +26,7 @@ class FeaturesSpec extends AnyFunSuite {
     recoef = Some(Seq(12f)), nicoef = Some(Seq(13f, 98f)),
     s1coef = Some(Seq(14f)), s2coef = Some(Seq(15f)), thcoef = None,
     blint = Some(20f), grint = Some(21f), reint = Some(22f),
-    niint = None, s1int = Some(24f), s2int = Some(25f), thint = Some(26f),
-    dates = Seq("2000-01-01"), mask = None, rfrawp = None)
+    niint = None, s1int = Some(24f), s2int = Some(25f), thint = Some(26f))
 
   private def aux(px: Int, label: Int): AuxRow = AuxRow(0, 0, px, 0,
     dates = Seq(730000, 730016), dem = Some(Seq(100.5f, 7f)),

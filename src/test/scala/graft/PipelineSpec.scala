@@ -28,6 +28,60 @@ class PipelineSpec extends AnyFunSuite {
     assert(pix.columns.sorted.toSeq == Seq("cx", "cy", "mask", "px", "py"))
   }
 
+  /** MD5 over a landed table: every column in name order, values
+    * rendered with arrays in brackets, rows sorted. */
+  private def tableDigest(path: String): String = {
+    val df = spark.read.parquet(path)
+    val cols = df.columns.sorted
+    def show(v: Any): String = v match {
+      case s: scala.collection.Seq[_] => s.map(show).mkString("[", ",", "]")
+      case x => String.valueOf(x)
+    }
+    val rows = df.select(cols.map(col): _*).collect()
+      .map(r => cols.indices.map(i => show(r.get(i))).mkString("|")).sorted
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(rows.mkString("\n").getBytes("UTF-8"))
+      .map("%02x".format(_)).mkString
+  }
+
+  test("change detection products match their pinned digests") {
+    // Every column of every landed row of the three products. Regenerate
+    // only for an intentional change to what the verb lands.
+    val out = Files.createTempDirectory("graft_cd_digest").toString
+    ChangeDetection.run(SyntheticArd(spark, 4), out)
+    val got = Seq("chip", "pixel", "segment").map(t => t -> tableDigest(s"$out/$t"))
+    assert(got == Seq(
+      "chip" -> "6350fe783a67a7062c95e5c61d47eb86",
+      "pixel" -> "ea1b4ad4e1bee4f061693e672f3e9ced",
+      "segment" -> "6cc41829fff49ec0f3bf8e73be502e61"), s"product digests drifted: $got")
+  }
+
+  test("a chip's dates are the lexicographic max of its pixels' ISO lists") {
+    import spark.implicits._
+    // Pixel 1 loses its last observation, pixel 2 its first: pixel 2's
+    // list starts latest, so it is the max although it is not the longest.
+    val ard = SyntheticArd(spark, 4).map { r =>
+      val keep: Int => Boolean = r.px - r.cx match {
+        case 30 => _ < r.dates.length - 1
+        case 60 => _ > 0
+        case _ => _ => true
+      }
+      def sel[T](xs: Seq[T]): Seq[T] = xs.indices.filter(keep).map(xs)
+      r.copy(dates = sel(r.dates), blues = sel(r.blues), greens = sel(r.greens),
+        reds = sel(r.reds), nirs = sel(r.nirs), swir1s = sel(r.swir1s),
+        swir2s = sel(r.swir2s), thermals = sel(r.thermals), qas = sel(r.qas))
+    }
+    val lists = ard.collect().map(_.dates.map(CcdOps.ordinalToIso))
+    assert(lists.map(_.length).toSet == Set(79, 80), "pixels must differ in dates")
+    val out = Files.createTempDirectory("graft_cd_chipdates").toString
+    ChangeDetection.run(ard, out)
+    val chip = spark.read.parquet(s"$out/chip").collect()
+    assert(chip.length == 1)
+    val want = lists.max(Ordering.Implicits.seqOrdering[Seq, String])
+    assert(want.head == CcdOps.ordinalToIso(730016) && want.length == 79)
+    assert(chip.head.getAs[scala.collection.Seq[String]]("dates") == want)
+  }
+
   test("change detection counts only this batch's rows on a shared --out") {
     import spark.implicits._
     val out = Files.createTempDirectory("graft_cd_shared").toString

@@ -165,9 +165,27 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("segment schema parity: field names and types match the reference") {
+    // Pinned on the tables the two verbs land, each field on the table
+    // that persists it: the segment table's reference fields, pixel
+    // mask, chip dates and prediction rfrawp.
     import spark.implicits._
-    val seg = CcdOps.detect(SyntheticArd(spark, 1)).toDF()
-    // reference ccdc/pyccd.py:39-81 field order
+    val dir = java.nio.file.Files.createTempDirectory("graft_schema").toString
+    SyntheticArd(spark, 4).write.parquet(s"$dir/ard")
+    spark.createDataset((0 until 4).map { p =>
+      types.AuxRow(-2565585, 3314805, -2565585 + p * 30, 3314805 - p * 30,
+        Seq(730000), Some(Seq(100.0f + p)), Seq(1 + p % 2),
+        Some(Seq(10 * p)), Some(Seq(0.5f)), Some(Seq(2.0f)), Some(Seq(1)))
+    }).write.parquet(s"$dir/aux")
+    def verb(args: String*) = Cli.run(Cli.parse(args).toOption.get, spark)
+    verb("changedetection", "-x", "-2565585", "-y", "3314805",
+      "--ard", s"$dir/ard", "--out", s"$dir/out")
+    verb("classification", "-x", "-2565585", "-y", "3314805", "-s", "1",
+      "-e", "800000", "--aux", s"$dir/aux", "--segments", s"$dir/out/segment",
+      "--out", s"$dir/out", "--trees", "3")
+    def fields(table: String) = spark.read.parquet(s"$dir/out/$table")
+      .schema.fields.map(f => f.name -> f.dataType.simpleString).toSeq
+    // reference ccdc/pyccd.py:39-81 field order, less its per-pixel
+    // dates/mask and the prediction-only rfrawp
     val expected = Seq(
       "cx" -> "int", "cy" -> "int", "px" -> "int", "py" -> "int",
       "sday" -> "string", "eday" -> "string", "bday" -> "string",
@@ -184,11 +202,15 @@ class SourcesSpec extends AnyFunSuite {
       "thcoef" -> "array<float>",
       "blint" -> "float", "grint" -> "float", "reint" -> "float",
       "niint" -> "float", "s1int" -> "float", "s2int" -> "float",
-      "thint" -> "float",
-      "dates" -> "array<string>", "mask" -> "array<tinyint>",
-      "rfrawp" -> "array<float>")
-    val actual = seg.schema.fields.map(f => f.name -> f.dataType.simpleString).toSeq
-    assert(actual == expected, s"schema drift:\n${actual.mkString("\n")}")
+      "thint" -> "float")
+    assert(expected.length == 37)
+    // the chip key is the partition key: it reads back last
+    val (chipKey, rest) = expected.partition(f => Set("cx", "cy")(f._1))
+    val actual = fields("segment")
+    assert(actual == rest ++ chipKey, s"schema drift:\n${actual.mkString("\n")}")
+    assert(fields("pixel").contains("mask" -> "array<tinyint>"))
+    assert(fields("chip").contains("dates" -> "array<string>"))
+    assert(fields("prediction").contains("rfrawp" -> "array<float>"))
   }
 
   // SessionStore's per-key holder: builds run outside the map's lock.
