@@ -37,7 +37,7 @@ object Soak {
         case "--knn-ins" =>
           val all = corpus
           val existing = ops.Subplan.once(all.filter(!ext.Similarity.annBatchVec))
-          val base = ext.Similarity.knnDescentGraph(existing)
+          val base = ops.Subplan.once(ext.Similarity.knnDescentGraph(existing))
           val batchIds = all.filter(ext.Similarity.annBatchVec)
             .select(col("vec_id"))
           fixpoint(sfDir, "knn-ins", rounds)(r =>
@@ -47,7 +47,7 @@ object Soak {
         case "--knn-ref" =>
           val all = corpus
           val fx = ops.Subplan.once(ext.Similarity.knnFx(all))
-          val base = ext.Similarity.knnDescentGraph(all)
+          val base = ops.Subplan.once(ext.Similarity.knnDescentGraph(all))
           val delIds = all.filter(ext.Similarity.annDelVec).select(col("vec_id"))
           val healed = ops.Subplan.once(
             ext.Similarity.knnDeleteHeal(base, fx, delIds))

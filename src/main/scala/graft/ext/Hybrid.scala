@@ -92,7 +92,7 @@ object Hybrid {
       .join(broadcast(nd), "one")
       .select(col("term"),
         (qlog2(col("n") + 1) - qlog2(col("df") + 1)).as("idfq"))
-    val qw = graft.ops.Subplan.once(qterms.join(w, Seq("term")))
+    val qw = qterms.join(w, Seq("term"))
     // Lexical scores: the postings scan streams through the broadcast
     // query-term join; contributions partial-aggregate on (qid, item).
     val lexScore = idx.join(broadcast(qw), Seq("term"))
@@ -261,7 +261,7 @@ object Hybrid {
     val stats = bm25StatsOf(dl)
     val w = bm25IdfOf(idx, stats,
       Some(qterms.select(col("term")).distinct()))
-    val qw = graft.ops.Subplan.once(qterms.join(w, Seq("term")))
+    val qw = qterms.join(w, Seq("term"))
     bm25Top(bm25ScoredOver(idx, qw, bm25LdOf(dl, stats), Seq("term")))
   }
 
@@ -376,11 +376,11 @@ object Hybrid {
           .otherwise(lit(0L)).as("theta"))
     // Phase 2: admit blocks whose summed per-term bounds can reach θ.
     val cand = qimp.select(col("qid"), col("block")).distinct()
-    val admitted = graft.ops.Subplan.once(
-      qimp.groupBy(col("qid"), col("block")).agg(sum(col("ub")).as("ub"))
-        .join(theta, Seq("qid"), "left")
-        .filter(col("ub") >= coalesce(col("theta"), lit(0L)))
-        .select(col("qid"), col("block")))
+    val admitted = qimp.groupBy(col("qid"), col("block"))
+      .agg(sum(col("ub")).as("ub"))
+      .join(broadcast(theta), Seq("qid"), "left")
+      .filter(col("ub") >= coalesce(col("theta"), lit(0L)))
+      .select(col("qid"), col("block"))
     val answer = bm25Top(bm25ScoredOver(idx,
       qw.join(admitted, Seq("qid")), ld, Seq("term", "block")))
     (cand, admitted, answer)
@@ -450,8 +450,7 @@ object Hybrid {
     // has no such gram to ask about — emitted nowhere, honestly).
     val qn = q0.groupBy(col("qid")).agg(count(lit(1)).as("nq"))
       .filter(col("nq") === len).select(col("qid"))
-    val q = graft.ops.Subplan.once(
-      q0.join(broadcast(qn), Seq("qid"), "left_semi"))
+    val q = q0.join(broadcast(qn), Seq("qid"), "left_semi")
     val votes = t41Pos(s, dir).join(broadcast(q), Seq("term"))
       .select(col("qid"), col("i"), explode(col("entries")).as("e"))
       .filter(col("e.doc_id") =!= col("qid"))

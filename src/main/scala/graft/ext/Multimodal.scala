@@ -371,7 +371,7 @@ object Multimodal {
     // position-sensitive hash). The oracle recomputes the hash and
     // pairs exhaustively, so banding must lose nothing.
     "m06_ahash_pairs" -> ((s, dir) =>
-      Dedup.simhashPairs(ahashSigs(s, dir), 3)
+      ahashPairs(s, dir)
         .select(col("doc_a").as("media_a"), col("doc_b").as("media_b"),
           col("hamming"))),
 
@@ -386,8 +386,7 @@ object Multimodal {
     // lose nothing.
     "m07_media_clusters" -> ((s, dir) =>
       Dedup.connectedComponents(
-          Dedup.simhashPairs(ahashSigs(s, dir), 3)
-            .select(col("doc_a"), col("doc_b")))
+          ahashPairs(s, dir).select(col("doc_a"), col("doc_b")))
         .select(col("u").as("media_id"), col("lbl").as("cluster_id"))),
 
     // Incremental MEDIA-cluster maintenance — the third instantiation
@@ -499,7 +498,7 @@ object Multimodal {
         |  i -> cast(conv(substring(md5(substring(text, i, 32)), 1, 9),
         |            16, 10) as bigint))""".stripMargin))
 
-  /** The materialized aHash signature set over the m06 fixture — ONE
+  /** The aHash signature set over the m06 fixture — ONE
     * Spark-side definition for the m06 pair query and the m07 cluster
     * query (the oracle side shares [[ahashCte]] for the same reason):
     * a signature-pipeline change can never land in one and miss the
@@ -507,10 +506,15 @@ object Multimodal {
     * components of m06's pairs. */
   private[graft] def ahashSigs(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.ops.Subplan.once(
-      m06Base(s, dir).mapPartitions(StubDecoders.ahash60)
-        .toDF("doc_id", "simhash"))
+    m06Base(s, dir).mapPartitions(StubDecoders.ahash60)
+      .toDF("doc_id", "simhash")
   }
+
+  /** m06's hamming ≤ 3 signature pairs, which m07 contracts. The
+    * banded self-join reads the signatures twice, so they are
+    * checkpointed here; m09's store build reads them once. */
+  private def ahashPairs(s: SparkSession, dir: String): DataFrame =
+    Dedup.simhashPairs(graft.ops.Subplan.once(ahashSigs(s, dir)), 3)
 
   /** m06's fixture base: originals plus an in-place single-byte-edited
     * twin at media_id + 10⁹ (same length, so aHash cell boundaries

@@ -623,9 +623,8 @@ object Text {
     // d11's incremental dedup: merge a small NEW batch into the big
     // EXISTING blocked index (t19's layout) touching ONLY the (term,
     // block) rows the batch lands in. The asymmetry is the scale
-    // story: the existing index materializes once (Subplan.once — in
-    // deployment it IS the stored index; the checkpoint stands in for
-    // the table scan), and the batch side's touched keys and entries
+    // story: the existing index is the landed store, read by one
+    // scan, and the batch side's touched keys and entries
     // BROADCAST into every join, so the existing postings never
     // shuffle — untouched rows are never even rewritten. The "tiny
     // batch" premise is ENFORCED, not assumed: the hints are
@@ -650,13 +649,12 @@ object Text {
       // the landed postings and times the touched-key probe + merge
       // — the per-batch work — not the full corpus re-index. ONE
       // build statement (blockedEntries) with t19 and t39.
-      val existing = graft.ops.Subplan.once(
-        graft.sources.SessionStore.storedOrBuild(s, "t21_index", dir,
-          Seq("term", "block"))(
-          blockedEntries(base.filter(!col("is_batch")))))
-      // The batch slice feeds BOTH the touched-key probe and the merge
-      // — materialize once (the `existing` discipline three lines up)
-      // so the tokenize + double aggregation doesn't run twice.
+      val existing = graft.sources.SessionStore.storedOrBuild(s,
+        "t21_index", dir, Seq("term", "block"))(
+        blockedEntries(base.filter(!col("is_batch"))))
+      // The batch slice feeds the gate's count, the touched-key probe
+      // and the merge — materialize once so the tokenize + double
+      // aggregation doesn't run three times.
       val delta = graft.ops.Subplan.once(
         blockedEntries(base.filter(col("is_batch")))
           .withColumnRenamed("entries", "new_entries"))
@@ -1660,8 +1658,8 @@ object Text {
     * syms/cnt); ONE loop serves both queries. */
   private[graft] def bpeTrainFull(d: DataFrame,
       rounds: Int): (DataFrame, DataFrame) = {
-    import graft.ops.{ConstKey, Subplan}
-    var vocab = Subplan.once(bpeVocab(d))
+    import graft.ops.Subplan
+    var vocab = bpeVocab(d)
     // The winner is collected, not checkpointed (round-18 cut): ONE
     // bounded row per round — the t28/d21 driver-side-constant
     // discipline — and folding it as literals makes the vocab update
@@ -1672,28 +1670,30 @@ object Text {
     // selection semantics are bpeBestPair's verbatim.
     val spark = d.sparkSession
     import spark.implicits._
+    // A round's input vocab is read by its pair count and by the next
+    // round, so it is checkpointed; the last round's input is read by
+    // its count and at most once more, by a caller of the final vocab.
     val merged = (1 to rounds).flatMap { r =>
-      val bestRow = bpeBestPair(vocab).collect()
-      bestRow.headOption.map { b =>
+      if (r < rounds) vocab = Subplan.once(vocab)
+      bpeBestPair(vocab).collect().headOption.map { b =>
         val (lhs, rhs, cnt) =
           (b.getString(0), b.getString(1), b.getLong(2))
-        vocab = Subplan.once(bpeApplyWinner(vocab, lhs, rhs))
+        vocab = bpeApplyWinner(vocab, lhs, rhs)
         (r, lhs, rhs, cnt)
       }
     }
     (merged.toDF("merge_rank", "lhs", "rhs", "pair_count"), vocab)
   }
 
-  /** One merge round's winner off the current vocab frontier:
+  /** The `n` best merge candidates off the current vocab frontier:
     * exact-integer adjacent-pair counts — each in-word occurrence
     * weighted by the word's corpus frequency (the t22 bigram zip —
     * no per-position row explosion survives past the partial agg) —
-    * then the total deterministic winner: count desc, (lhs, rhs) asc
-    * (binary UTF-8 string order on both engines). Materialized once
-    * by the caller; both the merge table and the application join
-    * read those rows. ONE statement for [[bpeTrainFull]]'s round and
-    * the `bpe_best_pair` row of PlanSpec's plan-shape ledger. */
-  private[graft] def bpeBestPair(vocab: DataFrame): DataFrame =
+    * in the total deterministic winner order: count desc, (lhs, rhs)
+    * asc (binary UTF-8 string order on both engines). ONE statement
+    * for [[bpeTrainFull]]'s winner and [[bpeBatchTrain]]'s candidate
+    * window. */
+  private[graft] def bpeTopPairs(vocab: DataFrame, n: Int): DataFrame =
     vocab.filter(size(col("syms")) >= 2)
       .select(col("cnt"), explode(arrays_zip(
         slice(col("syms"), lit(1), size(col("syms")) - 1),
@@ -1701,7 +1701,12 @@ object Text {
       .groupBy(col("z.0").as("lhs"), col("z.1").as("rhs"))
       .agg(sum(col("cnt")).as("pair_count"))
       .orderBy(col("pair_count").desc, col("lhs").asc, col("rhs").asc)
-      .limit(1)
+      .limit(n)
+
+  /** One merge round's winner: [[bpeTopPairs]]'s `n = 1` case, and the
+    * `bpe_best_pair` row of PlanSpec's plan-shape ledger. */
+  private[graft] def bpeBestPair(vocab: DataFrame): DataFrame =
+    bpeTopPairs(vocab, 1)
 
   /** One merge round's vocab update: fold the collected winner —
     * literal (lhs, rhs) — into every word's symbol sequence, a pure
@@ -1765,22 +1770,18 @@ object Text {
       batch: Int): DataFrame = {
     import graft.ops.Subplan
     val spark = d.sparkSession
-    var vocab = Subplan.once(bpeVocab(d))
+    var vocab = bpeVocab(d)
     val out = scala.collection.mutable.ArrayBuffer[(Int, String, String, Long)]()
-    for (_ <- 1 to rounds) {
+    for (round <- 1 to rounds) {
+      // The round-input rule of bpeTrainFull; the final vocab is
+      // never read.
+      if (round < rounds) vocab = Subplan.once(vocab)
       // Candidate WINDOW = 4×batch pairs in the exact t24 winner
       // order: on natural text the very top pairs share symbols (the
       // 'e'/'t' cluster), so a window exactly `batch` wide starves
       // the batch; the wider window lets lower-ranked disjoint pairs
       // fill it while the SELECTED count stays capped at `batch`.
-      val cand = vocab.filter(size(col("syms")) >= 2)
-        .select(col("cnt"), explode(arrays_zip(
-          slice(col("syms"), lit(1), size(col("syms")) - 1),
-          slice(col("syms"), lit(2), size(col("syms")) - 1))).as("z"))
-        .groupBy(col("z.0").as("lhs"), col("z.1").as("rhs"))
-        .agg(sum(col("cnt")).as("pair_count"))
-        .orderBy(col("pair_count").desc, col("lhs").asc, col("rhs").asc)
-        .limit(batch * 4)
+      val cand = bpeTopPairs(vocab, batch * 4)
         .collect()
         .map(r => (r.getAs[String]("lhs"), r.getAs[String]("rhs"),
           r.getAs[Long]("pair_count")))
@@ -1798,8 +1799,8 @@ object Text {
         out += ((out.size + 1, l, rh, c))
       }
       if (selected.nonEmpty)
-        vocab = Subplan.once(bpeApplyBatch(vocab,
-          selected.map { case (l, rh, _) => (l, rh) }.toSeq))
+        vocab = bpeApplyBatch(vocab,
+          selected.map { case (l, rh, _) => (l, rh) }.toSeq)
     }
     import spark.implicits._
     out.toSeq.toDF("merge_rank", "lhs", "rhs", "pair_count")

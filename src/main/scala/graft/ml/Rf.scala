@@ -15,18 +15,20 @@ object Rf {
 
   /** StringIndexer → VectorIndexer → RF(numTrees). Reference pins
     * numTrees=500, maxCategories=8 (ccdc/randomforest.py:36-39);
-    * numTrees is a parameter so tests can train small forests. */
+    * numTrees is a parameter so tests can train small forests. The
+    * pipeline and its stages carry fixed uids, so a saved model
+    * depends on the fit alone. */
   def pipeline(numTrees: Int = 500): Pipeline = {
-    val lindex = new StringIndexer()
+    val lindex = new StringIndexer("rf_label_index")
       .setInputCol("label").setOutputCol("label_index")
       .setHandleInvalid("keep")
-    val findex = new VectorIndexer()
+    val findex = new VectorIndexer("rf_feature_index")
       .setInputCol("features").setOutputCol("feature_index")
       .setMaxCategories(8)
-    val rf = new RandomForestClassifier()
+    val rf = new RandomForestClassifier("rf_forest")
       .setLabelCol("label_index").setFeaturesCol("feature_index")
       .setNumTrees(numTrees).setSeed(42L)
-    new Pipeline().setStages(Array(lindex, findex, rf))
+    new Pipeline("rf_pipeline").setStages(Array(lindex, findex, rf))
   }
 
   /** Train over a features dataframe; None when no training rows

@@ -22,6 +22,17 @@ import org.apache.spark.sql.execution.LogicalRDD
   * checkpointed partitions; the final plan's leaves are `ExistingRDD`,
   * zero parquet re-scans (PlanSpec pins this).
   *
+  * A checkpoint needs two readers. One eager job and one block-manager
+  * copy buy nothing when a single plan reads the result: that plan
+  * could compute the rows itself. So a frame is checkpointed where it
+  * is read at least twice, by the caller that reuses it, and a loop
+  * checkpoints each round's input — which the round reads again —
+  * not its output, so the final round stays lazy for whoever reads
+  * it. PlanSpec's checkpoint census fails on any checkpoint a
+  * registered query makes that is read fewer than twice;
+  * `Sink.write`'s guard against overwriting the files it reads is
+  * its only exemption.
+  *
   * Lifecycle: unlike `Dataset.persist` — whose CacheManager entry
   * holds the plan strongly and therefore pins executor storage until
   * an explicit `unpersist` that a lazily-returned plan can never issue

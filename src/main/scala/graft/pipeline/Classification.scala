@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
+import java.nio.charset.StandardCharsets.ISO_8859_1
 import java.nio.file.{Files, Path}
 import java.time.LocalDateTime
 import java.util.Base64
@@ -142,9 +143,10 @@ object Classification {
   /** The fitted pipeline as one string: spark.ml's own writer saves it
     * to a temp directory in local saving mode (plain files, no Spark
     * job), and the directory is zipped — entries in sorted order with a
-    * fixed entry time, so equal directories give equal blobs — and
-    * base64-encoded (the reference's tile blob is a `StringType`). Java
-    * serialization of a `PipelineModel` does not round-trip. */
+    * fixed entry time and save stamps zeroed, so equal models give
+    * equal blobs — and base64-encoded (the reference's tile blob is a
+    * `StringType`). Java serialization of a `PipelineModel` does not
+    * round-trip. */
   private def modelBlob(model: PipelineModel): String =
     withTempDir { root =>
       GraftMlBridge.localSaving(model.write.save(root.toString))
@@ -158,12 +160,24 @@ object Classification {
           val e = new ZipEntry(entry)
           e.setTimeLocal(LocalDateTime.of(1980, 1, 1, 0, 0))
           zip.putNextEntry(e)
-          Files.copy(p, zip)
+          zip.write(zeroStamps(Files.readAllBytes(p)))
           zip.closeEntry()
         }
       }
       Base64.getEncoder.encodeToString(bytes.toByteArray)
     }
+
+  /** spark.ml stamps each metadata record, the trees' too, with the
+    * time of the save, and gives each fitted tree a random uid. Both
+    * are zeroed in place, the stamp padded with JSON whitespace, so the
+    * length that prefixes a record in the binary array files stays the
+    * same. */
+  private def zeroStamps(bytes: Array[Byte]): Array[Byte] = {
+    val uids = """("uid":"\w+_)[0-9a-f]{12}"""".r.replaceAllIn(
+      new String(bytes, ISO_8859_1), m => m.group(1) + "0" * 12 + "\"")
+    """"timestamp":(\d+)""".r.replaceAllIn(uids,
+      m => "\"timestamp\":0" + " " * (m.group(1).length - 1)).getBytes(ISO_8859_1)
+  }
 
   /** Inverse of [[modelBlob]]: unzip into a temp directory and load it
     * with spark.ml's reader in local saving mode. */

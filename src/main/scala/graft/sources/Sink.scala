@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.broadcast
 
@@ -30,16 +31,31 @@ object Sink {
     * With `partitionCols` empty the write is a FULL REFRESH of `path`
     * — a second batch erases rows not in it. Use that only for
     * tables rebuilt wholesale.
+    *
+    * A `df` that reads files under `path` (an upsert merging a batch
+    * into the stored rows of the partitions it touches) is
+    * materialized first, so the overwrite never reads the files it
+    * replaces.
     */
   def write(df: DataFrame, path: String, pk: Seq[String],
       partitionCols: Seq[String] = Nil): Unit = {
-    val deduped = if (pk.nonEmpty) df.dropDuplicates(pk) else df
+    val src = if (readsUnder(df, path)) graft.ops.Subplan.once(df) else df
+    val deduped = if (pk.nonEmpty) src.dropDuplicates(pk) else src
     if (partitionCols.nonEmpty)
       deduped.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy(partitionCols: _*)
         .parquet(path)
     else deduped.write.mode("overwrite").parquet(path)
+  }
+
+  /** Whether any input file of `df` lies under `path`, compared as
+    * qualified Hadoop paths. */
+  private def readsUnder(df: DataFrame, path: String): Boolean = {
+    val fs = new Path(path).getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+    val dir = fs.makeQualified(new Path(path))
+    df.inputFiles.exists(f => Iterator.iterate(fs.makeQualified(new Path(f)))(_.getParent)
+      .takeWhile(_ != null).contains(dir))
   }
 
   /** Bucketed managed-table write (SURVEY.md §7.4.5: product tables

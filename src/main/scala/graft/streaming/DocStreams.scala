@@ -1158,7 +1158,7 @@ object DocStreams extends Serializable {
         fixed(batchDs.toDF().select(col("vec_id"), col("v"))))
       if (fx.isEmpty) return
       val cents = centsDf.getOrElse {
-        val c = graft.ext.Similarity.kmeansCentroids(fx)
+        val c = graft.ops.Subplan.once(graft.ext.Similarity.kmeansCentroids(fx))
         centsDf = Some(c)
         c
       }
@@ -1271,10 +1271,10 @@ object DocStreams extends Serializable {
       val (cents, pqc) = (centsDf, pqcDf) match {
         case (Some(c), Some(p)) => (c, p)
         case _ =>
-          val c = graft.ext.Similarity.kmeansCentroids(fx)
-          val p = graft.ext.Similarity.pqCodebooks(
+          val c = graft.ops.Subplan.once(graft.ext.Similarity.kmeansCentroids(fx))
+          val p = graft.ops.Subplan.once(graft.ext.Similarity.pqCodebooks(
             graft.ext.Similarity.residFrame(fx, c)
-              .select(col("vec_id"), col("subs")))
+              .select(col("vec_id"), col("subs"))))
           centsDf = Some(c); pqcDf = Some(p)
           (c, p)
       }
@@ -1380,7 +1380,7 @@ object DocStreams extends Serializable {
       graphDf match {
         case None =>
           allDf = Some(b)
-          val g0 = graft.ext.Similarity.knnDescentGraph(b)
+          val g0 = graft.ops.Subplan.once(graft.ext.Similarity.knnDescentGraph(b))
           bootDf = Some(g0)
           graphDf = Some(g0)
         case Some(g) =>
@@ -1423,8 +1423,8 @@ object DocStreams extends Serializable {
       * before bootstrap. */
     def refine(): Unit =
       for (g <- graphDf; all <- allDf)
-        graphDf = Some(graft.ext.Similarity.knnRefine(g,
-          graft.ext.Similarity.knnFx(all)))
+        graphDf = Some(graft.ops.Subplan.once(graft.ext.Similarity.knnRefine(g,
+          graft.ext.Similarity.knnFx(all))))
 
     /** The live s38 — [[graft.ext.Similarity.graphDriftStats]] (ONE
       * definition) of the maintained lists against the BOOTSTRAP

@@ -247,12 +247,12 @@ class PlanSpec extends AnyFunSuite {
       s"a sort-merge would shuffle the existing postings — the regression " +
         s"the broadcast exists to prevent:\n$p")
     assert(p.contains("ExistingRDD"),
-      s"the existing index is the materialized store-in for the stored " +
-        s"table — the delta path must read it, not rebuild it:\n$p")
+      s"the batch delta is materialized once — the touched-key probe and " +
+        s"the merge must read it, not re-tokenize the batch:\n$p")
     assert(!p.contains("BroadcastNestedLoopJoin") && !p.contains("CartesianProduct"), p)
     // The registered fixture sits under the T21BroadcastMaxKeys gate, so
-    // the delta path must be shuffle-FREE end to end: both sides read
-    // checkpoints, both joins broadcast the batch-derived side, the
+    // the delta path must be shuffle-FREE end to end: the existing side
+    // reads the landed store, both joins broadcast the batch-derived side, the
     // merge is row-local. One hash exchange here means the existing
     // index shuffled — the exact regression the gate's broadcast branch
     // exists to prevent.
@@ -993,6 +993,17 @@ class PlanSpec extends AnyFunSuite {
       s"change that moved them:\n  " + diffs.mkString("\n  "))
   }
 
+  test("checkpoint census: every checkpoint a registered query makes is " +
+      "read at least twice") {
+    // Runs last: it evaluates every query twice, which warms the
+    // session stores the per-query plans above are built against.
+    val bad = CheckpointCensus.unreused(CheckpointCensus.run(spark, sf)._1)
+    assert(bad.isEmpty, "a checkpoint read fewer than twice is " +
+      "an eager job and a block-manager copy the one reader could have " +
+      "computed itself — drop it, or move it to the caller that reuses " +
+      "the frame:\n  " + bad.mkString("\n  "))
+  }
+
   /** One unexecuted round frame per loop family, each over the loop's
     * state checkpointed exactly as the loop holds it between rounds. */
   private lazy val roundFrames: Seq[(String, org.apache.spark.sql.DataFrame)] = {
@@ -1008,9 +1019,9 @@ class PlanSpec extends AnyFunSuite {
     // Lloyd rounds of kmeansCentroids and pqCodebooks: each round
     // re-assigns the corpus against the checkpointed model.
     val kx = once(all.select(col("vec_id"), col("v"), S.fixedPoint(col("v")).as("x")))
-    val cents = S.kmeansCentroids(kx)
+    val cents = once(S.kmeansCentroids(kx))
     val subs = once(S.residFrame(kx, cents).select(col("vec_id"), col("subs")))
-    val pqc = S.pqCodebooks(subs)
+    val pqc = once(S.pqCodebooks(subs))
     // Star contraction (d07/d08).
     val e = once(Dedup.ccCanon(
       Dedup.jaccardPairsPrefix(Dedup.shingles(spark, sf), 0.5)
@@ -1088,4 +1099,118 @@ object PlanShape {
       val f = l.split('\t')
       f.head -> f.tail.toSeq.map(_.toInt)
     }.toMap
+}
+
+/** Which checkpoints the registered queries make, and how many executed
+  * plans read each. Every query runs in two passes over the whole
+  * registry, so each one is evaluated warm at least once whatever ran
+  * before it. A checkpoint is a `Subplan.once` job: its call site is the
+  * frame after `Subplan$.once` in the job's long-form call site, and its
+  * reads are the `LogicalRDD` references to its RDD, subqueries
+  * included, in the optimized plan of every executed action
+  * (`localCheckpoint` itself is one). A frame that one plan references
+  * twice is reused: without the checkpoint that plan derives it twice.
+  * Run on another scale factor with `sbt "Test/runMain graft.CheckpointCensus <sf dir>"`. */
+object CheckpointCensus {
+  import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+    SparkListenerStageCompleted}
+  import org.apache.spark.sql.SparkSession
+  import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution}
+  import org.apache.spark.sql.util.QueryExecutionListener
+
+  final case class Checkpoint(query: String, pass: Int, site: String, reads: Int)
+  /** The Spark jobs and shuffle-map stages one evaluation ran. */
+  final case class Eval(query: String, pass: Int, jobs: Int, shuffleStages: Int)
+
+  /** `Sink.write`'s read-before-overwrite guard is read once by design:
+    * it exists so the write never reads the files it replaces. */
+  val Exempt: Set[String] = Set("graft.sources.Sink.write")
+
+  private val OnceFrame = "graft.ops.Subplan$.once("
+
+  def run(spark: SparkSession, sf: String,
+      names: Seq[String] = SparkEntry.queries.keys.toSeq.sorted,
+      passes: Int = 2): (Seq[Checkpoint], Seq[Eval]) = {
+    val made = scala.collection.mutable.ArrayBuffer.empty[(Int, String)]
+    val reads = scala.collection.mutable.Map.empty[Int, Int].withDefaultValue(0)
+    var (jobs, shuffleStages) = (0, 0)
+    val jobListener = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        made.synchronized {
+          if (org.apache.spark.ShuffleMapStage(e.stageInfo)) shuffleStages += 1
+        }
+      override def onJobStart(e: SparkListenerJobStart): Unit = made.synchronized {
+        jobs += 1
+        val result = e.stageInfos.maxBy(_.stageId)
+        val frames = result.details.split("\n").map(_.trim)
+        val i = frames.indexWhere(_.startsWith(OnceFrame))
+        if (i >= 0 && i + 1 < frames.length && result.rddInfos.nonEmpty)
+          made += result.rddInfos.head.id -> siteOf(frames(i + 1))
+      }
+    }
+    val planListener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        made.synchronized {
+          qe.optimizedPlan.collectWithSubqueries { case r: LogicalRDD => r.rdd.id }
+            .foreach(id => reads(id) += 1)
+        }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val drain = () => org.apache.spark.ListenerDrain(spark.sparkContext)
+    drain()
+    spark.sparkContext.addSparkListener(jobListener)
+    spark.listenerManager.register(planListener)
+    val owned = scala.collection.mutable.ArrayBuffer.empty[(Int, String, Int, String)]
+    val evals = try for (pass <- 1 to passes; n <- names) yield {
+      val (j0, s0) = made.synchronized((jobs, shuffleStages))
+      SparkEntry.queries(n)(spark, sf).collect()
+      drain()
+      made.synchronized {
+        made.foreach { case (id, site) => owned += ((id, n, pass, site)) }
+        made.clear()
+        Eval(n, pass, jobs - j0, shuffleStages - s0)
+      }
+    } finally {
+      spark.listenerManager.unregister(planListener)
+      spark.sparkContext.removeSparkListener(jobListener)
+    }
+    (owned.toSeq.map { case (id, n, pass, site) =>
+      Checkpoint(n, pass, site, reads(id)) }, evals)
+  }
+
+  /** `graft.ext.Hybrid$.t39(Hybrid.scala:95)` → `graft.ext.Hybrid.t39 (Hybrid.scala:95)`. */
+  private def siteOf(frame: String): String = {
+    val qualified = frame.takeWhile(_ != '(')
+    val dot = qualified.lastIndexOf('.')
+    val method = qualified.drop(dot + 1).split('$').filter(m =>
+      m.nonEmpty && m != "anonfun" && !m.forall(_.isDigit)).headOption
+      .getOrElse("apply")
+    s"${qualified.take(dot).split('$').head}.$method " + frame.dropWhile(_ != '(')
+  }
+
+  /** The checkpoints read fewer than twice, one line per
+    * (query, call site), exemptions left out. */
+  def unreused(cs: Seq[Checkpoint]): Seq[String] =
+    cs.filter(c => c.reads < 2 && !Exempt(c.site.takeWhile(_ != ' ')))
+      .groupBy(c => (c.query, c.site)).toSeq.sortBy(_._1).map { case ((q, s), g) =>
+        s"$q at $s: ${g.size} checkpoint(s) read ${g.map(_.reads).distinct.sorted.mkString("/")} time(s)"
+      }
+
+  def main(args: Array[String]): Unit = {
+    val spark = Session()
+    val (cs, evals) = run(spark, args(0))
+    evals.groupBy(_.pass).toSeq.sortBy(_._1).foreach { case (pass, es) =>
+      val p = cs.filter(_.pass == pass)
+      println(s"[census] pass $pass: ${p.size} checkpoints, " +
+        s"${p.count(_.reads == 1)} read once, ${p.count(_.reads == 0)} " +
+        s"read by none, ${es.map(_.jobs).sum} jobs")
+    }
+    evals.foreach(e => println(
+      s"[census] eval\t${e.query}\t${e.pass}\t${e.jobs}\t${e.shuffleStages}"))
+    unreused(cs).foreach(l => println(s"[census] $l"))
+    val sites = cs.filter(c => c.reads < 2).map(_.site).distinct.sorted
+    println(s"[census] ${sites.size} sites with a checkpoint read at most once:")
+    sites.foreach(s => println(s"[census]   $s"))
+    spark.stop()
+  }
 }

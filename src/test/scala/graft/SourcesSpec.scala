@@ -153,6 +153,18 @@ class SourcesSpec extends AnyFunSuite {
     assert(spark.read.parquet(dir).collect().map(_.getAs[Int]("k")).toSet == Set(2))
   }
 
+  test("a write that reads its own path lands the rows it read") {
+    // Sink.write materializes such a frame first: the overwrite would
+    // otherwise delete the files the write is still reading.
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_self_read").toString
+    Sink.write(Seq((1, "a"), (2, "b")).toDF("k", "v"), dir, Nil)
+    Sink.write(spark.read.parquet(dir).unionByName(Seq((3, "c")).toDF("k", "v")),
+      dir, Nil)
+    assert(spark.read.parquet(dir).collect().map(_.getAs[Int]("k")).toSet ==
+      Set(1, 2, 3))
+  }
+
   test("keyed read restricts the scan to requested ids") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_sink").toString

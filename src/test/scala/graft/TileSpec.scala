@@ -36,18 +36,24 @@ class TileSpec extends AnyFunSuite {
       .list((_, n) => n.startsWith("graft-model")))
       .fold(Set.empty[String])(_.toSet)
 
-  test("tile model save/load round-trip") {
-    // The row carries the model: one job to save, the keyed read's
-    // jobs to load, and the loaded model predicts as the saved one.
+  /** A three-tree model over four synthetic pixels, with its inputs. */
+  private lazy val small = {
     import spark.implicits._
-    val out = Files.createTempDirectory("graft_tile").toString
     val segments = CcdOps.segmentRecords(CcdOps.detect(SyntheticArd(spark, 4)))
     val aux = spark.createDataset((0 until 4).map { p =>
       AuxRow(-2565585, 3314805, -2565585 + p * 30, 3314805 - p * 30,
         Seq(730000), Some(Seq(100.0f + p)), Seq(1 + p % 2),
         Some(Seq(10 * p)), Some(Seq(0.5f)), Some(Seq(2.0f)), Some(Seq(1)))
     })
-    val model = Classification.train(aux, segments, 1, 800000, numTrees = 3).get
+    (aux, segments, Classification.train(aux, segments, 1, 800000, numTrees = 3).get)
+  }
+
+  test("tile model save/load round-trip") {
+    // The row carries the model: one job to save, the keyed read's
+    // jobs to load, and the loaded model predicts as the saved one.
+    import spark.implicits._
+    val out = Files.createTempDirectory("graft_tile").toString
+    val (aux, segments, model) = small
     val tempsBefore = modelTemps()
     val (_, saveJobs) = jobsOf(Classification.saveTile(spark, model,
       -2565585, 3314805, "rf-test", "2026-08-12T00:00:00", out))
@@ -77,6 +83,24 @@ class TileSpec extends AnyFunSuite {
     val want = rawp(model)
     assert(want.nonEmpty)
     assert(rawp(loaded.get) == want, "loaded model must predict as the saved one")
+  }
+
+  test("the tile row's model blob depends on the fitted model alone") {
+    // spark.ml stamps the save time into every metadata record and a
+    // random uid into every fitted tree: two saves of one model, made
+    // at different times, and a save of a second fit on the same
+    // inputs land one string.
+    val (aux, segments, model) = small
+    def blob(m: org.apache.spark.ml.PipelineModel): String = {
+      val out = Files.createTempDirectory("graft_tile_blob").toString
+      Classification.saveTile(spark, m, 1, 2, "rf-test", "2026-08-12T00:00:00", out)
+      spark.read.parquet(s"$out/tile").select("model").head().getString(0)
+    }
+    val first = blob(model)
+    Thread.sleep(20)
+    assert(blob(model) == first, "two saves of one model landed different blobs")
+    val refit = Classification.train(aux, segments, 1, 800000, numTrees = 3).get
+    assert(blob(refit) == first, "a second fit of the same inputs landed another blob")
   }
 
   test("a tile row whose model is not a blob fails naming the tile and model") {

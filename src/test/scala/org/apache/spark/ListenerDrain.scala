@@ -6,3 +6,9 @@ package org.apache.spark
 object ListenerDrain {
   def apply(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }
+
+/** Whether a stage is a shuffle-map stage, which Spark also keeps
+  * package-private: a spec that counts shuffle stages reads it. */
+object ShuffleMapStage {
+  def apply(s: org.apache.spark.scheduler.StageInfo): Boolean = s.shuffleDepId.isDefined
+}

@@ -11,7 +11,13 @@ sbt -batch test 2>&1 | grep -E 'Tests:|error\]' | tail -3
 
 echo "== verify + DuckDB oracle (sf0.01) =="
 out=$(mktemp -d)
-sbt -batch "runMain graft.Verify /root/testdata/sf0.01 $out" >/dev/null 2>&1
+log=$(mktemp)
+sbt -batch "runMain graft.Verify /root/testdata/sf0.01 $out" >"$log" 2>&1
+# Verify reports a query body that throws only as a "[verify] <name>
+# failed" line, and c01 has no oracle for check.py to miss it by.
+if grep -E '\[verify\] [^ ]+ failed' "$log"; then
+  echo "verify: a query body threw (full log: $log)" >&2; exit 1
+fi
 python3 tools/check.py /root/testdata/sf0.01 "$out" | tail -1
 
 echo "== perfbench selfcheck (store-build attribution, generators, tail rule) =="
