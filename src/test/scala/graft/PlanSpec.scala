@@ -1101,7 +1101,7 @@ object PlanShape {
     }.toMap
 }
 
-/** Which checkpoints the registered queries make, and how many executed
+/** Which checkpoints the registered queries make, and how often executed
   * plans read each. Every query runs in two passes over the whole
   * registry, so each one is evaluated warm at least once whatever ran
   * before it. A checkpoint is a `Subplan.once` job: its call site is the
@@ -1128,9 +1128,7 @@ object CheckpointCensus {
 
   private val OnceFrame = "graft.ops.Subplan$.once("
 
-  def run(spark: SparkSession, sf: String,
-      names: Seq[String] = SparkEntry.queries.keys.toSeq.sorted,
-      passes: Int = 2): (Seq[Checkpoint], Seq[Eval]) = {
+  def run(spark: SparkSession, sf: String): (Seq[Checkpoint], Seq[Eval]) = {
     val made = scala.collection.mutable.ArrayBuffer.empty[(Int, String)]
     val reads = scala.collection.mutable.Map.empty[Int, Int].withDefaultValue(0)
     var (jobs, shuffleStages) = (0, 0)
@@ -1161,7 +1159,8 @@ object CheckpointCensus {
     spark.sparkContext.addSparkListener(jobListener)
     spark.listenerManager.register(planListener)
     val owned = scala.collection.mutable.ArrayBuffer.empty[(Int, String, Int, String)]
-    val evals = try for (pass <- 1 to passes; n <- names) yield {
+    val names = SparkEntry.queries.keys.toSeq.sorted
+    val evals = try for (pass <- 1 to 2; n <- names) yield {
       val (j0, s0) = made.synchronized((jobs, shuffleStages))
       SparkEntry.queries(n)(spark, sf).collect()
       drain()
