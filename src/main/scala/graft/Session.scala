@@ -10,6 +10,8 @@ import org.apache.spark.sql.SparkSession
   *     [[Tables]] normalizes `events.ts` to session-tz TIMESTAMP, and a
   *     TIMESTAMP(NANOS) fixture only reads (as a long) under nanosAsLong
   *   - AQE on, UI off, log level WARN
+  *
+  * SessionSpec fails if any other file builds a SparkSession.
   */
 object Session {
   private val CpusVar = "SPARK_GRAFT_CPUS"

@@ -23,10 +23,10 @@ import org.apache.spark.sql.functions._
   *  2. `eval_holdout` — the ':eval' md5 draw ([[Text.isEvalCol]];
   *     doc_id = vec_id is the t39 hybrid-item premise, so the doc
   *     holdout and s09's vector-side eval split are THE SAME draw).
-  *  3. `sem_contaminated` — [[Similarity.semanticDecontam]] (s09's
+  *  3. `sem_contaminated` — [[EmbeddingDedup.semanticDecontam]] (s09's
   *     one definition) over the planted-twin embedding corpus: the
   *     doc's vector near-matches a held-out eval vector.
-  *  4. `sem_dup` — [[Similarity.semDedup]] (d20's one definition):
+  *  4. `sem_dup` — [[EmbeddingDedup.semDedup]] (d20's one definition):
   *     the doc's vector loses its within-cell near-dup pair.
   *  5. `dsir_dropped` / `selected` — [[Text.dsirWeights]] +
   *     [[Text.dsirSelect]] (t37's one chain), trained on the ':tgt'
@@ -48,9 +48,9 @@ import org.apache.spark.sql.functions._
   * The oracle COMPOSES the existing stage texts (the round-16 ask):
   * [[Text.driftOracleCtes]] + [[Text.dsirOracleCtes]] (suffixed "38"
   * / "37" — two qlog chains in one statement), the d20 Lloyd chain
-  * ([[Similarity.kmeansChainCtesFrom]] over
-  * [[Similarity.twinCorpusCte]]) with [[Similarity.d20TailCtes]],
-  * and s09's [[Similarity.s09TailCtes]]/[[Similarity.s09FlagSelect]]
+  * ([[Quantizers.kmeansChainCtesFrom]] over
+  * [[Similarity.twinCorpusCte]]) with [[EmbeddingDedup.d20TailCtes]],
+  * and s09's [[EmbeddingDedup.s09TailCtes]]/[[EmbeddingDedup.s09FlagSelect]]
   * — no stage's arithmetic is restated a second time.
   */
 object Curation {
@@ -86,10 +86,10 @@ object Curation {
     // semantic stages (the shared-scan note in PLANS.md).
     val all = graft.ops.Subplan.once(
       Similarity.plantedTwinCorpus(Similarity.emb(s, dir)))
-    val semc = Similarity.semanticDecontam(all)
+    val semc = EmbeddingDedup.semanticDecontam(all)
       .select(col("vec_id").as("doc_id"), lit(true).as("sem_hit"))
-    val semd = Similarity.semDedup(all,
-        Similarity.semK(Similarity.corpusN(s, dir)))
+    val semd = EmbeddingDedup.semDedup(all,
+        EmbeddingDedup.semK(Similarity.corpusN(s, dir)))
       .select(col("vec_id").as("doc_id"), col("kept").as("sem_kept"))
     d.filter(col("is_batch"))
       .withColumn("one", graft.ops.ConstKey.one(col("doc_id")))
@@ -149,12 +149,12 @@ object Curation {
       s"""WITH ${Text.driftOracleCtes(d38, "38")},
          |gate AS (SELECT MAX(ABS(qdiff)) <= $DriftGateMaxQ AS admit
          |  FROM qd38),
-         |${Similarity.kmeansChainCtesFrom(Similarity.twinCorpusCte,
-              "al", None, kSql = Similarity.semKSql)},
+         |${Quantizers.kmeansChainCtesFrom(Similarity.twinCorpusCte,
+              "al", None, kSql = EmbeddingDedup.semKSql)},
          |${Similarity.bandsCteFor("bands", "al")},
-         |${Similarity.s09TailCtes},
-         |semflag AS (${Similarity.s09FlagSelect}),
-         |${Similarity.d20TailCtes},
+         |${EmbeddingDedup.s09TailCtes},
+         |semflag AS (${EmbeddingDedup.s09FlagSelect}),
+         |${EmbeddingDedup.d20TailCtes},
          |bd AS (SELECT doc_id, source, text FROM documents
          |  WHERE doc_id % 8 = 0),
          |stg AS (SELECT doc_id, source, text, CASE

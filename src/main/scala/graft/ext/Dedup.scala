@@ -957,7 +957,10 @@ object Dedup {
     * shuffles: batch prefixes, new-edge endpoints, and touched
     * cluster ids all ride size-gated broadcasts
     * ([[D14BroadcastMaxRows]]); above the gate the hints drop away
-    * and Catalyst/AQE re-plan as ordinary shuffle joins. */
+    * and Catalyst/AQE re-plan as ordinary shuffle joins.
+    * StreamingSpec "streaming cluster maintenance converges to the full
+    * d07-style rebuild" fails if folding this delta per trigger stops
+    * reaching the full rebuild. */
   private[graft] def clusterDelta(assign: DataFrame, sets: DataFrame,
       setsBatch: DataFrame, t: Double): DataFrame = {
     // Size gate: both callers pass a checkpointed setsBatch (d14

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
   * the engine's two ranker families: the blocked inverted index
   * (t19's layout, [[Text.blockedEntries]] — ONE build statement with
   * t19/t21) scores a term query, the landed trained-IVF index
-  * ([[Similarity.s15Store]] — the s15/s23/s39/s41 store, now with a
+  * ([[Quantizers.s15Store]] — the s15/s23/s39/s41 store, now with a
   * fifth reader) scores the query's embedding, and each item's fused
   * score is RRF (Cormack, Clarke & Buettcher, SIGIR 2009):
   * score(i) = Σ_lists 1/(K + rank_i). The composition shape is the
@@ -58,7 +58,11 @@ object Hybrid {
     * once, probed per query). Deliberately its OWN namespace: the
     * t21_index store's contract is the PRE-batch corpus (t21
     * maintains it); a retrieval operator answers over the whole
-    * corpus. */
+    * corpus.
+    * Readers: t39, t40 (and its t40_dl lengths, built from these
+    * postings) and t42 (its t42_imp impacts, likewise). A stored-schema
+    * change reaches all three; each one's oracle in tools/check.py
+    * fails on a reader it breaks. */
   private def t39Index(s: SparkSession, dir: String): DataFrame =
     graft.sources.SessionStore.storedOrBuild(s, "t39_index", dir,
       Seq("term", "block")) {
@@ -114,12 +118,12 @@ object Hybrid {
     lazy val fxOf = graft.ops.Subplan.once(
       Similarity.emb(s, dir).select(col("vec_id"), col("label"), col("v"),
         Similarity.fixedPoint(col("v")).as("x")))
-    val (cents, post) = Similarity.s15Store(s, dir, fxOf)
+    val (cents, post) = Quantizers.s15Store(s, dir, fxOf)
     val q = Similarity.emb(s, dir).filter(col("vec_id") < 10)
       .select(col("vec_id"), col("v"), Similarity.fixedPoint(col("v")).as("x"))
-    val vec = Similarity.kmProbedTop5(
+    val vec = Quantizers.kmProbedTop5(
         post.select(col("vec_id"), col("v"), col("cid")),
-        Similarity.kmProbeCells(q, cents))
+        Quantizers.kmProbeCells(q, cents))
       .select(col("qid"), col("nn_id").as("item_id"), col("rk"))
     // Fusion: ONE rational-sum statement over both ranked lists.
     val fused = lex.unionByName(vec)
@@ -166,6 +170,16 @@ object Hybrid {
 
   /** BM25 length-norm quantization scale (2¹⁰). */
   private[graft] val Bm25Scale = 1024L
+
+  /** BM25's k1 = 6/5 and b = 3/4, cleared of fractions by 20: the
+    * per-term rational idf · 44·A·tf / (20·tf·A + 6·A + 18·dl·N) has
+    * 44 = 20·(k1+1), 20, 6 = 20·k1·(1−b) and 18 = 20·k1·b. Stated once
+    * here and interpolated into both [[Bm25Contrib]] and the oracle's
+    * `sc` CTE, so the two cannot state different constants. */
+  private val Bm25TfNum = 44L
+  private val Bm25TfDen = 20L
+  private val Bm25NormConst = 6L
+  private val Bm25NormDl = 18L
 
   /** The ONE per-doc length statement — [[t40DocLen]]'s build body and
     * ExtSpec's synthetic-corpus twin. */
@@ -216,8 +230,9 @@ object Hybrid {
     * one text for t40's scoring, the t42 impacts build, and the t42
     * probe, so the upper bounds and the scores can never drift. */
   private[graft] val Bm25Contrib: String =
-    s"(idfq * 44L * tf * $Bm25Scale) div " +
-      s"(${20 * Bm25Scale} * tf + ${6 * Bm25Scale} + 18L * ldq)"
+    s"(idfq * ${Bm25TfNum}L * tf * $Bm25Scale) div " +
+      s"(${Bm25TfDen * Bm25Scale} * tf + ${Bm25NormConst * Bm25Scale} + " +
+      s"${Bm25NormDl}L * ldq)"
 
   /** THE BM25 scoring statement: postings stream through the
     * broadcast query-side join (keyed on term, or on (term, block)
@@ -334,7 +349,10 @@ object Hybrid {
   /** The t42 probe over FRAME inputs — returns (candidate (qid,
     * block) pairs, admitted (qid, block) pairs, the top-5 answer) so
     * ExtSpec can pin admitted < candidates while answer ≡ [[bm25Over]]
-    * on the same frames. */
+    * on the same frames.
+    * ExtSpec "t42 block-max WAND: answer equals the exhaustive
+    * statement …" fails if admission tightens to ub > θ or the answer
+    * leaves t40's. */
   private[graft] def bmwOver(idx: DataFrame, dl: DataFrame,
       imp: DataFrame, qterms: DataFrame)
       : (DataFrame, DataFrame, DataFrame) = {
@@ -551,9 +569,9 @@ object Hybrid {
          |    (dlt.dl * s.n * $Bm25Scale) // s.a AS ldq
          |  FROM dlt CROSS JOIN st s),
          |sc AS (SELECT q.qid, t.doc_id AS item_id,
-         |    CAST(SUM((w.idfq * 44 * t.tf * $Bm25Scale)
-         |      // (${20 * Bm25Scale} * t.tf + ${6 * Bm25Scale}
-         |          + 18 * l.ldq)) AS BIGINT) AS score
+         |    CAST(SUM((w.idfq * $Bm25TfNum * t.tf * $Bm25Scale)
+         |      // (${Bm25TfDen * Bm25Scale} * t.tf + ${Bm25NormConst * Bm25Scale}
+         |          + $Bm25NormDl * l.ldq)) AS BIGINT) AS score
          |  FROM qt q JOIN w ON w.term = q.term
          |  JOIN tfq t ON t.term = q.term
          |  JOIN ld l ON l.item_id = t.doc_id
@@ -579,7 +597,7 @@ object Hybrid {
     "t42_bm25_wand" -> bm25OracleSql,
 
     "t39_hybrid_rrf" ->
-      s"""WITH ${Similarity.kmeansChainCtes},
+      s"""WITH ${Quantizers.kmeansChainCtes},
          |vcand AS (SELECT p.qid, g.vec_id AS nn_id
          |  FROM pr p JOIN post g ON g.cid = p.cid WHERE g.vec_id <> p.qid),
          |vscored AS (SELECT c.qid, c.nn_id,

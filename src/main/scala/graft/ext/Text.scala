@@ -1141,7 +1141,10 @@ object Text {
     * serving t14/t15/t18 and t20's survivor packing, so a fix to the
     * packing sum can never land in one and miss the other. The
     * frontier is materialized here (Subplan.once) because both levels
-    * read it. */
+    * read it.
+    * PropertySpec "twoLevelCum equals the per-source scan at every
+    * shard width" fails if the two levels stop summing to the one-
+    * window scan. */
   private[graft] def twoLevelCum(frontier: DataFrame,
       shardWidth: Long): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
@@ -1910,7 +1913,10 @@ object Text {
 
   /** The tie-break multiplier: u = Σ (TieK·score − 1) decomposes
     * uniquely back into (Σ score, n_pieces) because n ≤
-    * [[UniMaxWordLen]] < TieK. */
+    * [[UniMaxWordLen]] < TieK.
+    * Do not drop the −1: ExtSpec "t35/t36 unigram-LM: the Spark Viterbi
+    * equals a JVM DP replay …" fails once ties stop preferring fewer
+    * pieces. */
   private val UniTieK = 128L
 
   /** The unreachable-path sentinel: far below any real path sum
@@ -2031,16 +2037,14 @@ object Text {
     * multi-char pieces by (count, piece). Each stage is checkpointed
     * so round r+1 reads round r's rows (the contraction
     * discipline). */
-  private[graft] def uniTrainFull(d: DataFrame,
-      rounds: Int = UniEmRounds,
-      seedK: Int = UniSeedK): (DataFrame, DataFrame) = {
+  private[graft] def uniTrainFull(d: DataFrame): (DataFrame, DataFrame) = {
     import graft.ops.Subplan
     val wf = Subplan.once(uniWordFreqs(d))
     val chars = Subplan.once(uniChars(wf))
     var vocab = Subplan.once(chars.unionByName(
       uniSeedMultis(wf)
-        .orderBy(col("pcnt").desc, col("p").asc).limit(seedK)))
-    for (_ <- 1 to rounds) {
+        .orderBy(col("pcnt").desc, col("p").asc).limit(UniSeedK)))
+    for (_ <- 1 to UniEmRounds) {
       val segCounts = Subplan.once(uniSegCounts(wf, vocab))
       vocab = Subplan.once(uniVocabUpdate(chars, segCounts))
     }

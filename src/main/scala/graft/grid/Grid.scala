@@ -36,7 +36,9 @@ object Grid {
     * (test/data/snap_response.json:1), i.e. h = 0 sits at x = −tx,
     * which is exactly resources/conus.csv:2's ulx. The y axis is
     * unaffected (ry = −1 cancels the ty sign), which is why the old
-    * x-convention bug survived every internal-consistency test. */
+    * x-convention bug survived every internal-consistency test.
+    * GridSpec "affine matches the reference's snap fixture and
+    * conus.csv origin" fails on the other convention. */
   def gridPt(x: Double, y: Double, g: GridSpec): (Int, Int) = {
     val h = math.floor((g.rx * x + g.tx) / g.sx).toInt
     val v = math.floor((g.ry * y + g.ty) / g.sy).toInt

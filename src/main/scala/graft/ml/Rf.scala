@@ -38,7 +38,12 @@ object Rf {
     * duration: the emptiness guard, both indexer fits and RF's
     * metadata, split and bagging passes each run an action over it,
     * and uncached each would re-execute aux ⋈ segments from Parquet.
-    * The cache is released before returning on every path. */
+    * The cache is released before returning on every path.
+    * FeaturesSpec "Rf.train releases its fit-scoped cache on the model
+    * and empty paths" fails if the cache outlives the fit. A persist
+    * is right only when eager and scoped like this one (and
+    * ChangeDetection.run's): a lazily returned plan could never
+    * unpersist it (see graft.ops.Subplan). */
   def train(fdf: DataFrame, numTrees: Int = 500): Option[PipelineModel] = {
     val cached = fdf.persist(StorageLevel.MEMORY_AND_DISK)
     try if (cached.isEmpty) None else Some(pipeline(numTrees).fit(cached))

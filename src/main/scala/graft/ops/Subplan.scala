@@ -29,9 +29,7 @@ import org.apache.spark.sql.execution.LogicalRDD
   * checkpoints each round's input — which the round reads again —
   * not its output, so the final round stays lazy for whoever reads
   * it. PlanSpec's checkpoint census fails on any checkpoint a
-  * registered query makes that is read fewer than twice;
-  * `Sink.write`'s guard against overwriting the files it reads is
-  * its only exemption.
+  * registered query makes that is read fewer than twice.
   *
   * Lifecycle: unlike `Dataset.persist` — whose CacheManager entry
   * holds the plan strongly and therefore pins executor storage until

@@ -112,7 +112,11 @@ object Classification {
     * Spark job (see [[modelBlob]]), so the tile lands in one write.
     * Dynamic partition overwrite on the full (tx, ty, name) identity
     * gives the per-key last-write-wins upsert the reference's CQL PK
-    * provided — saving tile B must not erase tile A's record. */
+    * provided — saving tile B must not erase tile A's record.
+    * TileSpec's round-trip and blob-determinism tests fail if the blob
+    * stops loading as the saved model or depends on anything but the
+    * fitted model. Java serialization is no substitute: `ParamMap.map`
+    * does not deserialize. */
   def saveTile(spark: SparkSession, model: PipelineModel, tx: Int, ty: Int,
       name: String, updated: String, outDir: String): Unit = {
     import spark.implicits._

@@ -32,14 +32,21 @@ object Sink {
     * — a second batch erases rows not in it. Use that only for
     * tables rebuilt wholesale.
     *
-    * A `df` that reads files under `path` (an upsert merging a batch
-    * into the stored rows of the partitions it touches) is
-    * materialized first, so the overwrite never reads the files it
-    * replaces.
+    * A full refresh deletes `path` before its job starts, so a `df`
+    * that reads files under `path` is materialized first (SourcesSpec
+    * "a write that reads its own path lands the rows it read"). A
+    * dynamic partition overwrite needs no such guard: Spark stages its
+    * output and replaces the touched partitions only at job commit,
+    * after every task has read its input, so an upsert may merge a
+    * batch into the stored rows of the partitions it touches straight
+    * from the store (SourcesSpec "a partitioned upsert that reads its
+    * own partition runs no checkpoint").
     */
   def write(df: DataFrame, path: String, pk: Seq[String],
       partitionCols: Seq[String] = Nil): Unit = {
-    val src = if (readsUnder(df, path)) graft.ops.Subplan.once(df) else df
+    val src =
+      if (partitionCols.isEmpty && readsUnder(df, path)) graft.ops.Subplan.once(df)
+      else df
     val deduped = if (pk.nonEmpty) src.dropDuplicates(pk) else src
     if (partitionCols.nonEmpty)
       deduped.write.mode("overwrite")

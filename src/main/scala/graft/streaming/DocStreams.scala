@@ -583,7 +583,9 @@ object DocStreams extends Serializable {
 
   /** Per-source md5 token-budget weight — the exact batch t17/t18
     * formula ((first-8-hex-digits of md5(source)) % 2 + 1) · unit in
-    * JVM arithmetic, so stream and batch budgets can never drift. */
+    * JVM arithmetic, so stream and batch budgets can never drift.
+    * PropertySpec and ExtSpec's t20 test fail if it and
+    * graft.ext.Text.budgetCol disagree. */
   def budgetOf(source: String, unit: Long = 1500L): Long = {
     val hex = java.security.MessageDigest.getInstance("MD5")
       .digest(source.getBytes("UTF-8")).map("%02x".format(_)).mkString
@@ -998,7 +1000,7 @@ object DocStreams extends Serializable {
     * d15, exactly as [[ClusterMaintenance]] twins d14: fold each
     * microbatch of (vec_id, v) rows into the maintained assignment by
     * generating batch-incident sign-band edges
-    * ([[graft.ext.Similarity.signNearDupPairsBetween]] — batch bands
+    * ([[graft.ext.EmbeddingDedup.signNearDupPairsBetween]] — batch bands
     * probe the accumulated corpus under the size gate) and
     * re-contracting only the touched components through the SAME
     * pair-source-agnostic [[graft.ext.Dedup.clusterDeltaEdges]] core.
@@ -1067,7 +1069,7 @@ object DocStreams extends Serializable {
 
     protected def pairs(all: DataFrame, batch: DataFrame,
         gate: DataFrame => DataFrame): DataFrame =
-      graft.ext.Similarity.signNearDupPairsBetween(all, batch, gate, threshold)
+      graft.ext.EmbeddingDedup.signNearDupPairsBetween(all, batch, gate, threshold)
   }
 
   /** Live MEDIA-cluster maintenance — the third member of the
@@ -1119,10 +1121,10 @@ object DocStreams extends Serializable {
     * as the maintenance trio twins d14/d15/m09: fold each microbatch
     * of (vec_id, v) rows into a maintained IVF index. The FIRST
     * non-empty trigger trains the quantizer over its rows
-    * ([[graft.ext.Similarity.kmeansCentroids]] — the stored-model
+    * ([[graft.ext.Quantizers.kmeansCentroids]] — the stored-model
     * bootstrap; at deploy this is the index-build job); every later
     * trigger assigns its rows against those FIXED centroids — one
-    * [[graft.ext.Similarity.kmAssign]] broadcast map over the batch
+    * [[graft.ext.Quantizers.kmAssign]] broadcast map over the batch
     * only, IVF inserts never retrain (s18's discipline) — and unions
     * them into the maintained postings. Because kmAssign is THE one
     * assignment definition, the maintained postings ≡ assigning the
@@ -1158,11 +1160,11 @@ object DocStreams extends Serializable {
         fixed(batchDs.toDF().select(col("vec_id"), col("v"))))
       if (fx.isEmpty) return
       val cents = centsDf.getOrElse {
-        val c = graft.ops.Subplan.once(graft.ext.Similarity.kmeansCentroids(fx))
+        val c = graft.ops.Subplan.once(graft.ext.Quantizers.kmeansCentroids(fx))
         centsDf = Some(c)
         c
       }
-      val asg = graft.ext.Similarity.kmAssign(fx, cents)
+      val asg = graft.ext.Quantizers.kmAssign(fx, cents)
         .select(col("vec_id"), col("v"), col("cid"))
       postDf = Some(graft.ops.Subplan.once(
         postDf.map(_.unionByName(asg)).getOrElse(asg)))
@@ -1180,16 +1182,16 @@ object DocStreams extends Serializable {
 
     /** The probed-cells exact cosine top-5 over the maintained index
       * for a (vec_id, v) query frame — s13/s15/s18's probe verbatim
-      * ([[graft.ext.Similarity.kmProbeCells]] +
-      * [[graft.ext.Similarity.kmProbedTop5]]). None before the first
+      * ([[graft.ext.Quantizers.kmProbeCells]] +
+      * [[graft.ext.Quantizers.kmProbedTop5]]). None before the first
       * non-empty trigger. */
     def probe(q: DataFrame): Option[DataFrame] =
       for (cents <- centsDf; post <- postDf) yield
-        graft.ext.Similarity.kmProbedTop5(post,
-          graft.ext.Similarity.kmProbeCells(fixed(q), cents))
+        graft.ext.Quantizers.kmProbedTop5(post,
+          graft.ext.Quantizers.kmProbeCells(fixed(q), cents))
 
     /** The live drift metric — s30's
-      * [[graft.ext.Similarity.indexDriftStats]] (ONE definition) over
+      * [[graft.ext.Quantizers.indexDriftStats]] (ONE definition) over
       * the maintained postings and bootstrap centroids; `basePred`
       * names the baseline rows (the bootstrap content). The
       * rebuild-trigger signal: inserts never retrain, so this is the
@@ -1197,11 +1199,11 @@ object DocStreams extends Serializable {
       * None before the first non-empty trigger. */
     def driftStats(basePred: org.apache.spark.sql.Column): Option[DataFrame] =
       for (cents <- centsDf; post <- postDf) yield
-        graft.ext.Similarity.indexDriftStats(post, cents, basePred)
+        graft.ext.Quantizers.indexDriftStats(post, cents, basePred)
 
     /** The live s41 — answer quality beside `driftStats`' model
       * health (the round-16 monitor completion): the ONE
-      * [[graft.ext.Similarity.recallFlags]] fold; truth = the ONE
+      * [[graft.ext.RecallProbes.recallFlags]] fold; truth = the ONE
       * exactNn1Between statement over the stream-accumulated corpus
       * (the maintained postings carry (vec_id, v), surviving folds
       * and retires); probe = this twin's own kmProbedTop5 read path
@@ -1218,9 +1220,9 @@ object DocStreams extends Serializable {
         val exact = graft.ext.Similarity.exactNn1Between(
           qs.select(col("vec_id"), col("v")), corpus)
           .select(col("vec_id").as("qid"), col("nn_id").as("nn_exact"))
-        graft.ext.Similarity.recallFlags(exact,
-          graft.ext.Similarity.kmProbedTop5(post,
-            graft.ext.Similarity.kmProbeCells(qs, cents)))
+        graft.ext.RecallProbes.recallFlags(exact,
+          graft.ext.Quantizers.kmProbedTop5(post,
+            graft.ext.Quantizers.kmProbeCells(qs, cents)))
       }
   }
 
@@ -1230,17 +1232,17 @@ object DocStreams extends Serializable {
     * index and the compressed index each have a landed form, a batch
     * upsert, and a live twin). The first non-empty trigger trains
     * BOTH quantizers over its rows — coarse centroids
-    * ([[graft.ext.Similarity.kmeansCentroids]]) and residual
-    * codebooks ([[graft.ext.Similarity.pqCodebooks]] over
-    * [[graft.ext.Similarity.residFrame]]) — the stored-model
+    * ([[graft.ext.Quantizers.kmeansCentroids]]) and residual
+    * codebooks ([[graft.ext.Quantizers.pqCodebooks]] over
+    * [[graft.ext.Quantizers.residFrame]]) — the stored-model
     * bootstrap; every later trigger assigns + encodes its rows
     * against that FIXED model (inserts never retrain either
-    * quantizer; one `residFrame` + [[graft.ext.Similarity.pqEncode]]
+    * quantizer; one `residFrame` + [[graft.ext.Quantizers.pqEncode]]
     * broadcast map over the trigger's rows only) and unions the
     * 8×4-bit codes into the maintained code frame. `probe` is
     * s21/s22's pruned ADC probe verbatim
-    * ([[graft.ext.Similarity.adcScored]] +
-    * [[graft.ext.Similarity.pqAdcTop5]]). State = (K-row centroids,
+    * ([[graft.ext.Quantizers.adcScored]] +
+    * [[graft.ext.Quantizers.pqAdcTop5]]). State = (K-row centroids,
     * 8·16-row codebooks, codes) localCheckpointed frames — the codes
     * are the 32×-compressed corpus, the whole point of keeping THIS
     * index live; at deploy all three live in the s22 store and the
@@ -1271,15 +1273,15 @@ object DocStreams extends Serializable {
       val (cents, pqc) = (centsDf, pqcDf) match {
         case (Some(c), Some(p)) => (c, p)
         case _ =>
-          val c = graft.ops.Subplan.once(graft.ext.Similarity.kmeansCentroids(fx))
-          val p = graft.ops.Subplan.once(graft.ext.Similarity.pqCodebooks(
-            graft.ext.Similarity.residFrame(fx, c)
+          val c = graft.ops.Subplan.once(graft.ext.Quantizers.kmeansCentroids(fx))
+          val p = graft.ops.Subplan.once(graft.ext.Quantizers.pqCodebooks(
+            graft.ext.Quantizers.residFrame(fx, c)
               .select(col("vec_id"), col("subs"))))
           centsDf = Some(c); pqcDf = Some(p)
           (c, p)
       }
-      val enc = graft.ext.Similarity.pqEncode(
-        graft.ext.Similarity.residFrame(fx, cents), pqc)
+      val enc = graft.ext.Quantizers.pqEncode(
+        graft.ext.Quantizers.residFrame(fx, cents), pqc)
         .select(col("vec_id"), col("cid"), col("codes"))
       codesDf = Some(graft.ops.Subplan.once(
         codesDf.map(_.unionByName(enc)).getOrElse(enc)))
@@ -1299,18 +1301,18 @@ object DocStreams extends Serializable {
       * before the first non-empty trigger. */
     def probe(q: DataFrame): Option[DataFrame] =
       for (cents <- centsDf; pqc <- pqcDf; codes <- codesDf) yield
-        graft.ext.Similarity.pqAdcTop5(
-          graft.ext.Similarity.adcScored(codes, fixed(q), cents, pqc))
+        graft.ext.Quantizers.pqAdcTop5(
+          graft.ext.Quantizers.adcScored(codes, fixed(q), cents, pqc))
 
     /** The live drift metric on the COMPRESSED state —
-      * [[graft.ext.Similarity.codeDriftStats]] (ONE definition with
+      * [[graft.ext.Quantizers.codeDriftStats]] (ONE definition with
       * the batch recompute StreamingSpec pins against): the store
       * keeps only codes, so the per-row energy is the ENCODED
       * residual norm looked up from the stored codebooks. None before
       * the bootstrap. */
     def driftStats(basePred: org.apache.spark.sql.Column): Option[DataFrame] =
       for (pqc <- pqcDf; codes <- codesDf) yield
-        graft.ext.Similarity.codeDriftStats(codes, pqc, basePred)
+        graft.ext.Quantizers.codeDriftStats(codes, pqc, basePred)
 
     /** The live s42 — the compressed family's answer-quality monitor.
       * Truth and the exact rerank need RAW vectors, which the
@@ -1318,8 +1320,8 @@ object DocStreams extends Serializable {
       * is the index's point), so the accumulated (vec_id, v) corpus
       * arrives as the argument — at deploy, the lake the codes were
       * encoded from. The probe is then s42's chain verbatim over the
-      * MAINTAINED codes: [[graft.ext.Similarity.adcScored]] shortlist
-      * → the ONE [[graft.ext.Similarity.exactRerankTailOver]]; hits
+      * MAINTAINED codes: [[graft.ext.Quantizers.adcScored]] shortlist
+      * → the ONE [[graft.ext.Quantizers.exactRerankTailOver]]; hits
       * by the ONE recallFlags fold. None before bootstrap. */
     def recallStats(corpus: DataFrame): Option[DataFrame] =
       for (cents <- centsDf; pqc <- pqcDf; codes <- codesDf) yield {
@@ -1330,10 +1332,10 @@ object DocStreams extends Serializable {
         val exact = graft.ext.Similarity.exactNn1Between(
           qs.select(col("vec_id"), col("v")), e)
           .select(col("vec_id").as("qid"), col("nn_id").as("nn_exact"))
-        val probed = graft.ext.Similarity.exactRerankTailOver(e,
-          graft.ext.Similarity.adcScored(codes, qs, cents, pqc),
+        val probed = graft.ext.Quantizers.exactRerankTailOver(e,
+          graft.ext.Quantizers.adcScored(codes, qs, cents, pqc),
           draw)
-        graft.ext.Similarity.recallFlags(exact, probed)
+        graft.ext.RecallProbes.recallFlags(exact, probed)
       }
   }
 
@@ -1341,15 +1343,15 @@ object DocStreams extends Serializable {
     * batch s34/s35, completing the symmetry for the graph family
     * exactly as [[AnnIndexMaintenance]] twins s18/s24: the first
     * non-empty trigger builds the graph over its rows (full
-    * NN-descent — the [[graft.ext.Similarity.knnDescentGraph]]
+    * NN-descent — the [[graft.ext.KnnGraph.knnDescentGraph]]
     * bootstrap, the honest construction price paid once); every later
     * trigger folds its batch through the SAME restricted insert
-    * descent as batch s34 ([[graft.ext.Similarity.knnInsertDelta]] —
+    * descent as batch s34 ([[graft.ext.KnnGraph.knnInsertDelta]] —
     * ONE definition, so live and landed maintenance can never
     * disagree): seeds from draws + band collisions + stored-graph
     * expansion, rounds over the touched neighborhood only, touched
     * owners' lists replaced. `retire` is s35's heal
-    * ([[graft.ext.Similarity.knnDeleteHeal]]): retired owners' rows
+    * ([[graft.ext.KnnGraph.knnDeleteHeal]]): retired owners' rows
     * drop and every surviving list that referenced one heals from the
     * retired vertices' surviving lists. State = (accumulated corpus,
     * graph lists) localCheckpointed frames — per-trigger work scales
@@ -1370,7 +1372,7 @@ object DocStreams extends Serializable {
     /** The ranked view — s29's (vec_id, nn_id, d, rk) contract over
       * the maintained lists. */
     def ranked: Option[DataFrame] =
-      graphDf.map(graft.ext.Similarity.knnRanked)
+      graphDf.map(graft.ext.KnnGraph.knnRanked)
 
     /** Fold one microbatch of (vec_id, v) rows. */
     def fold(batchDs: Dataset[org.apache.spark.sql.Row]): Unit = {
@@ -1380,13 +1382,13 @@ object DocStreams extends Serializable {
       graphDf match {
         case None =>
           allDf = Some(b)
-          val g0 = graft.ops.Subplan.once(graft.ext.Similarity.knnDescentGraph(b))
+          val g0 = graft.ops.Subplan.once(graft.ext.KnnGraph.knnDescentGraph(b))
           bootDf = Some(g0)
           graphDf = Some(g0)
         case Some(g) =>
           val all = graft.ops.Subplan.once(allDf.get.unionByName(b))
           allDf = Some(all)
-          val delta = graft.ext.Similarity.knnInsertDelta(g, all,
+          val delta = graft.ext.KnnGraph.knnInsertDelta(g, all,
             b.select(col("vec_id")))
           graphDf = Some(graft.ops.Subplan.once(
             g.join(broadcast(delta.select(col("v")).distinct()),
@@ -1397,14 +1399,14 @@ object DocStreams extends Serializable {
 
     /** Fold a retirement batch of vec_ids — the live counterpart of
       * batch s35: retired owners' rows drop, touched survivors heal
-      * through the ONE [[graft.ext.Similarity.knnDeleteHeal]]
+      * through the ONE [[graft.ext.KnnGraph.knnDeleteHeal]]
       * definition. Retiring unknown ids is a no-op. */
     def retire(ids: DataFrame): Unit =
       for (g <- graphDf; all <- allDf) {
         val del = graft.ops.Subplan.once(ids.select(col("vec_id")))
         val healed = graft.ops.Subplan.once(
-          graft.ext.Similarity.knnDeleteHeal(g,
-            graft.ext.Similarity.knnFx(all), del))
+          graft.ext.KnnGraph.knnDeleteHeal(g,
+            graft.ext.KnnGraph.knnFx(all), del))
         allDf = Some(graft.ops.Subplan.once(
           all.join(broadcast(del), Seq("vec_id"), "left_anti")))
         graphDf = Some(graft.ops.Subplan.once(
@@ -1416,28 +1418,28 @@ object DocStreams extends Serializable {
       }
 
     /** The live s37 — warm-start descent rounds over the maintained
-      * lists through the ONE [[graft.ext.Similarity.knnRefine]] loop:
+      * lists through the ONE [[graft.ext.KnnGraph.knnRefine]] loop:
       * the refresh s38's drift signal schedules, run in place (the
       * refined state replaces the maintained lists; at deploy it
       * lands as the new generation exactly as batch s37 does). No-op
       * before bootstrap. */
     def refine(): Unit =
       for (g <- graphDf; all <- allDf)
-        graphDf = Some(graft.ops.Subplan.once(graft.ext.Similarity.knnRefine(g,
-          graft.ext.Similarity.knnFx(all))))
+        graphDf = Some(graft.ops.Subplan.once(graft.ext.KnnGraph.knnRefine(g,
+          graft.ext.KnnGraph.knnFx(all))))
 
-    /** The live s38 — [[graft.ext.Similarity.graphDriftStats]] (ONE
+    /** The live s38 — [[graft.ext.KnnGraph.graphDriftStats]] (ONE
       * definition) of the maintained lists against the BOOTSTRAP
       * generation: thin-list counts and edge-energy shift per store
       * partition, the refine trigger. None before bootstrap. */
     def driftStats: Option[DataFrame] =
       for (boot <- bootDf; g <- graphDf) yield
-        graft.ext.Similarity.graphDriftStats(boot, g)
+        graft.ext.KnnGraph.graphDriftStats(boot, g)
 
     /** The live s43 — the graph family's answer-quality monitor:
-      * probe = the ONE [[graft.ext.Similarity.knnBeamWalkFull]] loop
+      * probe = the ONE [[graft.ext.KnnGraph.knnBeamWalkFull]] loop
       * over the MAINTAINED lists (entry via the shared
-      * [[graft.ext.Similarity.knnQ0]] construction, visited set
+      * [[graft.ext.KnnGraph.knnQ0]] construction, visited set
       * ranked by knnEfRank — s36's read semantics); truth = the
       * walk's own exact-int64 metric
       * ([[graft.ext.Similarity.exactNn1SqBetween]]) over the
@@ -1445,17 +1447,17 @@ object DocStreams extends Serializable {
       * None before bootstrap. */
     def recallStats: Option[DataFrame] =
       for (all <- allDf; g <- graphDf) yield {
-        val fx = graft.ops.Subplan.once(graft.ext.Similarity.knnFx(all))
+        val fx = graft.ops.Subplan.once(graft.ext.KnnGraph.knnFx(all))
         // absolute-size draw: N = the accumulated (checkpointed) corpus
         val draw = graft.ext.Similarity.recallDraw(all.count())
-        val (_, visited) = graft.ext.Similarity.knnBeamWalkFull(
-          graft.ext.Similarity.knnQ0(fx, draw),
-          fx, g, graft.ext.Similarity.KnnBeamWidth)
+        val (_, visited) = graft.ext.KnnGraph.knnBeamWalkFull(
+          graft.ext.KnnGraph.knnQ0(fx, draw),
+          fx, g, graft.ext.KnnGraph.KnnBeamWidth)
         val exact = graft.ext.Similarity.exactNn1SqBetween(
           fx.filter(draw), fx)
           .select(col("vec_id").as("qid"), col("nn_id").as("nn_exact"))
-        graft.ext.Similarity.recallFlags(exact,
-          graft.ext.Similarity.knnEfRank(visited))
+        graft.ext.RecallProbes.recallFlags(exact,
+          graft.ext.KnnGraph.knnEfRank(visited))
       }
   }
 

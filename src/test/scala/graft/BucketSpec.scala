@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.ext.Similarity
+import graft.ext.ExactSearch
 import graft.sources.Sink
 
 class BucketSpec extends AnyFunSuite {
@@ -90,7 +90,7 @@ class BucketSpec extends AnyFunSuite {
   test("int8 quantization round-trips within scale/2 and preserves NN ranking") {
     val e = Tables(spark, sf, "embeddings")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    val deq = Similarity.dequantize(Similarity.quantize(e, "v"), "v")
+    val deq = ExactSearch.dequantize(ExactSearch.quantize(e, "v"), "v")
     val err = e.as("a").join(deq.as("b"), Seq("vec_id"))
       .select(aggregate(zip_with(col("a.v"), col("b.v"),
         (x, y) => abs(x - y)), lit(0.0),

@@ -486,8 +486,8 @@ class ExtSpec extends AnyFunSuite {
     // equal a full d13-style rebuild over the d15 corpus restricted to
     // components containing a batch (vec_id % 7 == 0) vector.
     val full = ext.Dedup.connectedComponents(
-        ext.Similarity.signNearDupPairs(
-            graft.ops.Subplan.once(ext.Similarity.d15Corpus(spark, sf)))
+        ext.EmbeddingDedup.signNearDupPairs(
+            graft.ops.Subplan.once(ext.EmbeddingDedup.d15Corpus(spark, sf)))
           .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b")))
       .collect().map(r => (r.getAs[Long]("u"), r.getAs[Long]("lbl")))
     val touched = full.groupBy(_._2).collect {
@@ -603,7 +603,7 @@ class ExtSpec extends AnyFunSuite {
           Seq("vec_id"))
         .filter(col("nn_id") === col("a_nn")).count()
     // Measured 0.648 at sf0.001 / 0.65 at sf0.1 — floor with margin.
-    val g = hits(ext.Similarity.gridNn1(all))
+    val g = hits(ext.ExactSearch.gridNn1(all))
     assert(g >= (n * 0.55).toLong, s"grid IVF recall@1 regressed: $g/$n")
     // The banded path's recall lives in its DESIGN regime
     // (sign-identical near-dups — total recall, pinned above); on a
@@ -612,7 +612,7 @@ class ExtSpec extends AnyFunSuite {
     // if this "improves" toward general-NN recall, the band width
     // collapsed (the round-4 8-bit saturation failure mode) and the
     // operator's scale story is broken, not better.
-    val b = hits(ext.Similarity.bandedNn1(all))
+    val b = hits(ext.ExactSearch.bandedNn1(all))
     assert(b < n / 10,
       s"banded NN-1 suddenly behaves like a general-NN index — check the " +
         s"band width has not saturated: $b/$n")
@@ -629,12 +629,12 @@ class ExtSpec extends AnyFunSuite {
     val exact = ops.Subplan.once(ext.Similarity.exactNn1(all))
     def hits(r: Int): Long =
       exact.select(col("vec_id"), col("nn_id"))
-        .join(ext.Similarity.gridNn1(all, r)
+        .join(ext.ExactSearch.gridNn1(all, r)
             .select(col("vec_id"), col("nn_id").as("a_nn")), Seq("vec_id"))
         .filter(col("nn_id") === col("a_nn")).count()
     def hits5(r: Int): Long =
       exact.select(col("vec_id"), col("nn_id"))
-        .join(ext.Similarity.gridTopKNn(all, r, 5)
+        .join(ext.ExactSearch.gridTopKNn(all, r, 5)
             .select(col("vec_id"), col("nn_id").as("a_nn")), Seq("vec_id"))
         .filter(col("nn_id") === col("a_nn")).count()
     val (h1, h2) = (hits(1), hits(2))
@@ -642,8 +642,8 @@ class ExtSpec extends AnyFunSuite {
     val (f1, f2) = (hits5(1), hits5(2))
     assert(f2 >= f1, s"recall@5 fell as the probe widened: $f2 < $f1")
     assert(f1 >= h1 && f2 >= h2, "recall@5 must dominate recall@1")
-    val (c1, c2) = (ext.Similarity.gridCandidateCount(all, 1),
-      ext.Similarity.gridCandidateCount(all, 2))
+    val (c1, c2) = (ext.ExactSearch.gridCandidateCount(all, 1),
+      ext.ExactSearch.gridCandidateCount(all, 2))
     assert(c2 > c1, s"the 5×5 probe must score more candidates: $c2 <= $c1")
     // The s11 AXIS knob's contract, density side: adding a third axis
     // at equal per-axis radii PARTITIONS every 2-axis cell (same c1/c2
@@ -651,8 +651,8 @@ class ExtSpec extends AnyFunSuite {
     // strictly cheaper at equal radii. The registered (2,2,1) point
     // must also stay a subset of the 2-axis r=2 probe (same first two
     // windows, plus the c3 cut).
-    val c3 = ext.Similarity.gridCandidateCountR(all, Seq(2, 2, 2))
-    val c221 = ext.Similarity.gridCandidateCountR(all, Seq(2, 2, 1))
+    val c3 = ext.ExactSearch.gridCandidateCountR(all, Seq(2, 2, 2))
+    val c221 = ext.ExactSearch.gridCandidateCountR(all, Seq(2, 2, 1))
     assert(c3 < c2, s"the third axis must cut the candidate pool: $c3 >= $c2")
     assert(c221 <= c3,
       s"narrowing the third window must not add candidates: $c221 > $c3")
@@ -773,10 +773,10 @@ class ExtSpec extends AnyFunSuite {
         Tables(spark, sf, "embeddings").select(col("vec_id"),
           col("embedding").cast("array<double>").as("v"))))
     def edges(rounds: Int) =
-      ext.Similarity.knnDescentGraph(all, rounds = rounds)
+      ext.KnnGraph.knnDescentGraph(all, rounds = rounds)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val atR = edges(ext.Similarity.KnnRounds)
-    val atR1 = edges(ext.Similarity.KnnRounds + 1)
+    val atR = edges(ext.KnnGraph.KnnRounds)
+    val atR1 = edges(ext.KnnGraph.KnnRounds + 1)
     assert(atR == atR1, "one more descent round still changed the graph")
     // Twin recall: the planted twin is sign-band-identical (seeded at
     // init) and the exact NN-1 (its distance is the 0.01-scaled dim-0
@@ -822,10 +822,10 @@ class ExtSpec extends AnyFunSuite {
       ext.Similarity.plantedTwinCorpus(
         Tables(spark, sf, "embeddings").select(col("vec_id"),
           col("embedding").cast("array<double>").as("v"))))
-    val g = ext.Similarity.knnDescentGraph(all)
+    val g = ext.KnnGraph.knnDescentGraph(all)
       .collect().groupBy(_.getLong(0))
       .map { case (v, rows) => v -> rows.map(_.getLong(1)).toList }
-    val fx = ext.Similarity.knnFx(all)
+    val fx = ext.KnnGraph.knnFx(all)
       .collect().map(r => r.getLong(0) -> r.getAs[Seq[Long]](1).toArray).toMap
     def dist(a: Array[Long], b: Array[Long]): Long =
       a.zip(b).map { case (x, y) => (x - y) * (x - y) }.sum
@@ -846,19 +846,19 @@ class ExtSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(got.size == 10)
     val want = (0L until 10L).map { q =>
-      val (nn, _) = walk(q, ext.Similarity.KnnSearchHops)
+      val (nn, _) = walk(q, ext.KnnGraph.KnnSearchHops)
       (q, nn, dist(fx(q), fx(nn)))
     }.toSet
     assert(got == want,
       s"engine walk diverges from the JVM replay: " +
         s"missing=${(want -- got).take(3)} extra=${(got -- want).take(3)}")
     (0L until 10L).foreach { q =>
-      val (atH, ds) = walk(q, ext.Similarity.KnnSearchHops)
+      val (atH, ds) = walk(q, ext.KnnGraph.KnnSearchHops)
       // monotone descent: each hop improves or stays.
       ds.sliding(2).foreach { case Seq(a, b) => assert(b <= a) }
       // the budget reaches the fixpoint on the fixture: more hops
       // change nothing (post-fixpoint hops are idempotent).
-      val (atH4, _) = walk(q, ext.Similarity.KnnSearchHops + 4)
+      val (atH4, _) = walk(q, ext.KnnGraph.KnnSearchHops + 4)
       assert(atH4 == atH, s"query $q still moving after the hop budget")
     }
   }
@@ -869,10 +869,10 @@ class ExtSpec extends AnyFunSuite {
       ext.Similarity.plantedTwinCorpus(
         Tables(spark, sf, "embeddings").select(col("vec_id"),
           col("embedding").cast("array<double>").as("v"))))
-    val g = ext.Similarity.knnDescentGraph(all)
+    val g = ext.KnnGraph.knnDescentGraph(all)
       .collect().groupBy(_.getLong(0))
       .map { case (v, rows) => v -> rows.map(_.getLong(1)).toList }
-    val fx = ext.Similarity.knnFx(all)
+    val fx = ext.KnnGraph.knnFx(all)
       .collect().map(r => r.getLong(0) -> r.getAs[Seq[Long]](1).toArray).toMap
     def dist(a: Array[Long], b: Array[Long]): Long =
       a.zip(b).map { case (x, y) => (x - y) * (x - y) }.sum
@@ -880,7 +880,7 @@ class ExtSpec extends AnyFunSuite {
     // (d, id) per hop; final frontier ranked the same way.
     def beamWalk(q: Long, b: Int): List[(Long, Long, Int)] = {
       var frontier = List(if (q == 0L) 1L else 0L)
-      for (_ <- 1 to ext.Similarity.KnnSearchHops) {
+      for (_ <- 1 to ext.KnnGraph.KnnSearchHops) {
         val cands = (frontier ++ frontier.flatMap(c => g.getOrElse(c, Nil)))
           .distinct.filter(_ != q)
         frontier = cands.sortBy(c => (dist(fx(q), fx(c)), c)).take(b)
@@ -894,7 +894,7 @@ class ExtSpec extends AnyFunSuite {
       .map { case (q, rows) => q -> rows.map(_._2).sortBy(_._3).toList }
     assert(gotBeam.size == 10)
     gotBeam.foreach { case (q, rows) =>
-      val want = beamWalk(q, ext.Similarity.KnnBeamWidth)
+      val want = beamWalk(q, ext.KnnGraph.KnnBeamWidth)
       assert(rows == want, s"query $q: engine $rows != JVM replay $want")
     }
     // Unification: the beam machinery at width 1 must reproduce the
@@ -918,21 +918,21 @@ class ExtSpec extends AnyFunSuite {
       ext.Similarity.plantedTwinCorpus(
         Tables(spark, sf, "embeddings").select(col("vec_id"),
           col("embedding").cast("array<double>").as("v"))))
-    val fx = graft.ops.Subplan.once(ext.Similarity.knnFx(all))
-    val g = graft.ops.Subplan.once(ext.Similarity.knnDescentGraph(all))
+    val fx = graft.ops.Subplan.once(ext.KnnGraph.knnFx(all))
+    val g = graft.ops.Subplan.once(ext.KnnGraph.knnDescentGraph(all))
     val q0 = graft.ops.Subplan.once(
-      ext.Similarity.knnQ0(fx, col("vec_id") < 10))
-    val (_, visited) = ext.Similarity.knnBeamWalkFull(
-      q0, fx, g, ext.Similarity.KnnBeamWidth)
+      ext.KnnGraph.knnQ0(fx, col("vec_id") < 10))
+    val (_, visited) = ext.KnnGraph.knnBeamWalkFull(
+      q0, fx, g, ext.KnnGraph.KnnBeamWidth)
     val vis = graft.ops.Subplan.once(visited)
     val total = vis.count()
     val unique = vis.distinct().count()
     assert(total > unique,
       s"visited carries no duplicates ($total rows) - the pin is vacuous")
-    val inHeap = ext.Similarity.knnEfRank(vis)
+    val inHeap = ext.KnnGraph.knnEfRank(vis)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getInt(3))).toSet
-    val viaDistinct = ext.Similarity.knnEfRank(vis.distinct())
+    val viaDistinct = ext.KnnGraph.knnEfRank(vis.distinct())
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getInt(3))).toSet
     assert(inHeap.nonEmpty && inHeap == viaDistinct,
@@ -964,13 +964,13 @@ class ExtSpec extends AnyFunSuite {
     val existing = graft.ops.Subplan.once(
       all.filter(!ext.Similarity.annBatchVec))
     val base = graft.ops.Subplan.once(
-      ext.Similarity.knnDescentGraph(existing))
+      ext.KnnGraph.knnDescentGraph(existing))
     val batchIds = all.filter(ext.Similarity.annBatchVec).select(col("vec_id"))
     def delta(rounds: Int) =
-      ext.Similarity.knnInsertDelta(base, all, batchIds, rounds = rounds)
+      ext.KnnGraph.knnInsertDelta(base, all, batchIds, rounds = rounds)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val atR = delta(ext.Similarity.KnnInsRounds)
-    assert(atR == delta(ext.Similarity.KnnInsRounds + 1),
+    val atR = delta(ext.KnnGraph.KnnInsRounds)
+    assert(atR == delta(ext.KnnGraph.KnnInsRounds + 1),
       "one more restricted round still changed the touched lists")
     // Twin adoption across the draw — the operational insert guarantee:
     // a batch vector must find its twin at rank 1 AND an existing twin
@@ -1056,16 +1056,16 @@ class ExtSpec extends AnyFunSuite {
       val existing = graft.ops.Subplan.once(
         corpus.filter(!ext.Similarity.annBatchVec))
       val base = graft.ops.Subplan.once(
-        ext.Similarity.knnDescentGraph(existing))
+        ext.KnnGraph.knnDescentGraph(existing))
       val batchIds = corpus.filter(ext.Similarity.annBatchVec)
         .select(col("vec_id"))
-      val delta = ext.Similarity.knnInsertDelta(base, corpus, batchIds)
+      val delta = ext.KnnGraph.knnInsertDelta(base, corpus, batchIds)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
       val touched = delta.map(_._1)
       val maintained = base.collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
         .filterNot(t => touched(t._1)).toSet ++ delta
-      val rebuilt = ext.Similarity.knnDescentGraph(corpus)
+      val rebuilt = ext.KnnGraph.knnDescentGraph(corpus)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
       (maintained, rebuilt)
     }
@@ -1074,7 +1074,7 @@ class ExtSpec extends AnyFunSuite {
       s"missing=${(rebuilt -- maintained).take(5)} " +
         s"extra=${(maintained -- rebuilt).take(5)}")
     // Both must be the exact graph — brute force over the lattice.
-    val fx = ext.Similarity.knnFx(all)
+    val fx = ext.KnnGraph.knnFx(all)
       .collect().map(r => r.getLong(0) -> r.getAs[Seq[Long]](1).toArray).toMap
     def dist(a: Array[Long], b: Array[Long]): Long =
       a.zip(b).map { case (x, y) => (x - y) * (x - y) }.sum
@@ -1082,7 +1082,7 @@ class ExtSpec extends AnyFunSuite {
       fx.keySet.toSeq.filter(_ != v)
         .map(w => (w, dist(fx(v), fx(w))))
         .sortBy { case (w, d) => (d, w) }
-        .take(ext.Similarity.KnnK)
+        .take(ext.KnnGraph.KnnK)
         .map { case (w, d) => (v, w, d) }
     }
     assert(rebuilt == exact, "full rebuild missed the exact k-NN graph")
@@ -1106,9 +1106,9 @@ class ExtSpec extends AnyFunSuite {
       ext.Similarity.plantedTwinCorpus(
         Tables(spark, sf, "embeddings").select(col("vec_id"),
           col("embedding").cast("array<double>").as("v"))))
-    val g = ext.Similarity.knnDescentGraph(all)
+    val g = ext.KnnGraph.knnDescentGraph(all)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    val fx = ext.Similarity.knnFx(all)
+    val fx = ext.KnnGraph.knnFx(all)
       .collect().map(r => r.getLong(0) -> r.getAs[Seq[Long]](1).toArray).toMap
     def dist(a: Array[Long], b: Array[Long]): Long =
       a.zip(b).map { case (x, y) => (x - y) * (x - y) }.sum
@@ -1124,7 +1124,7 @@ class ExtSpec extends AnyFunSuite {
       (own ++ inh).distinct
         .map(x => (x, dist(fx(u), fx(x))))
         .sortBy { case (x, d) => (d, x) }
-        .take(ext.Similarity.KnnK)
+        .take(ext.KnnGraph.KnnK)
         .zipWithIndex.map { case ((x, d), i) => (u, x, d, i + 1) }
     }
     val got = SparkEntry.queries("s35_knn_graph_delete")(spark, sf)
@@ -1166,12 +1166,12 @@ class ExtSpec extends AnyFunSuite {
       ext.Similarity.plantedTwinCorpus(
         Tables(spark, sf, "embeddings").select(col("vec_id"),
           col("embedding").cast("array<double>").as("v"))))
-    val fx = graft.ops.Subplan.once(ext.Similarity.knnFx(all))
-    val base = graft.ops.Subplan.once(ext.Similarity.knnDescentGraph(all))
+    val fx = graft.ops.Subplan.once(ext.KnnGraph.knnFx(all))
+    val base = graft.ops.Subplan.once(ext.KnnGraph.knnDescentGraph(all))
     val delIds = all.filter(ext.Similarity.annDelVec).select(col("vec_id"))
     val del = delIds.collect().map(_.getLong(0)).toSet
     val healed = graft.ops.Subplan.once(
-      ext.Similarity.knnDeleteHeal(base, fx, delIds))
+      ext.KnnGraph.knnDeleteHeal(base, fx, delIds))
     val postDel = graft.ops.Subplan.once(
       base.join(broadcast(delIds.select(col("vec_id").as("v"))),
           Seq("v"), "left_anti")
@@ -1180,9 +1180,9 @@ class ExtSpec extends AnyFunSuite {
         .unionByName(healed))
     def edges(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val atR = edges(ext.Similarity.knnRefine(postDel, fx))
-    assert(atR == edges(ext.Similarity.knnRefine(postDel, fx,
-        ext.Similarity.KnnRefineRounds + 1)),
+    val atR = edges(ext.KnnGraph.knnRefine(postDel, fx))
+    assert(atR == edges(ext.KnnGraph.knnRefine(postDel, fx,
+        ext.KnnGraph.KnnRefineRounds + 1)),
       "one more refine round still changed the graph")
     // Monotone improvement over the post-delete state: per owner, the
     // refined list is at least as long and position-wise at least as
@@ -1223,22 +1223,22 @@ class ExtSpec extends AnyFunSuite {
     val cAll = graft.ops.Subplan.once(ext.Similarity.plantedTwinCorpus(
       spark.read.parquet(tmp).select(col("vec_id"),
         col("v").cast("array<double>").as("v"))))
-    val cFx = graft.ops.Subplan.once(ext.Similarity.knnFx(cAll))
-    val cBase = graft.ops.Subplan.once(ext.Similarity.knnDescentGraph(cAll))
+    val cFx = graft.ops.Subplan.once(ext.KnnGraph.knnFx(cAll))
+    val cBase = graft.ops.Subplan.once(ext.KnnGraph.knnDescentGraph(cAll))
     val cDelIds = cAll.filter(ext.Similarity.annDelVec).select(col("vec_id"))
     val cDel = cDelIds.collect().map(_.getLong(0)).toSet
     val cHealed = graft.ops.Subplan.once(
-      ext.Similarity.knnDeleteHeal(cBase, cFx, cDelIds))
+      ext.KnnGraph.knnDeleteHeal(cBase, cFx, cDelIds))
     val cPostDel = graft.ops.Subplan.once(
       cBase.join(broadcast(cDelIds.select(col("vec_id").as("v"))),
           Seq("v"), "left_anti")
         .join(broadcast(cHealed.select(col("v")).distinct()),
           Seq("v"), "left_anti")
         .unionByName(cHealed))
-    val refined = edges(ext.Similarity.knnRefine(cPostDel, cFx))
+    val refined = edges(ext.KnnGraph.knnRefine(cPostDel, cFx))
     val survivors = graft.ops.Subplan.once(
       cAll.join(broadcast(cDelIds), Seq("vec_id"), "left_anti"))
-    val sFx = ext.Similarity.knnFx(survivors)
+    val sFx = ext.KnnGraph.knnFx(survivors)
       .collect().map(r => r.getLong(0) -> r.getAs[Seq[Long]](1).toArray).toMap
     def dist(a: Array[Long], b: Array[Long]): Long =
       a.zip(b).map { case (x, y) => (x - y) * (x - y) }.sum
@@ -1246,7 +1246,7 @@ class ExtSpec extends AnyFunSuite {
       sFx.keySet.toSeq.filter(_ != v)
         .map(w => (w, dist(sFx(v), sFx(w))))
         .sortBy { case (w, d) => (d, w) }
-        .take(ext.Similarity.KnnK)
+        .take(ext.KnnGraph.KnnK)
         .map { case (w, d) => (v, w, d) }
     }
     // The REPAIR-vs-REBUILD distinction, pinned honestly: warm-start
@@ -1275,11 +1275,11 @@ class ExtSpec extends AnyFunSuite {
       ext.Similarity.plantedTwinCorpus(
         Tables(spark, sf, "embeddings").select(col("vec_id"),
           col("embedding").cast("array<double>").as("v"))))
-    val fx = graft.ops.Subplan.once(ext.Similarity.knnFx(all))
-    val base = graft.ops.Subplan.once(ext.Similarity.knnDescentGraph(all))
+    val fx = graft.ops.Subplan.once(ext.KnnGraph.knnFx(all))
+    val base = graft.ops.Subplan.once(ext.KnnGraph.knnDescentGraph(all))
     val delIds = all.filter(ext.Similarity.annDelVec).select(col("vec_id"))
     val healed = graft.ops.Subplan.once(
-      ext.Similarity.knnDeleteHeal(base, fx, delIds))
+      ext.KnnGraph.knnDeleteHeal(base, fx, delIds))
     val postDel = base.join(
         broadcast(delIds.select(col("vec_id").as("v"))), Seq("v"), "left_anti")
       .join(broadcast(healed.select(col("v")).distinct()),
@@ -1288,12 +1288,12 @@ class ExtSpec extends AnyFunSuite {
     def sideStats(df: org.apache.spark.sql.DataFrame) = {
       val rows = df.collect().map(r => (r.getLong(0), r.getLong(2)))
       rows.groupBy(_._1).toSeq.map { case (v, es) =>
-        ((v % ext.Similarity.KnnGraphParts).toInt,
+        ((v % ext.KnnGraph.KnnGraphParts).toInt,
           (es.length.toLong, es.map(_._2).sum))
       }.groupBy(_._1).map { case (pt, owners) =>
         pt -> (owners.size.toLong,
           owners.map(_._2._1).sum,
-          owners.count(_._2._1 < ext.Similarity.KnnK).toLong,
+          owners.count(_._2._1 < ext.KnnGraph.KnnK).toLong,
           owners.map(_._2._2).sum)
       }
     }
@@ -1322,10 +1322,10 @@ class ExtSpec extends AnyFunSuite {
       ext.Similarity.plantedTwinCorpus(
         Tables(spark, sf, "embeddings").select(col("vec_id"),
           col("embedding").cast("array<double>").as("v"))))
-    val g = ext.Similarity.knnDescentGraph(all)
+    val g = ext.KnnGraph.knnDescentGraph(all)
       .collect().groupBy(_.getLong(0))
       .map { case (v, rows) => v -> rows.map(_.getLong(1)).toList }
-    val fx = ext.Similarity.knnFx(all)
+    val fx = ext.KnnGraph.knnFx(all)
       .collect().map(r => r.getLong(0) -> r.getAs[Seq[Long]](1).toArray).toMap
     def dist(a: Array[Long], b: Array[Long]): Long =
       a.zip(b).map { case (x, y) => (x - y) * (x - y) }.sum
@@ -1333,7 +1333,7 @@ class ExtSpec extends AnyFunSuite {
     def efWalk(q: Long, b: Int, k: Int): List[(Long, Long, Int)] = {
       var frontier = List(if (q == 0L) 1L else 0L)
       var visited = Set.empty[Long]
-      for (_ <- 1 to ext.Similarity.KnnSearchHops) {
+      for (_ <- 1 to ext.KnnGraph.KnnSearchHops) {
         val cands = (frontier ++ frontier.flatMap(c => g.getOrElse(c, Nil)))
           .distinct.filter(_ != q)
         visited ++= cands
@@ -1348,8 +1348,8 @@ class ExtSpec extends AnyFunSuite {
       .map { case (q, rows) => q -> rows.map(_._2).sortBy(_._3).toList }
     assert(got.size == 10)
     got.foreach { case (q, rows) =>
-      val want = efWalk(q, ext.Similarity.KnnBeamWidth,
-        ext.Similarity.KnnEfTopK)
+      val want = efWalk(q, ext.KnnGraph.KnnBeamWidth,
+        ext.KnnGraph.KnnEfTopK)
       assert(rows == want, s"query $q: engine $rows != JVM replay $want")
     }
     // The monotone-improvement theorem made a test: the s33 frontier
@@ -1359,7 +1359,7 @@ class ExtSpec extends AnyFunSuite {
       .collect().map(r =>
         (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3))).toSet
     val efTopB = got.toSeq.flatMap { case (q, rows) =>
-      rows.take(ext.Similarity.KnnBeamWidth)
+      rows.take(ext.KnnGraph.KnnBeamWidth)
         .map { case (c, d, rk) => (q, c, d, rk) }
     }.toSet
     assert(s33 == efTopB, "s33 frontier diverges from visited top-B")
@@ -1468,7 +1468,7 @@ class ExtSpec extends AnyFunSuite {
     val e = ext.Similarity.emb(spark, sf)
     val labels = e.select(col("vec_id"), col("label")).collect()
       .map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val want = ext.Similarity.kmScoredAll(e.select(col("vec_id"), col("v")))
+    val want = ext.Quantizers.kmScoredAll(e.select(col("vec_id"), col("v")))
       .filter(col("qid") < 10).collect()
       .map(r => (r.getAs[Long]("qid"), r.getAs[Long]("nn_id"),
         r.getAs[Double]("cos_sim")))
@@ -1503,12 +1503,12 @@ class ExtSpec extends AnyFunSuite {
       .select(col("vec_id"), col("v"),
         org.apache.spark.sql.functions.transform(col("v"),
           e => floor(e * lit(1048576.0)).cast("long")).as("x")))
-    val cents = ext.Similarity.kmeansCentroids(fx)
-    val expected = ext.Similarity.kmProbedTop5(
-      ext.Similarity.kmAssign(fx, cents)
+    val cents = ext.Quantizers.kmeansCentroids(fx)
+    val expected = ext.Quantizers.kmProbedTop5(
+      ext.Quantizers.kmAssign(fx, cents)
         .filter(!ext.Similarity.annDelVec)
         .select(col("vec_id"), col("v"), col("cid")),
-      ext.Similarity.kmProbeCells(fx.filter(col("vec_id") < 10), cents))
+      ext.Quantizers.kmProbeCells(fx.filter(col("vec_id") < 10), cents))
       .collect().map(_.toSeq).toSet
     assert(got == expected)
     assert(got.nonEmpty)
@@ -1535,7 +1535,7 @@ class ExtSpec extends AnyFunSuite {
     val labels = ext.Similarity.emb(spark, sf)
       .select(col("vec_id"), col("label")).collect()
       .map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val want = ext.Similarity.ivfadcScored(spark, sf)
+    val want = ext.Quantizers.ivfadcScored(spark, sf)
       .collect().map(r => (r.getAs[Long]("qid"), r.getAs[Long]("nn_id"),
         r.getAs[Long]("adc")))
       .filter { case (q, n, _) => labels(q) == labels(n) }
@@ -1587,8 +1587,8 @@ class ExtSpec extends AnyFunSuite {
     // finds nothing to remove.
     val got = SparkEntry.queries("s25_ivfadc_delete")(spark, sf)
       .collect().map(_.toSeq).toSet
-    val expected = ext.Similarity.pqAdcTop5(
-      ext.Similarity.ivfadcScored(spark, sf)
+    val expected = ext.Quantizers.pqAdcTop5(
+      ext.Quantizers.ivfadcScored(spark, sf)
         .filter(!ext.Similarity.annDelVecOn(col("nn_id"))))
       .collect().map(_.toSeq).toSet
     assert(got == expected)
@@ -1613,8 +1613,8 @@ class ExtSpec extends AnyFunSuite {
     // a rewrite of identical rows, so the answer must not move.
     val got = SparkEntry.queries("s22_ivfadc_upsert")(spark, sf)
       .collect().map(_.toSeq).toSet
-    val expected = ext.Similarity.pqAdcTop5(
-      ext.Similarity.ivfadcScored(spark, sf,
+    val expected = ext.Quantizers.pqAdcTop5(
+      ext.Quantizers.ivfadcScored(spark, sf,
         Some(!ext.Similarity.annBatchVec)))
       .collect().map(_.toSeq).toSet
     assert(got == expected)
@@ -1639,12 +1639,12 @@ class ExtSpec extends AnyFunSuite {
       .select(col("vec_id"), col("v"),
         org.apache.spark.sql.functions.transform(col("v"),
           e => floor(e * lit(1048576.0)).cast("long")).as("x")))
-    val cents = ext.Similarity.kmeansCentroids(
+    val cents = ext.Quantizers.kmeansCentroids(
       fx.filter(!ext.Similarity.annBatchVec))
-    val expected = ext.Similarity.kmProbedTop5(
-      ext.Similarity.kmAssign(fx, cents)
+    val expected = ext.Quantizers.kmProbedTop5(
+      ext.Quantizers.kmAssign(fx, cents)
         .select(col("vec_id"), col("v"), col("cid")),
-      ext.Similarity.kmProbeCells(fx.filter(col("vec_id") < 10), cents))
+      ext.Quantizers.kmProbeCells(fx.filter(col("vec_id") < 10), cents))
       .collect().map(_.toSeq).toSet
     assert(got == expected)
     assert(got.nonEmpty)
@@ -1663,9 +1663,9 @@ class ExtSpec extends AnyFunSuite {
     // never what ADC mis-ranks inside it.
     val all = ops.Subplan.once(
       ext.Similarity.emb(spark, sf).select(col("vec_id"), col("v")))
-    val exact = ext.Similarity.kmNn1(all).collect()
+    val exact = ext.Quantizers.kmNn1(all).collect()
       .map(r => (r.getAs[Long]("vec_id"), r.getAs[Long]("nn_id"))).toSet
-    val rr = ext.Similarity.ivfadcRerankNn1(all, r = 10000).collect()
+    val rr = ext.Quantizers.ivfadcRerankNn1(all, r = 10000).collect()
       .map(r => (r.getAs[Long]("vec_id"), r.getAs[Long]("nn_id"))).toSet
     assert(rr == exact)
     assert(rr.nonEmpty)
@@ -1726,7 +1726,7 @@ class ExtSpec extends AnyFunSuite {
     val e = ext.Similarity.emb(spark, sf)
     val flags = e.select(col("vec_id"))
       .unionAll(e.select((col("vec_id") + lit(1000000000L)).as("vec_id")))
-      .select(col("vec_id"), ext.Similarity.isEvalVec.as("ev"))
+      .select(col("vec_id"), ext.EmbeddingDedup.isEvalVec.as("ev"))
       .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
     val planted = e.select(col("vec_id")).collect().map(_.getLong(0)).flatMap { o =>
       val t = o + 1000000000L
@@ -2182,7 +2182,7 @@ class ExtSpec extends AnyFunSuite {
     val fx = raw.map { case (id, v) =>
       id -> v.map(e => math.floor(e * 1048576.0).toLong)
     }
-    val k = ext.Similarity.KmK
+    val k = ext.Quantizers.KmK
     val seeds = fx.keys.toSeq
       .sortBy(id => (java.lang.Long.parseLong(md5hex(s"$id:seed").take(8), 16), id))
       .take(k)
@@ -2196,7 +2196,7 @@ class ExtSpec extends AnyFunSuite {
     def assign(): Map[Long, Int] = fx.map { case (id, x) =>
       id -> (0 until k).minBy(c => (dist(x, cents(c)), c))
     }
-    for (_ <- 1 to ext.Similarity.KmIters) {
+    for (_ <- 1 to ext.Quantizers.KmIters) {
       val asg = assign()
       cents = (0 until k).map { c =>
         val members = asg.collect { case (id, `c`) => fx(id) }.toSeq
@@ -2213,7 +2213,7 @@ class ExtSpec extends AnyFunSuite {
     val fxDf = Tables(spark, sf, "embeddings")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       .select(col("vec_id"), col("v"), ext.Similarity.fixedPoint(col("v")).as("x"))
-    val gotCents = ext.Similarity.kmeansCentroids(fxDf).collect()
+    val gotCents = ext.Quantizers.kmeansCentroids(fxDf).collect()
       .map(r => r.getAs[Int]("cid") ->
         r.getAs[scala.collection.Seq[Long]]("m").toArray).toMap
     assert(gotCents.keySet == cents.keySet)
@@ -2253,7 +2253,7 @@ class ExtSpec extends AnyFunSuite {
       id -> Array.tabulate(8)(s =>
         v.slice(s * 8, s * 8 + 8).map(e => math.floor(e * 1048576.0).toLong))
     }
-    val k = ext.Similarity.PqK
+    val k = ext.Quantizers.PqK
     val seeds = subsOf.keys.toSeq
       .sortBy(id => (java.lang.Long.parseLong(md5hex(s"$id:seed").take(8), 16), id))
       .take(k)
@@ -2269,7 +2269,7 @@ class ExtSpec extends AnyFunSuite {
       id -> Array.tabulate(8)(s =>
         cents(s).keys.toSeq.sorted.minBy(c => (dist(subs(s), cents(s)(c)), c)))
     }
-    for (_ <- 1 to ext.Similarity.PqIters) {
+    for (_ <- 1 to ext.Quantizers.PqIters) {
       val codes = encode()
       cents = Array.tabulate(8) { s =>
         cents(s).map { case (c, prev) =>
@@ -2322,13 +2322,13 @@ class ExtSpec extends AnyFunSuite {
     def drawRank(id: Long): (Long, Long) =
       (java.lang.Long.parseLong(md5hex(s"$id:seed").take(8), 16), id)
     // --- coarse: the s13 training replay ---
-    val kc = ext.Similarity.KmK
+    val kc = ext.Quantizers.KmK
     var cents: Map[Int, Array[Long]] = fx.keys.toSeq.sortBy(drawRank).take(kc)
       .zipWithIndex.map { case (id, i) => i -> fx(id) }.toMap
     def assign(): Map[Long, Int] = fx.map { case (id, x) =>
       id -> (0 until kc).minBy(c => (dist(x, cents(c)), c))
     }
-    for (_ <- 1 to ext.Similarity.KmIters) {
+    for (_ <- 1 to ext.Quantizers.KmIters) {
       val asg = assign()
       cents = (0 until kc).map { c =>
         val members = asg.collect { case (id, `c`) => fx(id) }.toSeq
@@ -2347,7 +2347,7 @@ class ExtSpec extends AnyFunSuite {
       id -> Array.tabulate(8)(s =>
         Array.tabulate(8)(i => x(s * 8 + i) - m(s * 8 + i)))
     }
-    val kp = ext.Similarity.PqK
+    val kp = ext.Quantizers.PqK
     val seeds = fx.keys.toSeq.sortBy(drawRank).take(kp)
     var pq: Array[Map[Int, Array[Long]]] = Array.tabulate(8)(s =>
       seeds.zipWithIndex.map { case (id, c) => c -> rsubs(id)(s) }.toMap)
@@ -2355,7 +2355,7 @@ class ExtSpec extends AnyFunSuite {
       id -> Array.tabulate(8)(s =>
         pq(s).keys.toSeq.sorted.minBy(c => (dist(subs(s), pq(s)(c)), c)))
     }
-    for (_ <- 1 to ext.Similarity.PqIters) {
+    for (_ <- 1 to ext.Quantizers.PqIters) {
       val codes = encode()
       pq = Array.tabulate(8) { s =>
         pq(s).map { case (c, prev) =>
@@ -2780,7 +2780,7 @@ class ExtSpec extends AnyFunSuite {
         k * k * 100000000L + 1)) ++
       Seq(1L << 48, (1L << 48) - 1, (1L << 50) - 3)).distinct
     val gotS = probe.toDF("x")
-      .select(col("x"), ext.Similarity.isqrtCeil(col("x")).as("s"))
+      .select(col("x"), ext.Quantizers.isqrtCeil(col("x")).as("s"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     probe.foreach { x =>
       val want = {
@@ -2811,19 +2811,19 @@ class ExtSpec extends AnyFunSuite {
       .select(col("vec_id"), col("v").cast("array<double>").as("v"))
     val fxDf = graft.ops.Subplan.once(corpus.select(col("vec_id"), col("v"),
       ext.Similarity.fixedPoint(col("v")).as("x")))
-    val cents = ext.Similarity.kmeansCentroids(fxDf)
-    val post = ext.Similarity.kmAssign(fxDf, cents)
+    val cents = ext.Quantizers.kmeansCentroids(fxDf)
+    val post = ext.Quantizers.kmAssign(fxDf, cents)
       .select(col("vec_id"), col("v"), col("cid"))
-    val stats = ext.Similarity.rangeCellStats(post, cents)
+    val stats = ext.Quantizers.rangeCellStats(post, cents)
     val q = fxDf.filter(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("x").as("qx"))
     // r2 sized to the cluster: within-cluster d² ≈ 0.07 real ≈ 8·10¹⁰
     // lattice; inter-cluster ≈ 10 real — three orders apart.
     val r2 = 200000000000L
-    val admitted = ext.Similarity.rangeAdmitted(q, cents, stats, r2)
-    assert(admitted.count() < 10L * ext.Similarity.KmK,
+    val admitted = ext.Quantizers.rangeAdmitted(q, cents, stats, r2)
+    assert(admitted.count() < 10L * ext.Quantizers.KmK,
       "triangle bound admitted every cell on clusterable geometry")
-    val got = ext.Similarity.rangeVerify(post, admitted, r2)
+    val got = ext.Quantizers.rangeVerify(post, admitted, r2)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val fx = fxDf.collect()
       .map(r => r.getLong(0) -> r.getAs[Seq[Long]](2).toArray).toMap
@@ -2860,7 +2860,7 @@ class ExtSpec extends AnyFunSuite {
     // the SAME left-to-right double-fold cosine, the keep-farther rule.
     val fxDf = graft.ops.Subplan.once(all.select(col("vec_id"), col("v"),
       ext.Similarity.fixedPoint(col("v")).as("x")))
-    val cents = ext.Similarity.kmeansCentroids(fxDf)
+    val cents = ext.Quantizers.kmeansCentroids(fxDf)
       .collect().map(r => r.getInt(0) -> r.getAs[Seq[Long]](1).toArray)
       .sortBy(_._1).map(_._2)
     val rows = fxDf.collect().map(r => (r.getLong(0),
@@ -2911,10 +2911,10 @@ class ExtSpec extends AnyFunSuite {
       ext.Similarity.plantedTwinCorpus(
         Tables(spark, sf, "embeddings").select(col("vec_id"),
           col("embedding").cast("array<double>").as("v"))))
-    val g = ext.Similarity.knnDescentGraph(all)
+    val g = ext.KnnGraph.knnDescentGraph(all)
       .collect().groupBy(_.getLong(0))
       .map { case (v, rows) => v -> rows.map(_.getLong(1)).toList }
-    val fx = ext.Similarity.knnFx(all)
+    val fx = ext.KnnGraph.knnFx(all)
       .collect().map(r => r.getLong(0) -> r.getAs[Seq[Long]](1).toArray).toMap
     val labBase = Tables(spark, sf, "embeddings")
       .select(col("vec_id"), col("label"))
@@ -2927,7 +2927,7 @@ class ExtSpec extends AnyFunSuite {
     def filteredWalk(q: Long, b: Int, k: Int): List[(Long, Long, Int)] = {
       var frontier = List(if (q == 0L) 1L else 0L)
       var visited = Set.empty[Long]
-      for (_ <- 1 to ext.Similarity.KnnSearchHops) {
+      for (_ <- 1 to ext.KnnGraph.KnnSearchHops) {
         val cands = (frontier ++ frontier.flatMap(c => g.getOrElse(c, Nil)))
           .distinct.filter(_ != q)
         visited ++= cands
@@ -2947,14 +2947,14 @@ class ExtSpec extends AnyFunSuite {
         assert(lab(nn) == lab(q),
           s"query $q (label ${lab(q)}) answered $nn (label ${lab(nn)})")
       }
-      val want = filteredWalk(q, ext.Similarity.KnnBeamWidth,
-        ext.Similarity.KnnEfTopK)
+      val want = filteredWalk(q, ext.KnnGraph.KnnBeamWidth,
+        ext.KnnGraph.KnnEfTopK)
       assert(rows == want, s"query $q: engine $rows != JVM replay $want")
     }
     // Queries whose replay is empty must be ABSENT, not zero-row noise.
     (0L until 10L).filterNot(got.contains).foreach { q =>
-      assert(filteredWalk(q, ext.Similarity.KnnBeamWidth,
-        ext.Similarity.KnnEfTopK).isEmpty,
+      assert(filteredWalk(q, ext.KnnGraph.KnnBeamWidth,
+        ext.KnnGraph.KnnEfTopK).isEmpty,
         s"query $q missing from the answer but its replay is non-empty")
     }
   }

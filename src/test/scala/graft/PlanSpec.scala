@@ -519,7 +519,7 @@ class PlanSpec extends AnyFunSuite {
       .write.partitionBy("pt").mode("overwrite").parquet(tmp)
     val repl = Seq((1L, 3L, 5L)).toDF("v", "w", "d")
     val del = Seq(2L).toDF("vec_id")
-    val p = ext.Similarity
+    val p = ext.KnnGraph
       .knnUpsertContent(spark, tmp, Seq(0, 1), repl, Some(del))
       .queryExecution.executedPlan.toString
     assert(p.split('\n').exists(l =>
@@ -663,9 +663,9 @@ class PlanSpec extends AnyFunSuite {
     val all = ext.Similarity.plantedTwinCorpus(
       Tables(spark, sf, "embeddings").select(col("vec_id"),
         col("embedding").cast("array<double>").as("v")))
-    val fx = ext.Similarity.knnFx(all)
+    val fx = ext.KnnGraph.knnFx(all)
     val init = explainOf(
-      ext.Similarity.knnScore(ext.Similarity.knnInit(all), fx))
+      ext.KnnGraph.knnScore(ext.KnnGraph.knnInit(all), fx))
     assert(!init.contains("CartesianProduct") &&
         !init.contains("BroadcastNestedLoopJoin"),
       s"init candidates must come from keyed joins only:\n$init")
@@ -673,9 +673,9 @@ class PlanSpec extends AnyFunSuite {
       s"the ConstKey count join must be a keyed broadcast:\n$init")
     // One improvement round over an (unmaterialized) init list frame:
     // the adjacency self-join must key on the intermediate id u.
-    val round = explainOf(ext.Similarity.knnScore(
-      ext.Similarity.knnRoundCand(
-        ext.Similarity.knnScore(ext.Similarity.knnInit(all), fx)
+    val round = explainOf(ext.KnnGraph.knnScore(
+      ext.KnnGraph.knnRoundCand(
+        ext.KnnGraph.knnScore(ext.KnnGraph.knnInit(all), fx)
           .limit(1000)), fx))
     assert(!round.contains("CartesianProduct") &&
         !round.contains("BroadcastNestedLoopJoin"),
@@ -1008,20 +1008,20 @@ class PlanSpec extends AnyFunSuite {
     * state checkpointed exactly as the loop holds it between rounds. */
   private lazy val roundFrames: Seq[(String, org.apache.spark.sql.DataFrame)] = {
     import org.apache.spark.sql.functions.col
-    import ext.{Dedup, Similarity => S, Text}
+    import ext.{Dedup, KnnGraph => G, Quantizers => Q, Similarity => S, Text}
     val once = ops.Subplan.once _
     // k-NN descent (s29/s34/s37) and the walk hop (s31/s33/s36/s40/s43):
     // the walk reads the checkpointed lists as its graph frame.
     val all = once(S.emb(spark, sf).select(col("vec_id"), col("v")))
-    val fx = once(S.knnFx(all))
-    val nbr = once(S.knnTopK(S.knnScore(S.knnInit(all), fx), S.KnnK))
-    val q0 = once(S.knnQ0(fx, col("vec_id") < 10))
+    val fx = once(G.knnFx(all))
+    val nbr = once(G.knnTopK(G.knnScore(G.knnInit(all), fx), G.KnnK))
+    val q0 = once(G.knnQ0(fx, col("vec_id") < 10))
     // Lloyd rounds of kmeansCentroids and pqCodebooks: each round
     // re-assigns the corpus against the checkpointed model.
     val kx = once(all.select(col("vec_id"), col("v"), S.fixedPoint(col("v")).as("x")))
-    val cents = once(S.kmeansCentroids(kx))
-    val subs = once(S.residFrame(kx, cents).select(col("vec_id"), col("subs")))
-    val pqc = once(S.pqCodebooks(subs))
+    val cents = once(Q.kmeansCentroids(kx))
+    val subs = once(Q.residFrame(kx, cents).select(col("vec_id"), col("subs")))
+    val pqc = once(Q.pqCodebooks(subs))
     // Star contraction (d07/d08).
     val e = once(Dedup.ccCanon(
       Dedup.jaccardPairsPrefix(Dedup.shingles(spark, sf), 0.5)
@@ -1035,16 +1035,16 @@ class PlanSpec extends AnyFunSuite {
     val chars = once(Text.uniChars(wf))
     val segCounts = once(Text.uniSegCounts(wf, chars))
     Seq(
-      "knn_round" -> S.knnRound(nbr, fx, S.KnnK),
-      "walk_hop" -> S.knnHopFrontier(S.knnHopScored(q0, fx, nbr), S.KnnBeamWidth),
+      "knn_round" -> G.knnRound(nbr, fx, G.KnnK),
+      "walk_hop" -> G.knnHopFrontier(G.knnHopScored(q0, fx, nbr), G.KnnBeamWidth),
       "cc_round" -> Dedup.ccRound(e),
       "bpe_best_pair" -> Text.bpeBestPair(vocab),
       "bpe_apply_winner" -> Text.bpeApplyWinner(vocab, best.getString(0),
         best.getString(1)),
       "uni_seg_counts" -> Text.uniSegCounts(wf, chars),
       "uni_vocab_update" -> Text.uniVocabUpdate(chars, segCounts),
-      "km_lloyd_round" -> S.kmUpdate(S.kmAssign(kx, cents), cents),
-      "pq_lloyd_round" -> S.pqUpdate(S.pqEncode(subs, pqc), pqc),
+      "km_lloyd_round" -> Q.kmUpdate(Q.kmAssign(kx, cents), cents),
+      "pq_lloyd_round" -> Q.pqUpdate(Q.pqEncode(subs, pqc), pqc),
       "bpe_batch_apply" -> Text.bpeApplyBatch(vocab,
         Seq(best.getString(0) -> best.getString(1))))
   }
@@ -1122,10 +1122,6 @@ object CheckpointCensus {
   /** The Spark jobs and shuffle-map stages one evaluation ran. */
   final case class Eval(query: String, pass: Int, jobs: Int, shuffleStages: Int)
 
-  /** `Sink.write`'s read-before-overwrite guard is read once by design:
-    * it exists so the write never reads the files it replaces. */
-  val Exempt: Set[String] = Set("graft.sources.Sink.write")
-
   private val OnceFrame = "graft.ops.Subplan$.once("
 
   def run(spark: SparkSession, sf: String): (Seq[Checkpoint], Seq[Eval]) = {
@@ -1188,9 +1184,9 @@ object CheckpointCensus {
   }
 
   /** The checkpoints read fewer than twice, one line per
-    * (query, call site), exemptions left out. */
+    * (query, call site). */
   def unreused(cs: Seq[Checkpoint]): Seq[String] =
-    cs.filter(c => c.reads < 2 && !Exempt(c.site.takeWhile(_ != ' ')))
+    cs.filter(c => c.reads < 2)
       .groupBy(c => (c.query, c.site)).toSeq.sortBy(_._1).map { case ((q, s), g) =>
         s"$q at $s: ${g.size} checkpoint(s) read ${g.map(_.reads).distinct.sorted.mkString("/")} time(s)"
       }

@@ -195,8 +195,8 @@ class PropertySpec extends AnyFunSuite {
       .map { case (v, i) => (i.toLong, v) } :+
       (9999L, List(3.25, 3.25, 3.25)) // constant vector: scale = 0 path
     val df = vecs.toDF("vec_id", "v")
-    val rt = ext.Similarity.dequantize(
-      ext.Similarity.quantize(df, "v"), "v")
+    val rt = ext.ExactSearch.dequantize(
+      ext.ExactSearch.quantize(df, "v"), "v")
       .select(col("vec_id"), col("v")).collect()
       .map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
     vecs.foreach { case (id, orig) =>

@@ -14,6 +14,10 @@ class RelationalSpec extends AnyFunSuite {
   test("every declared query has an oracle or is explicitly rows-only") {
     val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(missing.isEmpty, s"oracle entries without queries: $missing")
+    // c01 is checked on its rows only; every other query needs an oracle.
+    val unchecked = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
+    assert(unchecked == Set("c01_ccd_segments"),
+      s"queries without an oracle entry: $unchecked")
   }
 
   test("all queries run and are non-empty at sf0.001") {

@@ -129,17 +129,17 @@ class SkewSpec extends AnyFunSuite {
     rows.toDF("vec_id", "v").write.mode("overwrite").parquet(tmp)
     val all = graft.ops.Subplan.once(spark.read.parquet(tmp)
       .select(col("vec_id"), col("v").cast("array<double>").as("v")))
-    val fx = graft.ops.Subplan.once(ext.Similarity.knnFx(all))
+    val fx = graft.ops.Subplan.once(ext.KnnGraph.knnFx(all))
     // In-degree skew BUILDS as descent spreads the hub (init draws
     // alone touch the 5 copies rarely) — measure the round that runs
     // on near-converged lists, the steady state a maintained graph
     // lives at.
     val nbr = graft.ops.Subplan.once(
-      ext.Similarity.knnDescentGraph(all, rounds = 3))
+      ext.KnnGraph.knnDescentGraph(all, rounds = 3))
     val maxIn = nbr.groupBy(col("w")).agg(count(lit(1)).as("ind"))
       .agg(max(col("ind"))).head().getLong(0)
     assert(maxIn >= n / 10, s"fixture not hub-skewed: max in-degree $maxIn")
-    val capped = ext.Similarity.knnRoundCand(nbr).count()
+    val capped = ext.KnnGraph.knnRoundCand(nbr).count()
     // The uncapped counterfactual: the same symmetrize/self-join with
     // EVERY reverse edge kept.
     val adjU = nbr.select(col("v").as("u"), col("w").as("p"))
@@ -186,13 +186,13 @@ class SkewSpec extends AnyFunSuite {
       .select(col("vec_id"), col("v").cast("array<double>").as("v")))
     val baseCorpus = graft.ops.Subplan.once(all.filter(col("vec_id") < nBase))
     val batchIds = all.filter(col("vec_id") >= nBase).select(col("vec_id"))
-    val g = graft.ops.Subplan.once(ext.Similarity.knnDescentGraph(baseCorpus))
+    val g = graft.ops.Subplan.once(ext.KnnGraph.knnDescentGraph(baseCorpus))
     // Seed volume: band collisions of a one-neighborhood batch are
     // quadratic in the BATCH (all copies share all 4 band signatures)
     // plus batch×(hub occupants + their k-lists) — never in the
     // corpus. Pin the batch-quadratic bound with headroom for the
     // draw/graph-expansion terms.
-    val seed = ext.Similarity.knnBatchSeed(g, all, batchIds).count()
+    val seed = ext.KnnGraph.knnBatchSeed(g, all, batchIds).count()
     val hubOcc = nBatch + nBase / 100 // band-bucket occupants near the hub
     assert(seed <= 16L * hubOcc * hubOcc,
       s"hub-batch seed $seed exceeds the batch-quadratic band bound")
@@ -201,16 +201,16 @@ class SkewSpec extends AnyFunSuite {
     // round's candidates stay within |T|·(2k)² and well under a full
     // rebuild's N·(2k)² round (the d02/d12 margin discipline).
     val delta = graft.ops.Subplan.once(
-      ext.Similarity.knnInsertDelta(g, all, batchIds))
+      ext.KnnGraph.knnInsertDelta(g, all, batchIds))
     val touched = delta.select(col("v")).distinct()
     val tCnt = touched.count()
-    val k = ext.Similarity.KnnK
-    val cand = ext.Similarity.knnRoundCand(delta, k,
+    val k = ext.KnnGraph.KnnK
+    val cand = ext.KnnGraph.knnRoundCand(delta, k,
       Some(broadcast(touched))).count()
     assert(cand <= tCnt * (2L * k) * (2L * k),
       s"restricted round candidates $cand exceed |T|·(2k)² = " +
         s"${tCnt * 4L * k * k}")
-    val fullRound = ext.Similarity.knnRoundCand(
+    val fullRound = ext.KnnGraph.knnRoundCand(
       g.unionByName(delta).select(col("v"), col("w"), col("d"))).count()
     assert(cand * 2 < fullRound,
       s"restricted round $cand not under the full-rebuild round $fullRound")
@@ -220,7 +220,7 @@ class SkewSpec extends AnyFunSuite {
     // parallel (the layout's point; an id-adversarial batch would
     // serialize the write into one partition but never change the
     // fold's bounds).
-    val parts = ext.Similarity.KnnGraphParts
+    val parts = ext.KnnGraph.KnnGraphParts
     val ptHist = touched
       .select(pmod(col("v"), lit(parts.toLong)).cast("int").as("pt"))
       .groupBy(col("pt")).agg(count(lit(1)).as("n"))
@@ -236,12 +236,12 @@ class SkewSpec extends AnyFunSuite {
     // candidates bounds the heal's blast radius. The candidate pool
     // stays ≤ |touched|·k own edges + |touched|·k·k inherited —
     // linear in the touched set, never pairwise in the corpus.
-    val grown = graft.ops.Subplan.once(ext.Similarity.knnTopK(
+    val grown = graft.ops.Subplan.once(ext.KnnGraph.knnTopK(
       g.unionByName(delta).select(col("v"), col("w"), col("d")), k))
-    val fx = graft.ops.Subplan.once(ext.Similarity.knnFx(all))
+    val fx = graft.ops.Subplan.once(ext.KnnGraph.knnFx(all))
     val hubIds = all.filter(col("vec_id") >= nBase ||
       col("vec_id") % 100 === 0).select(col("vec_id"))
-    val healed = ext.Similarity.knnDeleteHeal(grown, fx, hubIds)
+    val healed = ext.KnnGraph.knnDeleteHeal(grown, fx, hubIds)
     val healTouched = healed.select(col("v")).distinct().count()
     val healRows = healed.count()
     assert(healRows <= healTouched * k,

@@ -165,6 +165,34 @@ class SourcesSpec extends AnyFunSuite {
       Set(1, 2, 3))
   }
 
+  test("a partitioned upsert that reads its own partition runs no checkpoint") {
+    // A dynamic partition overwrite replaces the touched partitions only
+    // at job commit, after its tasks have read the stored rows.
+    import spark.implicits._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val dir = java.nio.file.Files.createTempDirectory("graft_self_upsert").toString
+    Sink.write(Seq((1, 0, "a"), (2, 1, "b")).toDF("k", "p", "v"), dir,
+      Seq("k"), Seq("p"))
+    val merged = spark.read.parquet(dir).filter(col("p") === 0)
+      .unionByName(Seq((3, 0, "c")).toDF("k", "p", "v"))
+    val checkpoints = new java.util.concurrent.atomic.AtomicInteger
+    val counter = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.stageInfos.exists(_.details.contains("graft.ops.Subplan$.once(")))
+          checkpoints.incrementAndGet()
+    }
+    org.apache.spark.ListenerDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(counter)
+    try {
+      Sink.write(merged, dir, Seq("k"), Seq("p"))
+      org.apache.spark.ListenerDrain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(counter)
+    assert(checkpoints.get == 0, s"the upsert ran ${checkpoints.get} checkpoint job(s)")
+    assert(spark.read.parquet(dir).collect()
+      .map(r => (r.getAs[Int]("k"), r.getAs[Int]("p"), r.getAs[String]("v"))).toSet ==
+      Set((1, 0, "a"), (2, 1, "b"), (3, 0, "c")))
+  }
+
   test("keyed read restricts the scan to requested ids") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_sink").toString

@@ -359,7 +359,7 @@ class StreamingSpec extends AnyFunSuite {
     // cross-trigger merge path (a stored multi-member cluster
     // absorbing a batch vector) genuinely runs, exactly as in the
     // registered d15 scenario.
-    val corpus = ext.Similarity.d15Corpus(spark, sf)
+    val corpus = ext.EmbeddingDedup.d15Corpus(spark, sf)
     val base = corpus.select(col("vec_id"),
       timestamp_seconds(lit(1700000000L) + col("vec_id") % lit(1000000000L))
         .as("ts"),
@@ -371,7 +371,7 @@ class StreamingSpec extends AnyFunSuite {
           _: Long) => cm.fold(b))
       .start()
     try {
-      Seq(!ext.Similarity.d15IsBatch, ext.Similarity.d15IsBatch).foreach { half =>
+      Seq(!ext.EmbeddingDedup.d15IsBatch, ext.EmbeddingDedup.d15IsBatch).foreach { half =>
         base.filter(half).write.mode("append").parquet(srcDir)
         q.processAllAvailable()
       }
@@ -380,7 +380,7 @@ class StreamingSpec extends AnyFunSuite {
       .collect().map(r => (r.getAs[Long]("vec_id"), r.getAs[Long]("cluster_id")))
       .toSet
     val want = ext.Dedup.connectedComponents(
-        ext.Similarity.signNearDupPairs(
+        ext.EmbeddingDedup.signNearDupPairs(
             graft.ops.Subplan.once(corpus))
           .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b")))
       .collect().map(r => (r.getAs[Long]("u"), r.getAs[Long]("lbl"))).toSet
@@ -473,7 +473,7 @@ class StreamingSpec extends AnyFunSuite {
     val fxAll = graft.ops.Subplan.once(ext.Similarity.emb(spark, sf)
       .select(col("vec_id"), col("v"),
         ext.Similarity.fixedPoint(col("v")).as("x")))
-    val cents = graft.ops.Subplan.once(ext.Similarity.kmeansCentroids(
+    val cents = graft.ops.Subplan.once(ext.Quantizers.kmeansCentroids(
       fxAll.filter(!ext.Similarity.annBatchVec)))
     // The bootstrap trained EXACTLY the stored model (exact-integer
     // Lloyd is row-order-free, so the parquet round-trip changes
@@ -492,10 +492,10 @@ class StreamingSpec extends AnyFunSuite {
       .map(r => (r.getAs[Long]("qid"), r.getAs[Long]("nn_id"),
         r.getAs[Double]("cos_sim")))
       .toSet
-    val want = ext.Similarity.kmProbedTop5(
-        ext.Similarity.kmAssign(fxAll, cents)
+    val want = ext.Quantizers.kmProbedTop5(
+        ext.Quantizers.kmAssign(fxAll, cents)
           .select(col("vec_id"), col("v"), col("cid")),
-        ext.Similarity.kmProbeCells(fxAll.filter(col("vec_id") < 10), cents))
+        ext.Quantizers.kmProbeCells(fxAll.filter(col("vec_id") < 10), cents))
       .collect()
       .map(r => (r.getAs[Long]("qid"), r.getAs[Long]("nn_id"),
         r.getAs[Double]("cos_sim")))
@@ -533,11 +533,11 @@ class StreamingSpec extends AnyFunSuite {
         qsR.select(col("vec_id"), col("v")),
         fxAll.select(col("vec_id"), col("v")))
       .select(col("vec_id").as("qid"), col("nn_id").as("nn_exact"))
-    val wantRec = ext.Similarity.recallFlags(exactR,
-        ext.Similarity.kmProbedTop5(
-          ext.Similarity.kmAssign(fxAll, cents)
+    val wantRec = ext.RecallProbes.recallFlags(exactR,
+        ext.Quantizers.kmProbedTop5(
+          ext.Quantizers.kmAssign(fxAll, cents)
             .select(col("vec_id"), col("v"), col("cid")),
-          ext.Similarity.kmProbeCells(qsR, cents)))
+          ext.Quantizers.kmProbeCells(qsR, cents)))
       .collect().map(_.toSeq).toSet
     assert(wantRec.nonEmpty)
     assert(gotRec == wantRec,
@@ -552,11 +552,11 @@ class StreamingSpec extends AnyFunSuite {
     val gotDel = cm.probe(ext.Similarity.emb(spark, sf)
         .filter(col("vec_id") < 10).select(col("vec_id"), col("v")))
       .get.collect().map(_.toSeq).toSet
-    val wantDel = ext.Similarity.kmProbedTop5(
-        ext.Similarity.kmAssign(fxAll, cents)
+    val wantDel = ext.Quantizers.kmProbedTop5(
+        ext.Quantizers.kmAssign(fxAll, cents)
           .filter(!ext.Similarity.annDelVec)
           .select(col("vec_id"), col("v"), col("cid")),
-        ext.Similarity.kmProbeCells(fxAll.filter(col("vec_id") < 10), cents))
+        ext.Quantizers.kmProbeCells(fxAll.filter(col("vec_id") < 10), cents))
       .collect().map(_.toSeq).toSet
     assert(wantDel.nonEmpty)
     assert(gotDel == wantDel,
@@ -599,8 +599,8 @@ class StreamingSpec extends AnyFunSuite {
         .filter(col("vec_id") < 10).select(col("vec_id"), col("v")))
       .getOrElse(fail("no index after replay"))
       .collect().map(_.toSeq).toSet
-    val want = ext.Similarity.pqAdcTop5(
-        ext.Similarity.ivfadcScored(spark, sf,
+    val want = ext.Quantizers.pqAdcTop5(
+        ext.Quantizers.ivfadcScored(spark, sf,
           Some(!ext.Similarity.annBatchVec)))
       .collect().map(_.toSeq).toSet
     assert(want.nonEmpty)
@@ -620,19 +620,19 @@ class StreamingSpec extends AnyFunSuite {
     val fxAllD = graft.ops.Subplan.once(ext.Similarity.emb(spark, sf)
       .select(col("vec_id"), col("v"),
         ext.Similarity.fixedPoint(col("v")).as("x")))
-    val centsD = ext.Similarity.kmeansCentroids(
+    val centsD = ext.Quantizers.kmeansCentroids(
       fxAllD.filter(!ext.Similarity.annBatchVec))
     val rfxsD = graft.ops.Subplan.once(
-      ext.Similarity.residFrame(fxAllD, centsD))
-    val pqcD = ext.Similarity.pqCodebooks(
+      ext.Quantizers.residFrame(fxAllD, centsD))
+    val pqcD = ext.Quantizers.pqCodebooks(
       rfxsD.filter(!ext.Similarity.annBatchVec)
         .select(col("vec_id"), col("subs")))
-    val codesD = ext.Similarity.pqEncode(rfxsD, pqcD)
+    val codesD = ext.Quantizers.pqEncode(rfxsD, pqcD)
       .select(col("vec_id"), col("cid"), col("codes"))
     val gotCDrift = cm.driftStats(!ext.Similarity.annBatchVec)
       .getOrElse(fail("no drift metric after replay"))
       .collect().map(_.toSeq).toSet
-    val wantCDrift = ext.Similarity.codeDriftStats(codesD, pqcD,
+    val wantCDrift = ext.Quantizers.codeDriftStats(codesD, pqcD,
         !ext.Similarity.annBatchVec)
       .collect().map(_.toSeq).toSet
     assert(wantCDrift.nonEmpty)
@@ -653,10 +653,10 @@ class StreamingSpec extends AnyFunSuite {
         qsC.select(col("vec_id"), col("v")),
         fxAllD.select(col("vec_id"), col("v")))
       .select(col("vec_id").as("qid"), col("nn_id").as("nn_exact"))
-    val wantRecC = ext.Similarity.recallFlags(exactC,
-        ext.Similarity.exactRerankTailOver(
+    val wantRecC = ext.RecallProbes.recallFlags(exactC,
+        ext.Quantizers.exactRerankTailOver(
           fxAllD.select(col("vec_id"), col("v")),
-          ext.Similarity.adcScored(codesD, qsC, centsD, pqcD),
+          ext.Quantizers.adcScored(codesD, qsC, centsD, pqcD),
           drawC))
       .collect().map(_.toSeq).toSet
     assert(wantRecC.nonEmpty)
@@ -672,8 +672,8 @@ class StreamingSpec extends AnyFunSuite {
     val gotDel = cm.probe(ext.Similarity.emb(spark, sf)
         .filter(col("vec_id") < 10).select(col("vec_id"), col("v")))
       .get.collect().map(_.toSeq).toSet
-    val wantDel = ext.Similarity.pqAdcTop5(
-        ext.Similarity.ivfadcScored(spark, sf,
+    val wantDel = ext.Quantizers.pqAdcTop5(
+        ext.Quantizers.ivfadcScored(spark, sf,
           Some(!ext.Similarity.annBatchVec))
           .filter(!ext.Similarity.annDelVecOn(col("nn_id"))))
       .collect().map(_.toSeq).toSet
@@ -726,8 +726,8 @@ class StreamingSpec extends AnyFunSuite {
         s"extra=${(gotTouched -- s34).take(3)}")
     // The untouched remainder is the bootstrap generation verbatim —
     // the whole maintained graph is pinned, not just the delta.
-    val baseRanked = ext.Similarity.knnRanked(
-        ext.Similarity.knnDescentGraph(graft.ops.Subplan.once(
+    val baseRanked = ext.KnnGraph.knnRanked(
+        ext.KnnGraph.knnDescentGraph(graft.ops.Subplan.once(
           planted.filter(!ext.Similarity.annBatchVec))))
       .collect().map(r =>
         (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3)))
@@ -752,17 +752,17 @@ class StreamingSpec extends AnyFunSuite {
           org.apache.spark.sql.types.LongType),
         org.apache.spark.sql.types.StructField("d",
           org.apache.spark.sql.types.LongType))))
-    val fxG = graft.ops.Subplan.once(ext.Similarity.knnFx(
+    val fxG = graft.ops.Subplan.once(ext.KnnGraph.knnFx(
       graft.ops.Subplan.once(planted)))
     val drawG = ext.Similarity.recallDraw(fxG.count())
-    val (_, visG) = ext.Similarity.knnBeamWalkFull(
-      ext.Similarity.knnQ0(fxG, drawG),
-      fxG, gBatch, ext.Similarity.KnnBeamWidth)
+    val (_, visG) = ext.KnnGraph.knnBeamWalkFull(
+      ext.KnnGraph.knnQ0(fxG, drawG),
+      fxG, gBatch, ext.KnnGraph.KnnBeamWidth)
     val exactG = ext.Similarity.exactNn1SqBetween(
         fxG.filter(drawG), fxG)
       .select(col("vec_id").as("qid"), col("nn_id").as("nn_exact"))
-    val wantRecG = ext.Similarity.recallFlags(exactG,
-        ext.Similarity.knnEfRank(visG))
+    val wantRecG = ext.RecallProbes.recallFlags(exactG,
+        ext.KnnGraph.knnEfRank(visG))
       .collect().map(_.toSeq).toSet
     assert(wantRecG.nonEmpty)
     assert(gotRecG == wantRecG,
@@ -1096,8 +1096,8 @@ class StreamingSpec extends AnyFunSuite {
     val al = e.unionAll(e.select((col("vec_id") + lit(1000000000L)).as("vec_id"),
       transform(col("v"), (x, i) =>
         when(i === 0, x * lit(1.01)).otherwise(x)).as("v")))
-    val evalVecs = al.filter(ext.Similarity.isEvalVec)
-    al.filter(!ext.Similarity.isEvalVec)
+    val evalVecs = al.filter(ext.EmbeddingDedup.isEvalVec)
+    al.filter(!ext.EmbeddingDedup.isEvalVec)
       .select(col("vec_id"),
         timestamp_seconds(lit(1700000000L) + col("vec_id") % lit(1000000000L)).as("ts"),
         col("v"))

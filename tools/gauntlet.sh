@@ -7,7 +7,14 @@ set -euo pipefail
 cd "$(dirname "$0")/.."
 
 echo "== compile + test =="
-sbt -batch test 2>&1 | grep -E 'Tests:|error\]' | tail -3
+testlog=$(mktemp)
+status=0
+sbt -batch test >"$testlog" 2>&1 || status=$?
+grep -E 'Tests:|error\]' "$testlog" | tail -3 || true
+if [ "$status" -ne 0 ]; then
+  grep -F '*** FAILED ***' "$testlog" >&2 || true
+  echo "test: sbt exited $status (full log: $testlog)" >&2; exit 1
+fi
 
 echo "== verify + DuckDB oracle (sf0.01) =="
 out=$(mktemp -d)
